@@ -36,14 +36,7 @@ object PipelineQueries {
     * cut=identity variant PlanSpec pins) this is the identity. */
   private[graft] def broadcastIfSmall(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
-    // `graft.pipeline.assemblyBroadcast=false` is a PROBE/PLAN-DUMP-ONLY
-    // A/B arm: the pre-r18 stat-blind assembly (SMJ over checkpoint
-    // leaves), kept so the broadcast can be measured/dumped against it on
-    // one binary; values identical either way (join keys and rows don't
-    // move). Verify/bench never set it.
-    if (df.sparkSession.conf.getOption("graft.pipeline.assemblyBroadcast")
-      .contains("false")) df
-    else df.queryExecution.analyzed match {
+    df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         val raw = df.sparkSession.conf
           .get("spark.sql.autoBroadcastJoinThreshold", "10MB").trim
@@ -413,20 +406,10 @@ object PipelineQueries {
         // materialized (an untracked localCheckpoint would leave its
         // blocks to GC/ContextCleaner, which measurably starved the
         // bench's later queries and streaming phase, r17).
-        //
-        // `graft.pipeline.stageCuts=false` is a PROBE-ONLY A/B arm
-        // (ScaleProbe SPARK_GRAFT_CONF, r18): it reverts to the one-plan
-        // composition so the cut discipline can be measured against it
-        // beyond sf0.1. Values are identical either way (PlanSpec pins
-        // staged == composed row equality); verify/bench never set it.
-        if (s.conf.getOption("graft.pipeline.stageCuts").contains("false"))
-          incrementalBatchPlan(s, d).localCheckpoint()
-        else {
-          val scope = graft.ops.CacheScope()
-          try incrementalBatchPlan(s, d, scope, cut = scope.checkpoint)
-            .localCheckpoint()
-          finally scope.release()
-        }
+        val scope = graft.ops.CacheScope()
+        try incrementalBatchPlan(s, d, scope, cut = scope.checkpoint)
+          .localCheckpoint()
+        finally scope.release()
       },
       Some {
         val normSql = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
@@ -548,15 +531,11 @@ object PipelineQueries {
     QueryDef(
       "p05_full_ingest_batch",
       (s, d) => {
-        // same probe-only stage-cut A/B gate as p04 (see above)
-        if (s.conf.getOption("graft.pipeline.stageCuts").contains("false"))
-          fullIngestPlan(s, d).localCheckpoint()
-        else {
-          val scope = graft.ops.CacheScope()
-          try fullIngestPlan(s, d, scope, cut = scope.checkpoint)
-            .localCheckpoint()
-          finally scope.release()
-        }
+        // stage cuts released with the scope, as in p04 (see above)
+        val scope = graft.ops.CacheScope()
+        try fullIngestPlan(s, d, scope, cut = scope.checkpoint)
+          .localCheckpoint()
+        finally scope.release()
       },
       Some {
         val normSql = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"

@@ -4,9 +4,11 @@ package graft
   * deliverables (`plans/r<n>/<query>_{before,after}.txt`) so plan claims
   * in OPTIMIZATION_r*.md are checkable without running Spark.
   *
-  * `runMain graft.PlanDump <outDir> <suffix> name1,name2,…`
+  * `runMain graft.PlanDump <outDir> <suffix> name1,name2,…|all`
   *
-  * Names resolve against the query registry; the special names
+  * Names resolve against the query registry (`all` = every registered
+  * query, in registry order — diff two builds' dumps to check that a
+  * change leaves every plan alone); the special names
   * `p04_composed`/`p04_staged`/`p05_composed`/`p05_staged` dump the
   * pipeline plans at their two materialization strategies (identity cut
   * vs localCheckpoint cut — the staged dump shows the stage boundaries
@@ -17,13 +19,6 @@ object PlanDump {
     val Array(outDir, suffix, names) = args.take(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.get()
-    // same generic conf injection as ScaleProbe, so a "before" plan can
-    // be dumped from the probe-only A/B arms on one binary (r18), e.g.
-    // SPARK_GRAFT_CONF=graft.pipeline.assemblyBroadcast=false
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").foreach { kv =>
-      val Array(ck, cv) = kv.split("=", 2)
-      spark.conf.set(ck, cv)
-    })
     new java.io.File(outDir).mkdirs()
     def write(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       // capture the formatted explain string (Dataset.explain prints)
@@ -33,7 +28,9 @@ object PlanDump {
         java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), s)
       println(s"[plandump] wrote $outDir/${name}_$suffix.txt")
     }
-    names.split(",").foreach {
+    val list =
+      if (names == "all") Queries.all.map(_.name) else names.split(",").toSeq
+    list.foreach {
       case n @ "p04_composed" =>
         write(n, PipelineQueries.incrementalBatchPlan(spark, sfDir))
       case n @ "p04_staged" =>

@@ -117,13 +117,6 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val k = args.headOption.map(_.toInt).getOrElse(10)
     val spark = GraftSession.get()
-    // generic conf injection for same-code A/B probes, e.g.
-    // SPARK_GRAFT_CONF=graft.dedup.packedPayload=false (the d02 payload
-    // toggle) — applied before any plan is built
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").foreach { kv =>
-      val Array(ck, cv) = kv.split("=", 2)
-      spark.conf.set(ck, cv)
-    })
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dir = s"/tmp/graft_scale_x$k"
     // build under a scratch name and move PER TABLE when complete — with

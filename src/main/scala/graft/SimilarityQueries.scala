@@ -691,18 +691,11 @@ object SimilarityQueries {
         // them so one sweep's stage tails back-fill the other's
         // (Concurrently, guide §2.6); values are unchanged, both sweeps
         // are deterministic in isolation
-        // `graft.concurrently=off` is a PROBE-ONLY A/B arm (ScaleProbe
-        // SPARK_GRAFT_CONF, r18): run the two sweeps sequentially so the
-        // overlap's win can be re-measured at any scale on one binary —
-        // both arms are deterministic and value-identical (KMeansSpec)
-        def trainC = graft.ops.KMeans.trainCentroids(
-          embs, "vec_id", "embedding", nlist = 16, iters = 1)
-        def trainP = graft.ops.KMeans.trainPqCodebooks(
-          embs, "vec_id", "embedding", subs = 8, codes = 16, iters = 1)
-        val (cents, books) =
-          if (s.conf.getOption("graft.concurrently").contains("off"))
-            (trainC, trainP)
-          else graft.ops.Concurrently.both(trainC, trainP)
+        val (cents, books) = graft.ops.Concurrently.both(
+          graft.ops.KMeans.trainCentroids(
+            embs, "vec_id", "embedding", nlist = 16, iters = 1),
+          graft.ops.KMeans.trainPqCodebooks(
+            embs, "vec_id", "embedding", subs = 8, codes = 16, iters = 1))
         // the trained search persists its assignment frame internally
         // (two consumers); scope it, materialize the bounded result and
         // release exactly that frame (the d13 discipline)

@@ -82,13 +82,6 @@ object SkewBench {
     // provide. 256 gives every hot group its own task (AQE coalesces the
     // small ones back), so maxtask ≈ the largest single group's work.
     spark.conf.set("spark.sql.shuffle.partitions", "256")
-    // attribution experiments: disable AQE's skew-join splitting to see
-    // what the uncapped plans cost WITHOUT the runtime rescue (which can
-    // split a skewed shuffled-hash partition when the exchange is not
-    // reused, duplicating the ENTIRE build side per chunk — a rescue
-    // whose per-task memory still grows with the hot group)
-    if (sys.env.get("SPARK_GRAFT_SKEWJOIN_OFF").contains("1"))
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
     val dir = "/tmp/graft_skewbench"
     val hotDir = s"$dir/hotcell"
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

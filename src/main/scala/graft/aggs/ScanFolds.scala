@@ -92,8 +92,8 @@ final class AffineState(var a: Double, var b: Double)
   * state `s_in` entered the chunk. Affine maps compose associatively, so
   * per-chunk finals can carry across chunks in chunk order — no global
   * single-partition scan. Float re-association makes this algebraically
-  * (not bit-) equal to the sequential fold, which is why the chunked
-  * SMOOTH path is opt-in (graft.raql.chunkedSmooth). */
+  * (not bit-) equal to the sequential fold (equal to 1e-9 relative,
+  * RaqlSpec). */
 case class ExpSmoothAffineScan(
     child: Expression,
     alpha: Double,
@@ -474,8 +474,8 @@ final class HoltAffineState(var a11: Double, var a12: Double, var b1: Double,
   * column evolve by the SAME scalar recurrence as [[DampedHoltScan]]
   * (x present only in the constant column), which keeps the float path as
   * close to the sequential fold as re-association allows; like the
-  * chunked SMOOTH this is algebraically (not bit-) equal, hence opt-in
-  * (graft.raql.chunkedHolt). Nulls are the identity map. */
+  * chunked SMOOTH this is algebraically (not bit-) equal. Nulls are the
+  * identity map. */
 case class DampedHoltAffineScan(
     child: Expression,
     alpha: Double,
@@ -654,8 +654,7 @@ final class HoltWinterAffineState(var m: Array[Double], var cnt: Int)
   * phase (a pure index permutation, float-exact). Per-row work is
   * O(p·(3+p)) column updates — 3 touched components × (3+p) columns.
   * Nulls are the identity map. Like the other chunked scans this is
-  * algebraically (not bit-) equal to the sequential fold
-  * (graft.raql.chunkedHoltWinter=false restores it).
+  * algebraically (not bit-) equal to the sequential fold.
   *
   * Returns struct(m: array<double> row-major, cnt: int). eval() clones
   * the buffer — in a running window the same mutable state keeps folding

@@ -139,38 +139,15 @@ object Dedup {
     * bucket exchange at ~90 GB with the full arrays riding every row;
     * the prefix form carries (bands−1)/2 · ceil(bits/8) ≈ 10 bytes on
     * average instead of 64+ (array data + UnsafeArrayData framing). */
-  /** The r15 payload work (packed band prefixes + raw-text verify) as a
-    * measurable A/B toggle: `spark.conf graft.dedup.packedPayload=false`
-    * reverts the SELF-JOIN path (minhashCandidates + verifyJaccard — the
-    * d02 shape the payload ablation measured) to the pre-r15 byte shapes:
-    * full 8-byte-per-band bucket arrays through the LSH exchange
-    * (FirstSharedBand tie-break) and shingle ARRAYS through the verify
-    * exchange. Pair sets and jaccard values are IDENTICAL either way
-    * (spec'd); only shuffle bytes vs recompute CPU move — the dial the
-    * per-scale A/B artifacts turn. Default on (packed): the packed form
-    * is what cleared the ×10000 box-disk wall. The LEDGER path
-    * ([[minhashLedger]]/[[incrementalMinhashDedup]]) is NOT toggled — its
-    * on-disk schema is a production contract. */
-  private[ops] def packedPayload: Boolean =
-    !org.apache.spark.sql.SparkSession.active.conf
-      .getOption("graft.dedup.packedPayload").contains("false")
-
   private def lshBucketFrame(docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, k: Int, bands: Int, p: Int, bits: Int,
-      packed: Boolean = true): DataFrame = {
+      shingleN: Int, k: Int, bands: Int, p: Int, bits: Int): DataFrame = {
     val r = k / bands
     val bpb = (bits + 7) / 8
-    val banded = spreadInput(docs, p) // single-file local input ⇒ force map parallelism
+    spreadInput(docs, p) // single-file local input ⇒ force map parallelism
       .select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
       .select(col("id"),
         minhashSignature(wordShingles(col("toks"), shingleN), k).as("sig"))
       .select(col("id"), lshBuckets(col("sig"), bands, r, bits).as("bkts"))
-    if (!packed)
-      // A/B fallback (see [[packedPayload]]): the full bucket array rides
-      // every exploded row as `pfx`
-      banded.select(col("id"), col("bkts").as("pfx"), posexplode(col("bkts")))
-        .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket"))
-    else banded
       // bkts is referenced twice (pack + explode) so CollapseProject
       // cannot inline the signature kernel into both — it evaluates once
       .select(col("id"), packBandBits(col("bkts"), bpb).as("pk"),
@@ -181,16 +158,6 @@ object Dedup {
       .select(col("id"), substring(col("pk"), lit(1), col("band") * bpb).as("pfx"),
         col("band"), col("bucket"))
   }
-
-  /** First-shared-band pair emission guard for either payload form: in
-    * packed form `pfx` holds the EARLIER bands' packed buckets (no shared
-    * aligned slice ⇔ this band is the pair's first shared one); in the
-    * A/B fallback it holds the full bucket array and the tie-break is the
-    * explicit first-shared-band index. */
-  private def firstSharedHere(aPfx: Column, bPfx: Column, band: Column,
-      bpb: Int, packed: Boolean): Column =
-    if (packed) !sharesBandSlice(aPfx, bPfx, bpb)
-    else band === firstSharedBand(aPfx, bPfx)
 
   private[ops] def packBandBits(bkts: Column, bytesPer: Int): Column =
     org.apache.spark.sql.GraftShims.column(graft.functions.PackBandBits(
@@ -228,13 +195,12 @@ object Dedup {
       shingleN: Int = 3, k: Int = 12, bands: Int = 6,
       bucketCap: Int = 4096): DataFrame = {
     val bits = autoBucketBits(exactRowCount(docs).getOrElse(docs.count()))
-    val packed = packedPayload
     // a (band, bucket) group holds ≤ one row per doc, so the doc-table
     // row bound (parquet footers) is a group bound: when it proves no
     // group can exceed the cap, blockKeyed skips its detection pass
     val buckets = blockKeyed(
       lshBucketFrame(docs, idCol, textCol, shingleN, k, bands, par(docs),
-        bits, packed),
+        bits),
       Seq("band", "bucket"), par(docs), bucketCap,
       maxGroupBound = leafRowBound(docs)).hint("shuffle_hash")
     // a pair sharing m bands survives ONLY in its first shared band's
@@ -250,8 +216,7 @@ object Dedup {
           col("a.kx") === col("b.kx") && col("a.ky") === col("b.ky") &&
           col("a.id") < col("b.id") &&
           (col("a.blk") =!= col("b.blk") || col("a.kx") === col("a.ky")) &&
-          firstSharedHere(col("a.pfx"), col("b.pfx"), col("a.band"),
-            (bits + 7) / 8, packed))
+          !sharesBandSlice(col("a.pfx"), col("b.pfx"), (bits + 7) / 8))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
   }
 
@@ -565,13 +530,8 @@ object Dedup {
     // surviving pair row (a few µs of codegen kernel — the d08/t08
     // recompute-don't-materialize lesson), exact string semantics
     // unchanged.
-    // A/B fallback (see [[packedPayload]]): carry precomputed shingle
-    // ARRAYS through the exchange instead of raw text — the pre-r15 form
-    val packed = packedPayload
     val txt = spreadInput(base, par(docs))
-      .select(col(idCol).as("id"),
-        if (packed) col(textCol).as("txt")
-        else wordShingles(tokens(col(textCol)), shingleN).as("txt"))
+      .select(col(idCol).as("id"), col(textCol).as("txt"))
       .repartition(par(docs), col("id"))
     // pin shuffle-hash via a hint on the PAIR side, for two reasons:
     // (1) no broadcast — a broadcast text side would recompute per task;
@@ -593,10 +553,8 @@ object Dedup {
       // (intersect + union), so CollapseProject cannot inline the shingle
       // kernel into both — it evaluates once per pair row per side
       .select(col("id_a"), col("id_b"),
-        (if (packed) wordShingles(tokens(col("sa.txt")), shingleN)
-         else col("sa.txt")).as("sh_a"),
-        (if (packed) wordShingles(tokens(col("sb.txt")), shingleN)
-         else col("sb.txt")).as("sh_b"))
+        wordShingles(tokens(col("sa.txt")), shingleN).as("sh_a"),
+        wordShingles(tokens(col("sb.txt")), shingleN).as("sh_b"))
       .select(col("id_a"), col("id_b"),
         (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
           size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"))

@@ -72,6 +72,8 @@ object GraftPar {
     val derived = Dedup.leafScanBytes(df)
       .filter(b => b > 0 && b < Long.MaxValue / 4) // stats-less ⇒ unknown
       .map(b => b / bytesPerTask).getOrElse(0L)
-    math.max(math.max(cores, fanout), math.min(derived, 1 << 20)).toInt
+    // one cap for both widths, applied before the Int narrowing: an
+    // explicit fanout of 2^32 would otherwise wrap to width 0
+    math.max(cores.toLong, math.min(math.max(fanout, derived), 1L << 20)).toInt
   }
 }

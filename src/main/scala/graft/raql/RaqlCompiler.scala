@@ -960,9 +960,9 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
 
     // incremental O(1)-state scan folded once per row by WindowExec (the
     // collect_list-prefix + HOF fold re-ran the whole prefix per row).
-    // Chunked mode (DEFAULT; graft.raql.chunkedSmooth=false restores the
-    // single sequential scan) distributes the ungrouped scan: the prefix
-    // fold is affine in the incoming state (s -> a*s + b, see
+    // Ungrouped, the scan is chunked (grouped, it stays the single
+    // sequential scan per group): the prefix fold is affine in the
+    // incoming state (s -> a*s + b, see
     // ExpSmoothAffineScan), so chunks compute (a, b) plus a
     // first-value-seeded local scan, per-chunk finals fold into an
     // incoming-state carry over the tiny totals frame, and each row emits
@@ -975,10 +975,8 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     // silently serialize at 100 TB.
     def smoothOf(x: Expr, alpha: Double): Column = {
       import graft.functions.{GraftFunctions => GF}
-      val chunked = ctx.parts.isEmpty &&
-        !spark.conf.getOption("graft.raql.chunkedSmooth").contains("false")
       val c = goM(x)
-      if (!chunked) GF.expSmoothScan(c, alpha).over(prefix)
+      if (ctx.parts.nonEmpty) GF.expSmoothScan(c, alpha).over(prefix)
       else {
         val ckName = withChunkCol(ctx)
         val vName = s"_graft_cv${ctx.df.columns.length}"
@@ -1012,8 +1010,8 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
       }
     }
 
-    /** DAMPED HOLT, chunked by DEFAULT (graft.raql.chunkedHolt=false
-      * restores the single sequential scan): the Holt recurrence is
+    /** DAMPED HOLT, chunked when ungrouped (grouped, the single sequential
+      * scan per group): the Holt recurrence is
       * affine in (level, trend) (see DampedHoltAffineScan), so chunks
       * compute a 2×3 map, the incoming (level, trend) per chunk folds
       * over the tiny totals frame from the reference's (0, 0) start, and
@@ -1024,10 +1022,8 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
       * [[smoothOf]]. */
     def dampedHoltOf(x: Expr, a: Double, b: Double, f: Double): Column = {
       import graft.functions.{GraftFunctions => GF}
-      val chunked = ctx.parts.isEmpty &&
-        !spark.conf.getOption("graft.raql.chunkedHolt").contains("false")
       val c = goM(x)
-      if (!chunked) GF.dampedHoltScan(c, a, b, f).over(prefix)
+      if (ctx.parts.nonEmpty) GF.dampedHoltScan(c, a, b, f).over(prefix)
       else {
         val ckName = withChunkCol(ctx)
         val vName = s"_graft_cv${ctx.df.columns.length}"
@@ -1062,8 +1058,8 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
       }
     }
 
-    /** HOLT WINTERS, chunked by DEFAULT (graft.raql.chunkedHoltWinter=
-      * false restores the single sequential scan) — the seasonal member
+    /** HOLT WINTERS, chunked when ungrouped (grouped, the single
+      * sequential scan per group) — the seasonal member
       * of the scan family, closing the last ungrouped sequential scan:
       * the recurrence is affine in the FULL state [level, trend, ring]
       * ([[graft.aggs.HoltWinterAffineScan]] — a (2+p)×(3+p) map per
@@ -1077,10 +1073,8 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     def holtWinterOf(x: Expr, a: Double, b: Double, g: Double, p: Int,
         f: Double): Column = {
       import graft.functions.{GraftFunctions => GF}
-      val chunked = ctx.parts.isEmpty &&
-        !spark.conf.getOption("graft.raql.chunkedHoltWinter").contains("false")
       val c = goM(x)
-      if (!chunked) GF.holtWinterScan(c, a, b, g, p, f).over(prefix)
+      if (ctx.parts.nonEmpty) GF.holtWinterScan(c, a, b, g, p, f).over(prefix)
       else {
         val n = 2 + p  // state components: level, trend, ring
         val wd = 3 + p // map columns: state + constant

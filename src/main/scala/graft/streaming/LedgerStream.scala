@@ -201,41 +201,23 @@ object LedgerStream {
     //
     // ONE assignment pass per trigger (r18, guide §2.4): the home-cell
     // frame is computed and persisted here once and shared by (a) the
-    // classifier's probe/in-batch sides and (b) the ledger append below,
-    // which used to re-run the full assignWithFrame pipeline (norm +
-    // two-level argmax + broadcast join + id-keyed exchange) over the
-    // novel rows. Restricting the persisted assignment to the novel ids
-    // is value-identical to assigning the novel rows directly — the
+    // classifier's probe/in-batch sides and (b) the ledger append below.
+    // Restricting the persisted assignment to the novel ids is
+    // value-identical to assigning the novel rows directly — the
     // assignment is per-row deterministic in (vector, cents) alone
     // (LedgerStreamSpec's replay/restart pins re-certify the bytes).
-    // `graft.ledger.fuseAssign=false` is a PROBE-ONLY A/B arm (ScaleProbe
-    // SPARK_GRAFT_CONF): the pre-r18 two-pass trigger, kept so the fusion
-    // can be measured against it on one binary; values are identical
-    // either way (LedgerStreamSpec re-certifies the written bytes)
-    val fuse = !spark.conf.getOption("graft.ledger.fuseAssign")
-      .contains("false")
     val scope = graft.ops.CacheScope()
     try {
-      val assigned =
-        if (fuse) Some(scope.persist(
-          KMeans.assignWithFrame(batch0, idCol, vecCol, cents, nlist)))
-        else None
+      val assigned = scope.persist(
+        KMeans.assignWithFrame(batch0, idCol, vecCol, cents, nlist))
       Dedup.incrementalSemanticDedup(ledger, batch0, idCol, vecCol,
           cents, nlist, minCos, nprobe, cellCap, scope,
-          assigned = assigned)
+          assigned = Some(assigned))
         .write.mode("overwrite").parquet(part(outDir, batchId))
       val out = spark.read.parquet(part(outDir, batchId))
       val novelIds = out.filter(col("status") === "novel").select(col("id"))
-      assigned match {
-        case Some(a) =>
-          a.join(novelIds, Seq("id"), "left_semi")
-            .write.mode("overwrite").parquet(part(ledgerDir, batchId))
-        case None =>
-          val novel = batch0.join(novelIds.select(col("id").as(idCol)),
-            Seq(idCol), "left_semi")
-          KMeans.assignWithFrame(novel, idCol, vecCol, cents, nlist)
-            .write.mode("overwrite").parquet(part(ledgerDir, batchId))
-      }
+      assigned.join(novelIds, Seq("id"), "left_semi")
+        .write.mode("overwrite").parquet(part(ledgerDir, batchId))
       out
     } finally scope.release()
   }

@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryListener}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** RaQL `NOTIFY "name" WITH params` → alerter semantics, Spark-first.
   *
@@ -582,20 +582,5 @@ object Notify {
       val at = (kept ++ rescued).map(_.time).filter(_ > 0).maxOption
         .getOrElse(alerter.nowTime())
       alerter.flush(at)
-  }
-
-  /** `LISTEN FOR INSTRUMENTATION FROM *` — the reference republishes
-    * per-worker runtime stats as a stream (`src/runtime_stats.type`).
-    * Spark equivalent: a StreamingQueryListener capturing per-batch
-    * progress (rows/sec, batch duration, state size). */
-  final class InstrumentationListener extends StreamingQueryListener {
-    val progress = new ConcurrentLinkedQueue[(String, Double, Long)]()
-    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-      progress.add((e.progress.name,
-        e.progress.processedRowsPerSecond,
-        e.progress.numInputRows))
-    def snapshot: Seq[(String, Double, Long)] = progress.asScala.toSeq
   }
 }

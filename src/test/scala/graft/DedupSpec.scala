@@ -303,21 +303,37 @@ class DedupSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  test("packedPayload=false (the r14-shape A/B toggle) is value-identical on the d02 path") {
-    // the toggle moves BYTES (full bucket arrays + shingle-array verify
-    // exchange vs packed prefixes + raw-text recompute), never values:
-    // candidate pair set and verified jaccards must match exactly
+  test("minhashCandidates emits exactly the banded-LSH pair set, each pair once") {
+    // test-local reference from the public signature kernels: every
+    // (band, bucket) collision with id_a < id_b, deduplicated — no packed
+    // prefixes, no first-shared-band tie-break, so a tie-break that drops
+    // a pair or emits it from two bands shows up here
     val docs = Tables.documents(spark, sf)
-    def run(): Set[(Long, Long, Double)] =
-      Dedup.verifyJaccard(
-          Dedup.minhashCandidates(docs, "doc_id", "text"),
-          docs, "doc_id", "text")
-        .as[(Long, Long, Double)].collect().toSet
-    val packed = run()
-    spark.conf.set("graft.dedup.packedPayload", "false")
-    val unpacked = try run()
-      finally spark.conf.unset("graft.dedup.packedPayload")
-    assert(packed.nonEmpty && packed == unpacked)
+    val bits = Dedup.autoBucketBits(docs.count())
+    val bkts = docs
+      .select(col("doc_id").as("id"), posexplode(lshBuckets(
+        minhashSignature(wordShingles(tokens(col("text")), 3), 12), 6, 2, bits)))
+      .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket"))
+    val want = bkts.as("a")
+      .join(bkts.as("b"), col("a.band") === col("b.band") &&
+        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
+      .select(col("a.id"), col("b.id")).distinct()
+      .as[(Long, Long)].collect().toSet
+    val got = Dedup.minhashCandidates(docs, "doc_id", "text")
+      .as[(Long, Long)].collect().toSeq
+    assert(want.nonEmpty, "test data should contain LSH collisions")
+    assert(got.size == got.toSet.size, "a pair was emitted from more than one band")
+    assert(got.toSet == want)
+  }
+
+  test("spark.graft.fanout past Int range is capped, not wrapped (GraftPar)") {
+    // 2^32 narrowed to Int is 0: the cap must apply before the narrowing
+    val docs = Tables.documents(spark, sf)
+    val cores = spark.sparkContext.defaultParallelism
+    spark.conf.set(graft.ops.GraftPar.Key, "4294967296")
+    val w = try graft.ops.GraftPar.of(docs)
+      finally spark.conf.unset(graft.ops.GraftPar.Key)
+    assert(w >= cores && w <= (1 << 20), s"fan-out width $w")
   }
 
   test("cross-corpus near-dup join finds planted contamination") {

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -227,5 +229,51 @@ class KMeansSpec extends AnyFunSuite {
         throw new IllegalArgumentException("a"), { Thread.sleep(50); 7 })
     }
     assert(ea.getMessage == "a")
+
+    // a fails while b is INSIDE a long Spark job: b's jobs are cancelled
+    // through its per-call tag, not drained, and none outlives the call
+    val sc = spark.sparkContext
+    val bJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val bStarted = new java.util.concurrent.CountDownLatch(1)
+    val bTags = new java.util.concurrent.atomic.AtomicReference[Set[String]](Set.empty)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.description")))
+            .contains("concurrently-b")) {
+          bJobs.add(js.jobId)
+          bStarted.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val t0 = System.nanoTime()
+      val ea2 = intercept[IllegalArgumentException] {
+        graft.ops.Concurrently.both(
+          {
+            assert(bStarted.await(60, java.util.concurrent.TimeUnit.SECONDS),
+              "b's job never started")
+            throw new IllegalArgumentException("a2")
+          },
+          {
+            bTags.set(sc.getJobTags())
+            sc.setJobDescription("concurrently-b")
+            sc.setInterruptOnCancel(true)
+            // 90 s unless cancelled
+            sc.parallelize(1 to 2, 2).map { x => Thread.sleep(90000L); x }
+              .count()
+          })
+      }
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(ea2.getMessage == "a2")
+      assert(secs < 45, f"both drained b for $secs%.1f s instead of cancelling it")
+      org.apache.spark.sql.GraftShims.drainListenerBus(sc)
+      val active = sc.statusTracker.getActiveJobIds().toSet
+      assert(!bJobs.asScala.exists(active.contains),
+        s"b's jobs still active after both returned: ${bJobs.asScala} / $active")
+      assert(bTags.get.exists(_.startsWith("graft-concurrently-")),
+        s"b ran without a per-call job tag: ${bTags.get}")
+    } finally sc.removeSparkListener(listener)
   }
 }

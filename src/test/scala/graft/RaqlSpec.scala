@@ -18,6 +18,20 @@ class RaqlSpec extends AnyFunSuite {
 
   private val funcDir = "/root/reference/tests/func"
 
+  /** The single sequential scan an ungrouped chunked carry must match:
+    * `scan` over one prefix window in arrival order — the path grouped
+    * running scans still compile to. (i, value) rows ordered by i. */
+  private def sequentialScan(base: org.apache.spark.sql.DataFrame,
+      scan: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
+      : Array[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
+    base.withColumn("_seq", monotonically_increasing_id())
+      .select(col("i"), scan(col("n")).over(Window.orderBy("_seq")
+        .rowsBetween(Window.unboundedPreceding, 0)))
+      .orderBy("i").collect()
+  }
+
   private def load(names: String*): RaqlCompiler = {
     val sources = names.map { n =>
       n -> Files.readString(Paths.get(s"$funcDir/$n.ramen"))
@@ -903,26 +917,21 @@ class RaqlSpec extends AnyFunSuite {
       .withColumn("n", when(col("i") % 13 === 0, lit(null))
         .otherwise(col("i").cast("double")))
       .repartition(8)
-    spark.conf.set("graft.raql.chunkedSmooth", "true")
-    val got = try {
-      val c = RaqlCompiler.fromSources(spark, funcDir, src)
-        .fold(e => fail(s"parse: $e"), identity)
-      c.registerTable("tbl", base)
-      val df = c.compile("run/f")
-      // full-input windows are chunk-partitioned; a partition-less window
-      // may only exist over the per-chunk totals frame (Aggregate subtree)
-      val wins = df.queryExecution.optimizedPlan.collect { case w: LWin => w }
-      assert(wins.nonEmpty)
-      wins.filter(_.partitionSpec.isEmpty).foreach { w =>
-        assert(w.collectFirst { case a: LAgg => a }.nonEmpty,
-          "partition-less window over the full input")
-      }
-      df.orderBy("i").collect()
-    } finally spark.conf.unset("graft.raql.chunkedSmooth")
-    val c2 = RaqlCompiler.fromSources(spark, funcDir, src)
+    val c = RaqlCompiler.fromSources(spark, funcDir, src)
       .fold(e => fail(s"parse: $e"), identity)
-    c2.registerTable("tbl", base)
-    val want = c2.compile("run/f").orderBy("i").collect()
+    c.registerTable("tbl", base)
+    val df = c.compile("run/f")
+    // full-input windows are chunk-partitioned; a partition-less window
+    // may only exist over the per-chunk totals frame (Aggregate subtree)
+    val wins = df.queryExecution.optimizedPlan.collect { case w: LWin => w }
+    assert(wins.nonEmpty)
+    wins.filter(_.partitionSpec.isEmpty).foreach { w =>
+      assert(w.collectFirst { case a: LAgg => a }.nonEmpty,
+        "partition-less window over the full input")
+    }
+    val got = df.orderBy("i").collect()
+    val want = sequentialScan(base,
+      graft.functions.GraftFunctions.expSmoothScan(_, 0.3))
     assert(got.length == 100000)
     got.zip(want).foreach { case (g, w) =>
       assert(g.isNullAt(1) == w.isNullAt(1), s"null mismatch at ${g.get(0)}")
@@ -944,26 +953,21 @@ class RaqlSpec extends AnyFunSuite {
       .withColumn("n", when(col("i") % 13 === 0, lit(null))
         .otherwise((col("i") % 97).cast("double")))
       .repartition(8)
-    spark.conf.set("graft.raql.chunkedHolt", "true")
-    val got = try {
-      val c = RaqlCompiler.fromSources(spark, funcDir, src)
-        .fold(e => fail(s"parse: $e"), identity)
-      c.registerTable("tbl", base)
-      val df = c.compile("run/f")
-      // full-input windows are chunk-partitioned; a partition-less window
-      // may only exist over the per-chunk totals frame (Aggregate subtree)
-      val wins = df.queryExecution.optimizedPlan.collect { case w: LWin => w }
-      assert(wins.nonEmpty)
-      wins.filter(_.partitionSpec.isEmpty).foreach { w =>
-        assert(w.collectFirst { case a: LAgg => a }.nonEmpty,
-          "partition-less window over the full input")
-      }
-      df.orderBy("i").collect()
-    } finally spark.conf.unset("graft.raql.chunkedHolt")
-    val c2 = RaqlCompiler.fromSources(spark, funcDir, src)
+    val c = RaqlCompiler.fromSources(spark, funcDir, src)
       .fold(e => fail(s"parse: $e"), identity)
-    c2.registerTable("tbl", base)
-    val want = c2.compile("run/f").orderBy("i").collect()
+    c.registerTable("tbl", base)
+    val df = c.compile("run/f")
+    // full-input windows are chunk-partitioned; a partition-less window
+    // may only exist over the per-chunk totals frame (Aggregate subtree)
+    val wins = df.queryExecution.optimizedPlan.collect { case w: LWin => w }
+    assert(wins.nonEmpty)
+    wins.filter(_.partitionSpec.isEmpty).foreach { w =>
+      assert(w.collectFirst { case a: LAgg => a }.nonEmpty,
+        "partition-less window over the full input")
+    }
+    val got = df.orderBy("i").collect()
+    val want = sequentialScan(base,
+      graft.functions.GraftFunctions.dampedHoltScan(_, 0.4, 0.2, 0.9))
     assert(got.length == 100000)
     got.zip(want).foreach { case (g, w) =>
       assert(g.isNullAt(1) == w.isNullAt(1), s"null mismatch at ${g.get(0)}")
@@ -1004,13 +1008,8 @@ class RaqlSpec extends AnyFunSuite {
           "partition-less window over the full input")
       }
       val got = df.orderBy("i").collect()
-      spark.conf.set("graft.raql.chunkedHoltWinter", "false")
-      val want = try {
-        val c2 = RaqlCompiler.fromSources(spark, funcDir, src)
-          .fold(e => fail(s"parse: $e"), identity)
-        c2.registerTable("tbl", base)
-        c2.compile("run/f").orderBy("i").collect()
-      } finally spark.conf.unset("graft.raql.chunkedHoltWinter")
+      val want = sequentialScan(base,
+        graft.functions.GraftFunctions.holtWinterScan(_, 0.5, 0.3, 0.2, p, 0.9))
       assert(got.length == 50000)
       got.zip(want).foreach { case (g, w) =>
         assert(g.isNullAt(1) == w.isNullAt(1), s"p=$p null mismatch at ${g.get(0)}")

@@ -1446,6 +1446,28 @@ class StreamingSpec extends AnyFunSuite {
     assert(seen.head.getDouble(seen.head.fieldIndex("tot_cpu")) > 0.0)
   }
 
+  test("Instrumentation tot_cpu counts triggerExecution once, not every phase in it") {
+    import org.apache.spark.sql.streaming.ProgressFixture
+    // an UNREGISTERED listener: only the two events below reach it
+    val instr = new graft.streaming.Instrumentation(spark)
+    // triggerExecution spans the other phases: 0.4 s, not their 0.78 s sum
+    instr.onQueryProgress(ProgressFixture.event("instr_cpu",
+      "2026-01-01T00:00:01.000Z", Map("triggerExecution" -> 400L,
+        "addBatch" -> 250L, "getBatch" -> 10L, "latestOffset" -> 20L,
+        "queryPlanning" -> 30L, "walCommit" -> 40L, "commitOffsets" -> 30L)))
+    // without triggerExecution, the phases reported are summed
+    instr.onQueryProgress(ProgressFixture.event("instr_cpu",
+      "2026-01-01T00:00:02.000Z", Map("addBatch" -> 100L, "walCommit" -> 20L)))
+    val q = instr.df.writeStream.format("memory").queryName("instr_cpu_out")
+      .outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+    val cpu = spark.table("instr_cpu_out").orderBy("stats_time")
+      .select("tot_cpu").as[Double].collect().toSeq
+    assert(cpu.length == 2)
+    assert(math.abs(cpu(0) - 0.4) < 1e-9, s"tot_cpu after one trigger: $cpu")
+    assert(math.abs(cpu(1) - 0.52) < 1e-9, s"cumulative tot_cpu: $cpu")
+  }
+
   test("streaming PREPROCESS WITH: a gzip landing mid-query appears next trigger") {
     import org.apache.spark.sql.types._
     val dir = java.nio.file.Files.createTempDirectory("graft_prestream").toFile
