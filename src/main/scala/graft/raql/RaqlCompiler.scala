@@ -220,8 +220,11 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     * so at scale the only honest options are a bounded rewrite (LATEST n,
     * PAST … SAMPLE SIZE n, TUMBLING) or accepting the single task. This is
     * the typed diagnostic for the one WindowExec class that chunk-carries
-    * cannot fix. */
+    * cannot fix. Grouped windows partition by the key, and a single-
+    * partition input is one task whatever the plan: neither is a funnel. */
   private def sequentialWindow(op: String): Unit = {
+    val ctx = runCtx.get
+    if (ctx.parts.nonEmpty || ctx.singlePartition) return
     val msg = s"$op in ungrouped running mode keeps the whole window " +
       "contents as per-row state on ONE WindowExec task; bound it " +
       "(LATEST n / PAST … SAMPLE SIZE n / TUMBLING) for scale"
@@ -331,7 +334,18 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
         * out) stay keyed by the group (tumbling.ramen's check_1). */
       var baseParts: Seq[Column] = Nil,
       /** `EVENT STARTS AT e` — overrides the start/ts column convention. */
-      val eventTime: Option[Column] = None) {
+      val eventTime: Option[Column] = None,
+      /** The input provably plans ONE partition ([[RaqlCompiler.singlePartition]],
+        * decided once per compile): it is one chunk, every carry would be
+        * empty, and an ungrouped window over it is no funnel. */
+      val singlePartition: Boolean = false) {
+    /** Global (arrival-order) state takes the chunk-carry plan: the input
+      * may span several partitions and the graft.raql.chunkedRunning=false
+      * oracle is not selected. Otherwise it is one window over the input. */
+    val carries: Boolean = !singlePartition &&
+      !spark.conf.getOption("graft.raql.chunkedRunning").contains("false")
+    /** Ungrouped running state distributes through chunk carries. */
+    def chunked: Boolean = carries && parts.isEmpty
     /** Memoized TOP broadcast joins, keyed by (key expression, n) → the
       * joined rank column's name: membership, rank and list forms of the
       * same TOP share one join, and nothing runs eagerly on the driver. */
@@ -760,9 +774,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
       * rings (last-k / first-k / top-n are all chunk-decomposable). */
     def chunkedRing(c: Column, ringCol: Column => Column,
         trim: Column => Column): Column = {
-      val chunked = ctx.parts.isEmpty &&
-        !spark.conf.getOption("graft.raql.chunkedRunning").contains("false")
-      if (!chunked) trim(ringCol(c).over(prefix))
+      if (!ctx.chunked) trim(ringCol(c).over(prefix))
       else {
         val ckName = withChunkCol(ctx)
         val vName = s"_graft_cv${ctx.df.columns.length}"
@@ -883,12 +895,11 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     def pastSlidingArray(v: Column, d: Double): Column = {
       val dUs = math.max((d * 1e6).toLong, 1L)
       val tUs = (time * 1e6).cast("long")
-      val chunked = ctx.parts.isEmpty &&
-        !spark.conf.getOption("graft.raql.chunkedRunning").contains("false") &&
+      val chunked = ctx.chunked &&
         org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(
           dtypeOf(struct(v.as("v"))))
       if (!chunked) {
-        if (ctx.parts.isEmpty) sequentialWindow("PAST … SLIDING array")
+        sequentialWindow("PAST … SLIDING array")
         val frame = orderedWindow(tUs).rangeBetween(-(dUs - 1), 0)
         collect_list(v).over(frame)
       } else {
@@ -960,9 +971,10 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
 
     // incremental O(1)-state scan folded once per row by WindowExec (the
     // collect_list-prefix + HOF fold re-ran the whole prefix per row).
-    // Ungrouped, the scan is chunked (grouped, it stays the single
-    // sequential scan per group): the prefix fold is affine in the
-    // incoming state (s -> a*s + b, see
+    // Ungrouped over a multi-partition input, the scan is chunked
+    // (grouped, it stays the single sequential scan per group; over one
+    // partition, the single scan — see RunCtx.chunked): the prefix fold
+    // is affine in the incoming state (s -> a*s + b, see
     // ExpSmoothAffineScan), so chunks compute (a, b) plus a
     // first-value-seeded local scan, per-chunk finals fold into an
     // incoming-state carry over the tiny totals frame, and each row emits
@@ -976,7 +988,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     def smoothOf(x: Expr, alpha: Double): Column = {
       import graft.functions.{GraftFunctions => GF}
       val c = goM(x)
-      if (ctx.parts.nonEmpty) GF.expSmoothScan(c, alpha).over(prefix)
+      if (!ctx.chunked) GF.expSmoothScan(c, alpha).over(prefix)
       else {
         val ckName = withChunkCol(ctx)
         val vName = s"_graft_cv${ctx.df.columns.length}"
@@ -1023,7 +1035,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     def dampedHoltOf(x: Expr, a: Double, b: Double, f: Double): Column = {
       import graft.functions.{GraftFunctions => GF}
       val c = goM(x)
-      if (ctx.parts.nonEmpty) GF.dampedHoltScan(c, a, b, f).over(prefix)
+      if (!ctx.chunked) GF.dampedHoltScan(c, a, b, f).over(prefix)
       else {
         val ckName = withChunkCol(ctx)
         val vName = s"_graft_cv${ctx.df.columns.length}"
@@ -1074,7 +1086,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
         f: Double): Column = {
       import graft.functions.{GraftFunctions => GF}
       val c = goM(x)
-      if (ctx.parts.nonEmpty) GF.holtWinterScan(c, a, b, g, p, f).over(prefix)
+      if (!ctx.chunked) GF.holtWinterScan(c, a, b, g, p, f).over(prefix)
       else {
         val n = 2 + p  // state components: level, trend, ring
         val wd = 3 + p // map columns: state + constant
@@ -1276,10 +1288,8 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
         val n = modNum(mods, "n").getOrElse(1.0).toInt
         // the row index is a running count — integer-exact under the
         // chunked prefix scan, so the sampler distributes by default
-        val chunkedRn = ctx.parts.isEmpty &&
-          !spark.conf.getOption("graft.raql.chunkedRunning").contains("false")
         val rn =
-          if (chunkedRn) chunkedPrefix(lit(1L), count, sum,
+          if (ctx.chunked) chunkedPrefix(lit(1L), count, sum,
             (cr, w) => coalesce(cr, lit(0L)) + w)
           else row_number().over(W).cast("long")
         when((rn - 1) % n === 0, go(x))
@@ -1301,9 +1311,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
         import graft.functions.{GraftFunctions => GF}
         val acc = evalNum(acceptable, params)
         val mx = evalNum(maximum, params)
-        val chunked = ctx.parts.isEmpty &&
-          !spark.conf.getOption("graft.raql.chunkedRunning").contains("false")
-        if (!chunked) GF.hysteresisScan(goM(x), acc, mx).over(prefix)
+        if (!ctx.chunked) GF.hysteresisScan(goM(x), acc, mx).over(prefix)
         else {
           val ckName = withChunkCol(ctx)
           val vName = s"_graft_cv${ctx.df.columns.length}"
@@ -1956,6 +1964,39 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     if (keepNulls) when(size(filter(c, x => x.isNull)) === 0, v) else v
   }
 
+  /** The frame an ungrouped running compile numbers. A proven single-
+    * partition input is one chunk: every carry below would be empty, so
+    * the compile takes the one-window plan, and the input is pinned to one
+    * declared partition (`coalesce(1)` over one partition is a narrow
+    * no-op) so that window's all-tuples requirement plans no exchange. Any
+    * other input as is. */
+  private def runInput(df: DataFrame, single: Boolean): DataFrame =
+    if (single && df.queryExecution.sparkPlan.outputPartitioning.numPartitions != 1)
+      df.coalesce(1)
+    else df
+
+  /** Add the chunk-id column and FREEZE the (row, seq, chunk) assignment by
+    * persisting: every chunked aggregate evaluates its per-chunk totals in
+    * a SECOND subtree (broadcast build side), and anything downstream of
+    * monotonically_increasing_id may legitimately reorder between two
+    * executions — order-dependent carries (first/last by seq, novelty
+    * flags) would then disagree with the main branch. One materialization
+    * of the running-mode input (MEMORY_AND_DISK, spilled not recomputed) is
+    * the price — the reference materializes its stream in ringbufs too.
+    * Only inputs that may span several partitions get here
+    * ([[RunCtx.carries]]): on one partition the chunk id is constant and
+    * the base is never persisted. */
+  private def withChunkCol(ctx: RunCtx): String = {
+    assert(!ctx.singlePartition, "a single-partition input has no chunk carries")
+    val ckName = "_graft_chunk"
+    if (!ctx.df.columns.contains(ckName)) {
+      ctx.df = ctx.df.withColumn(ckName, shiftright(col(ctx.seqName), 33))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      ctx.frozen = ctx.df
+    }
+    ckName
+  }
+
   /** Two-pass distributed prefix aggregate for UNGROUPED running mode.
     *
     * The naive plan (`agg OVER (ORDER BY seq)`) funnels the whole input
@@ -1967,27 +2008,13 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     *   pass 2: per-chunk totals (a ~numPartitions-row frame) get a running
     *           carry over chunk order and broadcast-join back.
     * Total order (chunk-major, seq-minor) is exactly the seq order, so the
-    * values are bit-identical to the single-window plan. Disable with
-    * spark.conf graft.raql.chunkedRunning=false.
+    * values are bit-identical to the single-window plan. The chunk id is
+    * the input PARTITION index, so the plan applies only to an input that
+    * may span several partitions: over one provable partition the compile
+    * keeps the single window, which is then one task by construction (see
+    * [[runInput]]). spark.conf graft.raql.chunkedRunning=false forces the
+    * single window everywhere (the differential oracle).
     */
-  /** Add the chunk-id column and FREEZE the (row, seq, chunk) assignment by
-    * persisting: every chunked aggregate evaluates its per-chunk totals in
-    * a SECOND subtree (broadcast build side), and anything downstream of
-    * monotonically_increasing_id may legitimately reorder between two
-    * executions — order-dependent carries (first/last by seq, novelty
-    * flags) would then disagree with the main branch. One materialization
-    * of the running-mode input (MEMORY_AND_DISK, spilled not recomputed) is
-    * the price — the reference materializes its stream in ringbufs too. */
-  private def withChunkCol(ctx: RunCtx): String = {
-    val ckName = "_graft_chunk"
-    if (!ctx.df.columns.contains(ckName)) {
-      ctx.df = ctx.df.withColumn(ckName, shiftright(col(ctx.seqName), 33))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ctx.frozen = ctx.df
-    }
-    ckName
-  }
-
   private def chunkedPrefix(c: Column,
       build: Column => Column,
       carryBuild: Column => Column,
@@ -2116,8 +2143,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     * window otherwise. */
   private def lagDistributed(vC: Column, k: Int, W: WindowSpec): Column = {
     val chunked = k >= 1 && // lag 0 = identity; TopNScan needs k ≥ 1
-      runCtx.exists(_.parts.isEmpty) &&
-      !spark.conf.getOption("graft.raql.chunkedRunning").contains("false") &&
+      runCtx.exists(_.chunked) &&
       org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(
         dtypeOf(vC))
     if (chunked) chunkedLag(vC, k) else lag(vC, k).over(W)
@@ -2129,8 +2155,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     * opt-out and value orderability gate the distribution. */
   private def globalLag1(vC: Column): Column = {
     val ctx = runCtx.get
-    val chunked =
-      !spark.conf.getOption("graft.raql.chunkedRunning").contains("false") &&
+    val chunked = ctx.carries &&
       org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(
         dtypeOf(vC))
     if (chunked) chunkedLag(vC, 1)
@@ -2143,8 +2168,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     * the group key. */
   private def runningAgg(a: AggCall, c: Column): Column = {
     val prefix = seqWindow().rowsBetween(Window.unboundedPreceding, 0)
-    val chunked = runCtx.exists(_.parts.isEmpty) &&
-      !spark.conf.getOption("graft.raql.chunkedRunning").contains("false")
+    val chunked = runCtx.exists(_.chunked)
     // null-safe combines: a null carry (chunk 0 / all-null prefix) or null
     // within-part must not poison the other side
     def comb2(op: (Column, Column) => Column)(cr: Column, w: Column): Column =
@@ -2235,7 +2259,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
         // via chunkedGroupPrefix above; a non-orderable element type
         // (map) cannot ride the seq-sorted carry structs, so it keeps the
         // single-task window and the diagnostic
-        if (runCtx.get.parts.isEmpty) sequentialWindow("running GROUP")
+        sequentialWindow("running GROUP")
         collect_list(c).over(prefix)
       case "distinct" => // novelty flag: first sighting of this value
         row_number().over(partedWindow(c)) === 1
@@ -3649,6 +3673,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
         //     inner evaluates as running state per row and the outer
         //     aggregates the running values.
         var src2 = src
+        lazy val srcSingle = RaqlCompiler.singlePartition(src)
         // the aggregate-of-array unification (`sum group x`) and the
         // count-distinct idiom are NOT nested state — only rewrite when the
         // effective operand still contains an aggregate after unwrapping
@@ -3663,8 +3688,9 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
           case a @ AggCall(fn, op, mods, extra) if hasAgg(effectiveOperand(a)) =>
             val seqName = "_graft_seq"
             if (!src2.columns.contains(seqName))
-              src2 = src2.withColumn(seqName, monotonically_increasing_id())
-            runCtx = Some(new RunCtx(src2, seqName))
+              src2 = runInput(src2, srcSingle)
+                .withColumn(seqName, monotonically_increasing_id())
+            runCtx = Some(new RunCtx(src2, seqName, singlePartition = srcSingle))
             val c =
               try compileExpr(op, params, splitCols)
               finally { src2 = runCtx.get.df; runCtx = None }
@@ -3809,11 +3835,14 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
   private def compileRunning(base: DataFrame, fields: Seq[SelectField],
       agg: Aggregate, params: Map[String, Expr]): DataFrame = {
     val seqName = "_graft_seq"
-    var df = base.withColumn(seqName, monotonically_increasing_id())
+    val single = RaqlCompiler.singlePartition(base)
+    // grouped windows exchange by key and keep the input as is
+    var df = runInput(base, single && agg.groupBy.isEmpty)
+      .withColumn(seqName, monotonically_increasing_id())
     // GROUP BY keys become the partition columns of every running window
     // (compiled against the bare input — group keys are stateless exprs)
     val (parts, evTime) = {
-      runCtx = Some(new RunCtx(df, seqName))
+      runCtx = Some(new RunCtx(df, seqName, singlePartition = single))
       try (
         agg.groupBy.map(k => compileExpr(k, params)),
         // EVENT STARTS AT over input columns; out-field designations (the
@@ -3823,7 +3852,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
             .filter(c => scala.util.Try(df.select(c)).isSuccess))
       ) finally runCtx = None
     }
-    runCtx = Some(new RunCtx(df, seqName, parts, parts, evTime))
+    runCtx = Some(new RunCtx(df, seqName, parts, parts, evTime, single))
     try {
       agg.where.foreach { w =>
         val c = compileExpr(w, params)
@@ -3845,9 +3874,8 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
       // cross-chunk lookback (assuming chunks ≥ K rows — partitions of a
       // big input dwarf any lag/moveavg horizon).
       val ghostK: Option[Int] =
-        if (runCtx.get.parts.nonEmpty || agg.commitCond.nonEmpty ||
-            agg.every.nonEmpty || agg.where.exists(hasAgg) ||
-            spark.conf.getOption("graft.raql.chunkedRunning").contains("false"))
+        if (!runCtx.get.chunked || agg.commitCond.nonEmpty ||
+            agg.every.nonEmpty || agg.where.exists(hasAgg))
           None
         else boundedLookback(fields.map(_.expr), params)
       ghostK.foreach { k =>
@@ -3870,10 +3898,9 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
       // within its own bucket plus the previous one's ghosts. Classic
       // double-bucket sliding windows; exact, 2× row volume.
       val ghostD: Option[Double] =
-        if (ghostK.isDefined || runCtx.get.parts.nonEmpty ||
+        if (ghostK.isDefined || !runCtx.get.chunked ||
             agg.commitCond.nonEmpty || agg.every.nonEmpty ||
-            agg.where.exists(hasAgg) ||
-            spark.conf.getOption("graft.raql.chunkedRunning").contains("false"))
+            agg.where.exists(hasAgg))
           None
         else timeWindowOnly(fields.map(_.expr), params)
       ghostD.foreach { d =>
@@ -4140,6 +4167,30 @@ object RaqlCompiler {
   /** Largest global-map state shipped as a literal expression in non-SELECT
     * read contexts; the SELECT path joins and has no cap. */
   val GlobalMapLiteralCap = 100000
+
+  /** Does `df` provably plan ONE partition? Read from the planner's
+    * physical plan (no job runs): a narrow Project/Filter view over a node
+    * that declares one output partition (`coalesce(1)` — every RaQL CSV,
+    * RowBinary and EVERY source) or over a file scan that plans one
+    * FilePartition. Anything else — an exchange to several partitions, a
+    * union, a join, an RDD scan, a streaming source, a plan that fails to
+    * plan — is not proven and answers false. */
+  def singlePartition(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.PlanExpression
+    import org.apache.spark.sql.execution._
+    def one(p: SparkPlan): Boolean = p match {
+      case _ if p.outputPartitioning.numPartitions == 1 => true
+      case s: FileSourceScanExec =>
+        // a subquery partition filter (DPP) would have to RUN to list files
+        !s.partitionFilters.exists(_.exists(_.isInstanceOf[PlanExpression[_]])) &&
+          s.inputRDD.getNumPartitions == 1
+      case u @ (_: ProjectExec | _: FilterExec) => one(u.children.head)
+      case _ => false
+    }
+    !df.isStreaming &&
+      (try one(df.queryExecution.sparkPlan)
+      catch { case scala.util.control.NonFatal(_) => false })
+  }
 
   /** Parse + register a set of .ramen sources rooted at `baseDir`; keys are
     * paths without the .ramen suffix (`fixtures/cars`). */

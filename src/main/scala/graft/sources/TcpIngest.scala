@@ -34,8 +34,9 @@ final class TcpIngest(spark: SparkSession, port: Int) {
   // reader thread at enqueue — the reference's sink stamps on ingest
   // (`RamenGraphiteSink.ml`), and a line queued between micro-batch
   // triggers must not inherit the (later) task execution time, which the
-  // 2-field graphite form would then use as the metric's START
-  private val mem = MemoryStream[(String, String, Double)]
+  // 2-field graphite form would then use as the metric's START. One
+  // partition per trigger, lines in arrival order (see UdpIngest)
+  private val mem = MemoryStream[(String, String, Double)](1)
   private val server = new ServerSocket(port)
   @volatile private var running = true
 

@@ -29,8 +29,10 @@ final class UdpIngest(spark: SparkSession, port: Int) {
 
   // (sender, payload, receipt time): stamped HERE at socket receive — a
   // packet queued between micro-batch triggers must not inherit the later
-  // task execution time as its graphite receipt_time
-  private val mem = MemoryStream[(String, Array[Byte], Double)]
+  // task execution time as its graphite receipt_time. One partition per
+  // trigger, rows in arrival order: without a partition count every
+  // addData block (one datagram) becomes its own input partition and task
+  private val mem = MemoryStream[(String, Array[Byte], Double)](1)
   private val socket = new DatagramSocket(port)
   @volatile private var running = true
 

@@ -497,13 +497,22 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct") && !p.contains("SortMergeJoin"))
   }
 
+  /** The running-mode RaQL programs the two pins below audit. */
+  private val runningPrograms = Seq("r04_raql_lag_changed",
+    "r05_raql_running_aggs", "r06_raql_moveavg_latest",
+    "r10_raql_hysteresis_holt", "r11_raql_tumbling_commit",
+    "r14_raql_holt_winters", "r17_raql_running_group")
+
   test("running-mode queries leave no partition-less WindowExec (r12 verdict task 3)") {
     // Every global running construct (prefix aggregates, lag/changed/
     // derive, feedback reads, count-commit row numbering) is two-pass
     // chunk-distributed; windows that REMAIN single-group are the bounded
     // per-chunk carry frames, which declare Windows.oneGroup partition
     // keys. A partition-less WindowExec here means a data-sized funnel
-    // crept back in.
+    // crept back in. The pin needs a MULTI-partition input: the sf0.001
+    // events file plans one FilePartition, and over one partition the
+    // compile keeps the single window (one task by construction — the
+    // sibling pin below), so split the scan.
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.{InputAdapter, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -524,17 +533,40 @@ class PlanSpec extends AnyFunSuite {
       here ++ plan.children.flatMap(windows) ++
         plan.subqueries.flatMap(windows)
     }
-    for (name <- Seq("r04_raql_lag_changed", "r05_raql_running_aggs",
-        "r06_raql_moveavg_latest", "r10_raql_hysteresis_holt",
-        "r11_raql_tumbling_commit", "r14_raql_holt_winters",
-        "r17_raql_running_group")) {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val old = spark.conf.get(key)
+    val bytes = java.nio.file.Files.size(
+      java.nio.file.Paths.get(s"$sf/events.parquet"))
+    spark.conf.set(key, (bytes / 4).max(1L).toString)
+    try {
+      val events = Tables.events(spark, sf)
+      assert(events.rdd.getNumPartitions >= 2, "events must span partitions")
+      assert(!graft.raql.RaqlCompiler.singlePartition(events))
+      for (name <- runningPrograms) {
+        val df = Queries.byName(name).run(spark, sf)
+        df.collect()
+        val bad = windows(df.queryExecution.executedPlan)
+          .filter(_.partitionSpec.isEmpty)
+        assert(bad.isEmpty,
+          s"$name has ${bad.size} partition-less WindowExec node(s):\n" +
+            bad.map(_.simpleStringWithNodeId()).mkString("\n"))
+      }
+    } finally spark.conf.set(key, old)
+  }
+
+  test("running-mode queries over a single-partition input carry no chunk column and persist nothing") {
+    // one partition is one chunk: every carry would be empty, so the
+    // compile must take the one-window plan — no _graft_chunk column, no
+    // persisted chunk base, no broadcast carry join
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    assert(graft.raql.RaqlCompiler.singlePartition(Tables.events(spark, sf)),
+      "the sf0.001 events scan plans one FilePartition")
+    for (name <- runningPrograms) {
       val df = Queries.byName(name).run(spark, sf)
-      df.collect()
-      val bad = windows(df.queryExecution.executedPlan)
-        .filter(_.partitionSpec.isEmpty)
-      assert(bad.isEmpty,
-        s"$name has ${bad.size} partition-less WindowExec node(s):\n" +
-          bad.map(_.simpleStringWithNodeId()).mkString("\n"))
+      val carry = df.queryExecution.optimizedPlan.find(p =>
+        p.isInstanceOf[InMemoryRelation] ||
+          p.output.exists(_.name == "_graft_chunk"))
+      assert(carry.isEmpty, s"$name still carries chunks: $carry")
     }
   }
 }

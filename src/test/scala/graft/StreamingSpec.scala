@@ -480,6 +480,37 @@ class StreamingSpec extends AnyFunSuite {
     } finally udp.stop()
   }
 
+  test("UDP ingest: datagrams queued before one trigger arrive as one partition, in send order") {
+    import java.net.{DatagramPacket, DatagramSocket, InetAddress}
+    val udp = new UdpIngest(spark, 0).start()
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, Seq[String])]
+    try {
+      val k = 8
+      val sock = new DatagramSocket()
+      (0 until k).foreach { i =>
+        val p = s"dgram-$i".getBytes("UTF-8")
+        sock.send(new DatagramPacket(p, p.length,
+          InetAddress.getLoopbackAddress, udp.boundPort))
+      }
+      sock.close()
+      // loopback delivery takes microseconds: all k datagrams sit in the
+      // source before the query's first trigger plans them
+      Thread.sleep(1000)
+      val q = udp.packets.writeStream.foreachBatch {
+        (batch: org.apache.spark.sql.Dataset[(String, Array[Byte], Double)],
+            _: Long) =>
+          val rows = batch.collect().map(r => new String(r._2, "UTF-8")).toSeq
+          if (rows.nonEmpty) seen.synchronized {
+            seen += ((batch.rdd.getNumPartitions, rows))
+          }
+          ()
+      }.start()
+      try q.processAllAvailable() finally q.stop()
+      assert(seen.toSeq == Seq((1, (0 until k).map(i => s"dgram-$i"))),
+        seen.toString)
+    } finally udp.stop()
+  }
+
   test("TCP graphite survives concurrent connections and garbage lines") {
     val tcp = new graft.sources.TcpIngest(spark, 0).start()
     try {
