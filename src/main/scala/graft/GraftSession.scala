@@ -47,6 +47,17 @@ object GraftSession {
       // engine's generators sit above a shuffle that could profit
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+      // checkpoint logs and state-store files on local disk go through NIO:
+      // Hadoop's local file system forks chmod/stat per file without the
+      // native library (see LocalCheckpointFileManager)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
+      // the UI is off and nothing reads completed executions, jobs or stages
+      // back, yet the status store keeps each one's plan and metric strings:
+      // at the defaults (1000 each) an always-on stream piles them up
+      .config("spark.sql.ui.retainedExecutions", "50")
+      .config("spark.ui.retainedJobs", "100")
+      .config("spark.ui.retainedStages", "100")
     // shuffle/spill compression codec override (core conf — fixed at
     // context start, so an env gate rather than a runtime set). The
     // default lz4 optimizes CPU; `SPARK_GRAFT_IO_CODEC=zstd` trades ~2-4%

@@ -3578,8 +3578,8 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
         // (security.ramen `GROUP BY start // 60 COMMIT AFTER in.start >
         // out.start + 120`) — compile it to the native event-time window
         // with a watermark, so the SAME RaQL text runs append-mode
-        // Structured Streaming: state is bounded by the watermark and the
-        // COMMIT slack becomes the allowed lateness.
+        // Structured Streaming: state is bounded by the watermark, and the
+        // watermark delay is where the COMMIT bound fires past the window.
         var src1 = src
         var streamBucket: Option[(Int, Double)] = None
         val streamKeys: Option[Seq[Column]] =
@@ -3591,7 +3591,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
               scala.util.Try(evalNum(dE, params)).toOption.map(d => (tE, d, i))
             }
             bucket.map { case (tE, d, bi) =>
-              // allowed lateness from the commit slack — GUARDED like the
+              // watermark delay from the commit bound — GUARDED like the
               // batch horizonBucket: the commit must compare the SAME time
               // ref as the bucket against a time-shaped out field
               // (`in.t > out.wstart + s` with wstart = TRUNCATE(MIN t, d)).
@@ -3619,25 +3619,56 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
                   defs.get(n0).exists(timeShapedDef) || isT(base)
                 case _ => timeShapedDef(base)
               }
-              val lateness = agg.commitCond match {
-                case None => d
+              // (commit bound, delay when the bound's distance from the
+              // window start is not a constant)
+              val (bound, fallbackDelay) = agg.commitCond match {
+                case None => (None, d)
                 case Some(Binop(">" | ">=", inRef,
-                    Binop("+", baseRef, sE @ (Lit(_) | Ref(_)))))
+                    b @ Binop("+", baseRef, sE @ (Lit(_) | Ref(_)))))
                     if isT(inRef) && timeShapedBase(baseRef) =>
-                  try evalNum(sE, params) catch { case _: Exception => d }
+                  (Some(b),
+                    try evalNum(sE, params) catch { case _: Exception => d })
                 case Some(Binop(">" | ">=", inRef, baseRef))
-                    if isT(inRef) && timeShapedBase(baseRef) => d
+                    if isT(inRef) && timeShapedBase(baseRef) =>
+                  (Some(baseRef), d)
                 case Some(cc) => unsupported(
                   s"streaming time-bucket GROUP BY with a non-time COMMIT " +
                   s"condition ($cc): the window+watermark translation " +
                   "cannot read an allowed lateness from it")
               }
+              // The bound's constant distance from the window start
+              // TRUNCATE(MIN t, d): wstart → 0, wstop = wstart + d → d,
+              // wstart + 120 → 120. None when it is not a constant.
+              def windowOffset(e0: Expr, seen: Set[String]): Option[Double] = {
+                def num(x: Expr) = scala.util.Try(evalNum(x, params)).toOption
+                def viaDef(n0: String) =
+                  if (seen(n0)) None
+                  else defs.get(n0).flatMap(windowOffset(_, seen + n0))
+                e0 match {
+                  case FunCall("truncate", Seq(AggCall("min", r, _, _), dE2))
+                      if isT(r) && num(dE2).contains(d) => Some(0.0)
+                  case Binop("+", l0, r0) =>
+                    windowOffset(l0, seen).flatMap(o => num(r0).map(o + _))
+                  case Ref(Seq("out", n0)) => viaDef(n0)
+                  case Ref(Seq(n0)) if !isT(e0) => viaDef(n0)
+                  case _ => None
+                }
+              }
+              // The window [w, w + d) commits on the first tuple at or past
+              // w + offset; Spark closes it once the watermark, max event
+              // time minus the delay, reaches its end w + d. So the delay
+              // is offset − d, floored at 0: 0 for hosts.ramen's
+              // `in.t >= out.wstop`. With `>` the tuple exactly at the
+              // bound closes the window too, one tuple before ramen's
+              // strict compare would.
+              val delay = bound.flatMap(windowOffset(_, Set.empty))
+                .fold(fallbackDelay)(o => math.max(0.0, o - d))
               typerDf = Some(src)
               val tCol =
                 try compileExpr(tE, params, splitCols) finally typerDf = None
               src1 = src.withColumn("_graft_evt",
                 timestamp_seconds(tCol.cast("double")))
-                .withWatermark("_graft_evt", s"${math.max(lateness, 1.0)} seconds")
+                .withWatermark("_graft_evt", s"$delay seconds")
               streamBucket = Some((bi, d))
               agg.groupBy.zipWithIndex.map { case (k, i) =>
                 if (i == bi)

@@ -14,6 +14,26 @@ case class Ev(user: String, t: Long, v: Double)
 case class WinState(winStart: Long, n: Long, sum: Double)
 case class WinOut(user: String, winStart: Long, n: Long, sum: Double, prevSum: Double)
 
+/** An `fwd:` scheme over the local disk whose status lookups are counted:
+  * shows that the checkpoint manager hands non-`file:` paths to Spark's
+  * default manager. Registered per Configuration as
+  * `fs.AbstractFileSystem.fwd.impl`. */
+class ForwardingLocalFs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.hadoop.fs.DelegateToFileSystem(uri,
+      new ForwardingLocalFs.Raw, conf, "fwd", false)
+
+object ForwardingLocalFs {
+  val statusLookups = new java.util.concurrent.atomic.AtomicInteger
+  class Raw extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def getUri: java.net.URI = java.net.URI.create("fwd:///")
+    override def getScheme: String = "fwd"
+    override def getFileStatus(f: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileStatus = {
+      statusLookups.incrementAndGet()
+      super.getFileStatus(f)
+    }
+  }
+}
+
 class StreamingSpec extends AnyFunSuite {
 
   lazy val spark = GraftSession.builder("4").getOrCreate()
@@ -805,6 +825,91 @@ class StreamingSpec extends AnyFunSuite {
       s"no watermark in:\n$analyzed")
     assert(analyzed.toLowerCase.contains("window"),
       s"no window key in:\n$analyzed")
+  }
+
+  /** Compiles `raql`'s function `q` over a MemoryStream of [[Ev]] rows. */
+  private def compileOverEv(mem: MemoryStream[Ev], prog: String,
+      raql: String): org.apache.spark.sql.DataFrame = {
+    val c = new RaqlCompiler(spark, "/tmp")
+    c.registerTable("tables/ev", mem.toDS().toDF())
+    RaqlParser.parseProgram(raql) match {
+      case Right(p) => c.register(prog, p)
+      case Left(e) => fail(s"parse: $e")
+    }
+    c.compile(s"$prog/q")
+  }
+
+  private val hostsShape60 = """DEFINE q AS
+      FROM tables/ev
+      SELECT TRUNCATE(MIN t, 60) AS wstart, out.wstart + 60 AS wstop,
+             user, SUM 1 AS n
+      GROUP BY user
+      COMMIT BEFORE in.t >= out.wstop;"""
+
+  private val slack120 = """DEFINE q AS
+      FROM tables/ev
+      SELECT TRUNCATE(MIN t, 60) AS wstart, user, SUM 1 AS n
+      GROUP BY user, t // 60
+      COMMIT AFTER in.t > out.wstart + 120;"""
+
+  test("streaming time buckets watermark from the commit point: hosts shape 0 s, wstart + 120 over 60 s buckets 60 s") {
+    // delay = offset of the commit bound from the window start, minus the
+    // window length d, floored at 0: wstop = wstart + d gives 0, wstart +
+    // 120 with d = 60 gives 60
+    import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+    implicit val sqlCtx = spark.sqlContext
+    def delayMs(raql: String, prog: String): Seq[Long] =
+      compileOverEv(MemoryStream[Ev], prog, raql).queryExecution.analyzed
+        .collect { case w: EventTimeWatermark => EventTimeWatermark.getDelayMs(w.delay) }
+    assert(delayMs(hostsShape60, "wm0") == Seq(0L))
+    assert(delayMs(slack120, "wm60") == Seq(60000L))
+  }
+
+  test("hosts-shape stream emits a window once the first tuple at its wstop is processed") {
+    // ramen's check_commit_for_all commits [0,60) on the first tuple with
+    // t >= 60; the translation does the same, not one window later
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val q = compileOverEv(mem, "cp0", hostsShape60).writeStream.format("memory")
+      .queryName("commitpoint_hosts").outputMode("append").start()
+    def rows = spark.table("commitpoint_hosts").select("wstart", "wstop", "user", "n")
+      .as[(Double, Double, String, Long)].collect().toSeq
+    try {
+      for (t <- Seq(10L, 20L, 59L)) {
+        mem.addData(Ev("a", t, 1.0))
+        q.processAllAvailable()
+        assert(rows.isEmpty, s"window emitted before its wstop, after t = $t: $rows")
+      }
+      mem.addData(Ev("a", 60, 1.0))
+      q.processAllAvailable()
+      assert(rows == Seq((0.0, 60.0, "a", 3L)), rows)
+    } finally q.stop()
+  }
+
+  test("COMMIT AFTER in.t > out.wstart + 120 keeps a 60 s bucket open for late rows until t >= 120") {
+    // the bucket [0,60) commits when an input passes wstart + 120: a row
+    // for it arriving after t = 110 is still counted. Equality: Spark
+    // closes a window once the watermark reaches its end, so with `>` the
+    // tuple exactly at t = 120 closes it too (ramen's strict compare
+    // would wait for the next tuple past 120)
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val q = compileOverEv(mem, "cp120", slack120).writeStream.format("memory")
+      .queryName("commitpoint_slack").outputMode("append").start()
+    def rows = spark.table("commitpoint_slack").select("wstart", "user", "n")
+      .as[(Double, String, Long)].collect().toSeq
+    try {
+      mem.addData(Ev("a", 10, 1.0), Ev("a", 110, 1.0))
+      q.processAllAvailable()
+      mem.addData(Ev("a", 30, 1.0)) // late for [0,60), before its commit
+      q.processAllAvailable()
+      mem.addData(Ev("a", 119, 1.0))
+      q.processAllAvailable()
+      assert(rows.isEmpty, s"bucket closed before t >= 120: $rows")
+      mem.addData(Ev("a", 120, 1.0))
+      q.processAllAvailable()
+      assert(rows == Seq((0.0, "a", 2L)), rows)
+    } finally q.stop()
   }
 
   test("a non-time COMMIT on a streaming time-bucket routes to the expr-commit harness") {
@@ -1643,5 +1748,221 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       assert(results.get(12L) == ((1L, 13L, md5hex(""))))
     } finally q.stop()
+  }
+
+  // ---- checkpoint files: graft.streaming.LocalCheckpointFileManager ----
+
+  private def localManager(dir: java.nio.file.Path) =
+    new graft.streaming.LocalCheckpointFileManager(
+      new org.apache.hadoop.fs.Path(dir.toString), new org.apache.hadoop.conf.Configuration())
+
+  private def names(dir: java.nio.file.Path): Set[String] = {
+    val ds = java.nio.file.Files.list(dir)
+    try ds.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).toSet
+    finally ds.close()
+  }
+
+  private def readAll(m: graft.streaming.LocalCheckpointFileManager,
+      p: org.apache.hadoop.fs.Path): String = {
+    val in = m.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  test("checkpoint manager: a file is invisible until close; no-overwrite onto an existing file throws and keeps it") {
+    import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckm_publish")
+    val m = localManager(dir)
+    val f = new Path(dir.toString, "0")
+    val out = m.createAtomic(f, overwriteIfPossible = false)
+    out.write("first".getBytes("UTF-8"))
+    out.flush()
+    assert(!m.exists(f), "target visible before close")
+    assert(m.list(new Path(dir.toString)).isEmpty, "temp file listed")
+    out.close()
+    assert(m.exists(f) && readAll(m, f) == "first")
+    val again = m.createAtomic(f, overwriteIfPossible = false)
+    again.write("second".getBytes("UTF-8"))
+    intercept[FileAlreadyExistsException](again.close())
+    assert(readAll(m, f) == "first")
+    assert(names(dir) == Set("0"), s"temp left behind: ${names(dir)}")
+    val over = m.createAtomic(f, overwriteIfPossible = true)
+    over.write("third".getBytes("UTF-8"))
+    over.close()
+    assert(readAll(m, f) == "third" && names(dir) == Set("0"))
+  }
+
+  test("checkpoint manager: cancel leaves neither the file nor its temp") {
+    import org.apache.hadoop.fs.Path
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckm_cancel")
+    val m = localManager(dir)
+    val out = m.createAtomic(new Path(dir.toString, "1"), overwriteIfPossible = true)
+    out.write(Array.fill[Byte](100000)(7))
+    out.cancel()
+    out.close() // after cancel: a no-op, publishes nothing
+    assert(names(dir).isEmpty, names(dir).toString)
+  }
+
+  test("checkpoint manager: list hides .crc sidecars and temps; delete removes sidecars and ignores missing paths") {
+    import org.apache.hadoop.fs.{Path, PathFilter}
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckm_list")
+    def touch(n: String) = java.nio.file.Files.write(dir.resolve(n), Array[Byte](1))
+    Seq("0", ".0.crc", "1.delta", ".1.delta.crc", ".2.0b1c.tmp", "x.crc").foreach(touch)
+    java.nio.file.Files.createDirectory(dir.resolve("sub"))
+    val m = localManager(dir)
+    val root = new Path(dir.toString)
+    assert(m.list(root).map(_.getPath.getName).toSet == Set("0", "1.delta", "x.crc", "sub"))
+    assert(m.list(root).forall(_.getPath.toUri.getScheme == "file"))
+    assert(m.list(root).find(_.getPath.getName == "sub").exists(_.isDirectory))
+    val onlyDelta = new PathFilter { def accept(p: Path) = p.getName.endsWith(".delta") }
+    assert(m.list(root, onlyDelta).map(_.getPath.getName).toSeq == Seq("1.delta"))
+    intercept[java.io.FileNotFoundException](m.list(new Path(dir.toString, "missing")))
+    m.delete(new Path(dir.toString, "0"))
+    m.delete(new Path(dir.toString, "never-written"))
+    assert(names(dir) == Set("1.delta", ".1.delta.crc", ".2.0b1c.tmp", "x.crc", "sub"))
+    m.delete(root)
+    assert(!java.nio.file.Files.exists(dir))
+  }
+
+  test("checkpoint manager: open seeks and serves positioned reads without moving the stream") {
+    import org.apache.hadoop.fs.Path
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckm_open")
+    val m = localManager(dir)
+    val bytes = Array.tabulate[Byte](200000)(i => (i * 31 + 7).toByte)
+    val f = new Path(dir.toString, "snap")
+    val out = m.createAtomic(f, overwriteIfPossible = true)
+    out.write(bytes)
+    out.close()
+    val in = m.open(f)
+    try {
+      assert(in.read() == (bytes(0) & 0xff))
+      in.seek(150000)
+      assert(in.getPos == 150000 && in.read() == (bytes(150000) & 0xff))
+      val chunk = new Array[Byte](5000)
+      in.readFully(70000L, chunk)
+      assert(chunk.toSeq == bytes.slice(70000, 75000).toSeq)
+      assert(in.getPos == 150001, "positioned read moved the stream")
+      assert(in.read(199998L, chunk, 0, 100) == 2)
+      intercept[java.io.EOFException](in.readFully(199990L, chunk, 0, 100))
+      in.seek(10)
+      val rest = in.readAllBytes()
+      assert(rest.toSeq == bytes.drop(10).toSeq)
+      assert(in.read() == -1)
+    } finally in.close()
+    intercept[java.io.FileNotFoundException](m.open(new Path(dir.toString, "missing")))
+  }
+
+  test("checkpoint manager: a non-file: path goes to Spark's default manager") {
+    import org.apache.hadoop.fs.Path
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.set("fs.AbstractFileSystem.fwd.impl", classOf[ForwardingLocalFs].getName)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckm_fwd")
+    val root = new Path(s"fwd://$dir")
+    val m = new graft.streaming.LocalCheckpointFileManager(root, conf)
+    assert(m.delegate.exists(_.isInstanceOf[
+      org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager]))
+    val before = ForwardingLocalFs.statusLookups.get
+    val f = new Path(root, "0")
+    val out = m.createAtomic(f, overwriteIfPossible = false)
+    out.write("x".getBytes("UTF-8"))
+    out.close()
+    assert(m.exists(f) && m.list(root).map(_.getPath.getName).toSeq == Seq("0"))
+    assert(ForwardingLocalFs.statusLookups.get > before, "fwd: calls bypassed its file system")
+    assert(localManager(dir).delegate.isEmpty)
+    val lookups = ForwardingLocalFs.statusLookups.get
+    assert(localManager(dir).exists(new Path(dir.toString, "0")))
+    assert(ForwardingLocalFs.statusLookups.get == lookups)
+  }
+
+  test("streams started from GraftSession write their checkpoint without ChecksumFs sidecars") {
+    implicit val sqlCtx = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckm_wired")
+    val mem = MemoryStream[Ev]
+    val q = mem.toDS().groupBy("user").count().writeStream.format("memory")
+      .queryName("ckm_wired").outputMode("complete")
+      .option("checkpointLocation", ckpt.toString).start()
+    try {
+      mem.addData(Ev("a", 1, 1.0))
+      q.processAllAvailable()
+    } finally q.stop()
+    val offsets = ckpt.resolve("offsets")
+    assert(java.nio.file.Files.exists(offsets.resolve("0")))
+    assert(!java.nio.file.Files.exists(offsets.resolve(".0.crc")),
+      s"offsets written through Hadoop's ChecksumFs: ${names(offsets)}")
+    assert(!names(ckpt.resolve("commits")).exists(_.endsWith(".crc")))
+  }
+
+  test("a checkpoint written by Spark's default manager restarts under graft's: batch ids continue, an open window emits once") {
+    // hosts.ramen's shape over a file source into a parquet sink: two
+    // batches under FileContextBasedCheckpointFileManager (set through the
+    // session conf), then a restart on the same checkpoint under the
+    // session's own manager; window [0,60) stays open across the restart
+    import java.nio.file.Files
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val sessionManager = spark.conf.getOption(key)
+    val in = Files.createTempDirectory("graft_ckm_restart_in")
+    val outDir = Files.createTempDirectory("graft_ckm_restart_out")
+    val ckpt = Files.createTempDirectory("graft_ckm_restart_ckpt")
+    var fileNo = 0
+    def land(rows: (String, Double, Double)*): Unit = {
+      fileNo += 1
+      val body = rows.map { case (h, t, v) =>
+        s"""{"host":"$h","ets":$t,"v":$v}""" }.mkString("\n")
+      val tmp = Files.createTempFile("graft_ckm_row", ".json")
+      Files.write(tmp, body.getBytes("UTF-8"))
+      Files.move(tmp, in.resolve(f"part-$fileNo%03d.json"))
+    }
+    def start() = {
+      val c = new RaqlCompiler(spark, "/tmp")
+      c.registerTable("tables/ev", spark.readStream
+        .schema("host STRING, ets DOUBLE, v DOUBLE").json(in.toString))
+      RaqlParser.parseProgram("""DEFINE q AS
+          FROM tables/ev
+          SELECT TRUNCATE(MIN ets, 60) AS wstart, out.wstart + 60 AS wstop,
+                 host, SUM 1 AS n, SUM v AS total
+          GROUP BY host
+          COMMIT BEFORE in.ets >= out.wstop;""") match {
+        case Right(p) => c.register("rs", p)
+        case Left(e) => fail(s"parse: $e")
+      }
+      c.compile("rs/q").writeStream.format("parquet").outputMode("append")
+        .option("checkpointLocation", ckpt.toString).start(outDir.toString)
+    }
+    def batchIds(q: org.apache.spark.sql.streaming.StreamingQuery) =
+      q.recentProgress.map(_.batchId).toSeq
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager")
+    val firstIds =
+      try {
+        val q1 = start()
+        try {
+          land(("a", 10, 1.0), ("a", 20, 2.0))
+          q1.processAllAvailable()
+          land(("a", 30, 3.0), ("b", 40, 1.0))
+          q1.processAllAvailable()
+          batchIds(q1)
+        } finally q1.stop()
+      } finally sessionManager.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(names(ckpt.resolve("offsets")).contains(".0.crc"),
+      "the first run did not use Spark's default manager")
+    val q2 = start()
+    val secondIds =
+      try {
+        land(("a", 70, 4.0))
+        q2.processAllAvailable()
+        land(("a", 130, 5.0))
+        q2.processAllAvailable()
+        batchIds(q2)
+      } finally q2.stop()
+    assert(firstIds.nonEmpty && secondIds.nonEmpty)
+    assert(secondIds.head == firstIds.max + 1, s"batch ids $firstIds then $secondIds")
+    val restarted = names(ckpt.resolve("offsets")).filterNot(_.startsWith("."))
+      .map(_.toLong).filter(_ > firstIds.max)
+    assert(restarted.nonEmpty && restarted.forall(b =>
+      !Files.exists(ckpt.resolve("offsets").resolve(s".$b.crc"))))
+    val rows = spark.read.parquet(outDir.toString)
+      .select("wstart", "host", "n", "total").as[(Double, String, Long, Double)]
+      .collect().sortBy(r => (r._1, r._2)).toSeq
+    assert(rows == Seq((0.0, "a", 3L, 6.0), (0.0, "b", 1L, 1.0), (60.0, "a", 1L, 4.0)),
+      rows)
   }
 }
