@@ -2512,7 +2512,9 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     * notification row (name, firing, params) per output tuple, ready for
     * `.as[Notification]` and the alerter sink (graft.streaming.Notify).
     * Params carry every output field stringified, like the reference's
-    * notification tuples (`RamenAlerter.ml`). */
+    * notification tuples (`RamenAlerter.ml`). Rows leave un-timed
+    * (`sentTime` 0): [[graft.streaming.Notify.Alerter]] stamps them with
+    * its clock at delivery, so the plan holds no per-batch literal. */
   def notifications(key: String): Option[DataFrame] = {
     val (progName, funcName) = key.lastIndexOf('/') match {
       case -1 => ("", key)
@@ -2559,8 +2561,9 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
         lit("").as("site"),
         lit(key).as("worker"),
         lit(false).as("test"),
-        unix_micros(current_timestamp()).cast("double").divide(1e6)
-          .as("sentTime"),
+        // not current_timestamp(): a stream folds it into a new literal
+        // every micro-batch, and the stage is compiled anew each trigger
+        lit(0.0).as("sentTime"),
         eventTime.as("eventTime"),
         numSpecial("certainty", 0.5).as("certainty"),
         numSpecial("debounce", 0.0).as("debounce"),

@@ -533,7 +533,13 @@ object Notify {
     * volume. A buggy query that NOTIFYs per input tuple must not OOM the
     * driver, so the collect is bounded at `maxPerBatch`: overflow rows
     * are dropped and journaled as a FAILED line (visible in
-    * `alerter.incidents`, like any contact failure). */
+    * `alerter.incidents`, like any contact failure).
+    *
+    * The batch runs once, as one job over all its partitions. Every
+    * partition reads all its rows and ships at most its first
+    * `maxPerBatch + 1` plus `maxPerBatch` later STOPs, so the bound is
+    * per partition: the driver holds at most
+    * partitions × (2·maxPerBatch + 1) rows. */
   def sink(ds: Dataset[Notification], alerter: Alerter,
       maxPerBatch: Int = 100000): DataStreamWriter[Notification] =
     ds.writeStream.foreachBatch { (batch: Dataset[Notification], _: Long) =>
@@ -544,9 +550,24 @@ object Notify {
     * (bounded collect, STOP rescue) is unit-testable without a stream. */
   private[graft] def sinkBatch(batch: Dataset[Notification], alerter: Alerter,
       maxPerBatch: Int): Unit = {
-      val ns = batch.take(maxPerBatch + 1)
-      val overflow = ns.length > maxPerBatch
-      val kept = if (overflow) ns.take(maxPerBatch) else ns
+      // per partition, in partition order: its first maxPerBatch + 1 rows,
+      // then the STOPs after them (at most maxPerBatch). Every row is
+      // read: a stateful stage commits its state store at the end of its
+      // output, and a partition stopped early never commits
+      val parts = batch.rdd.mapPartitions { it =>
+        val head, stops = Array.newBuilder[Notification]
+        var n, s = 0
+        it.foreach { r =>
+          if (n <= maxPerBatch) { head += r; n += 1 }
+          else if (!r.firing && s < maxPerBatch) { stops += r; s += 1 }
+        }
+        Iterator((head.result(), stops.result()))
+      }.collect()
+      // a partition ships later STOPs only after a full head, so the first
+      // maxPerBatch rows of this sequence are the batch's first rows
+      val shipped = parts.flatMap { case (head, stops) => head ++ stops }
+      val kept = shipped.take(maxPerBatch)
+      val overflow = shipped.length > maxPerBatch
       kept.foreach(alerter.deliver)
       var rescued: Array[Notification] = Array.empty
       if (overflow) {
@@ -559,10 +580,8 @@ object Notify {
         // (found in the r13 review pass). Tail stops are order-safe by
         // construction: every tail row follows every kept row, so closing
         // a kept START is correct and a stop whose START was also dropped
-        // no-ops. Bounded: one more take(maxPerBatch).
-        val keptSet = kept.toSet
-        val stops = batch.filter(n => !n.firing).take(maxPerBatch)
-          .filterNot(keptSet.contains)
+        // no-ops. Bounded: the first maxPerBatch tail stops.
+        val stops = shipped.drop(maxPerBatch).filterNot(_.firing).take(maxPerBatch)
         stops.foreach(alerter.deliver)
         rescued = stops
         val names = stops.map(_.name).distinct

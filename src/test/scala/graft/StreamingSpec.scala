@@ -827,17 +827,33 @@ class StreamingSpec extends AnyFunSuite {
       s"no window key in:\n$analyzed")
   }
 
-  /** Compiles `raql`'s function `q` over a MemoryStream of [[Ev]] rows. */
-  private def compileOverEv(mem: MemoryStream[Ev], prog: String,
-      raql: String): org.apache.spark.sql.DataFrame = {
+  /** A compiler holding `raql` as `prog`, over a MemoryStream of [[Ev]] rows. */
+  private def registerOverEv(mem: MemoryStream[Ev], prog: String,
+      raql: String): RaqlCompiler = {
     val c = new RaqlCompiler(spark, "/tmp")
     c.registerTable("tables/ev", mem.toDS().toDF())
     RaqlParser.parseProgram(raql) match {
       case Right(p) => c.register(prog, p)
       case Left(e) => fail(s"parse: $e")
     }
-    c.compile(s"$prog/q")
+    c
   }
+
+  /** Compiles `raql`'s function `q` over a MemoryStream of [[Ev]] rows. */
+  private def compileOverEv(mem: MemoryStream[Ev], prog: String,
+      raql: String): org.apache.spark.sql.DataFrame =
+    registerOverEv(mem, prog, raql).compile(s"$prog/q")
+
+  /** The compiled NOTIFY of one alert per closed hosts-shape window:
+    * START "busy <user>" when the user had more than one row in it, STOP
+    * otherwise. */
+  private def busyAlertsOverEv(mem: MemoryStream[Ev],
+      prog: String): org.apache.spark.sql.Dataset[Notification] =
+    registerOverEv(mem, prog, hostsShape60 + """
+      DEFINE alert AS FROM q
+        SELECT wstop, user, n, n > 1 AS firing
+        NOTIFY "busy " || user;""").notifications(s"$prog/alert")
+      .getOrElse(fail("no NOTIFY compiled")).as[Notification]
 
   private val hostsShape60 = """DEFINE q AS
       FROM tables/ev
@@ -910,6 +926,115 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       assert(rows == Seq((0.0, "a", 2L)), rows)
     } finally q.stop()
+  }
+
+  test("a stateful NOTIFY batch over maxPerBatch keeps its state: later windows alert, tail STOPs are rescued") {
+    // the sink reads every row of every partition: a stateful partition
+    // stopped after maxPerBatch + 1 rows never commits its state store,
+    // and the next batch cannot load it
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val alerter = new Notify.Alerter
+    val q = Notify.sink(busyAlertsOverEv(mem, "ovf"), alerter, maxPerBatch = 2).start()
+    def step(evs: Ev*): Unit = { mem.addData(evs); q.processAllAvailable() }
+    try {
+      step(Ev("a", 10, 1.0), Ev("a", 20, 1.0))
+      // closes [0,60): a fires. [60,120) holds 41 STOPs (a and 40 users
+      // with one row) and 40 STARTs: 81 rows over 4 partitions, cap 2
+      step(Ev("a", 70, 1.0) +: (0 until 40).flatMap { i =>
+        Seq(Ev(f"s$i%02d", 70, 1.0), Ev(f"f$i%02d", 70, 1.0), Ev(f"f$i%02d", 80, 1.0))
+      }: _*)
+      assert(alerter.currentlyFiring == Set("busy a"), alerter.incidents)
+      step(Ev("c", 130, 1.0), Ev("c", 140, 1.0)) // closes [60,120): overflow
+      step(Ev("d", 190, 1.0)) // closes [120,180): c fires
+      assert(q.isActive && q.exception.isEmpty, q.exception)
+      val lines = alerter.incidents
+      // at most 2 of the 41 STOPs sit in the kept prefix: the first 2 of
+      // the tail are rescued
+      assert(lines.exists(l => l.startsWith("FAILED batch overflow") &&
+        l.contains("; 2 STOPs rescued")), lines)
+      assert(lines.contains("START busy c"), lines)
+      assert(alerter.currentlyFiring("busy c"))
+    } finally q.stop()
+  }
+
+  test("a compiled NOTIFY stream compiles no stage code per micro-batch beyond Spark's eviction predicate") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.expressions.{CurrentDate, CurrentTimestampLike}
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val notifs = busyAlertsOverEv(mem, "stable")
+    // the analyzed plan: each micro-batch's optimizer folds a current time
+    // into a new literal, so it must not be there to fold
+    val timed = notifs.queryExecution.analyzed.collect { case p =>
+      p.expressions.flatMap(_.collect {
+        case e: CurrentTimestampLike => e
+        case e: CurrentDate => e
+      })
+    }.flatten
+    assert(timed.isEmpty, timed)
+    val alerter = new Notify.Alerter
+    val batches = new java.util.concurrent.atomic.AtomicInteger
+    val q = notifs.writeStream.foreachBatch {
+      (b: org.apache.spark.sql.Dataset[Notification], _: Long) =>
+        Notify.sinkBatch(b, alerter, 100000)
+        batches.incrementAndGet()
+        ()
+    }.start()
+    try {
+      // each minute's rows close the previous minute's windows: a START
+      // for b, a STOP for a, every minute
+      val perMinute = (0 until 6).map { m =>
+        val (c0, b0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, batches.get)
+        mem.addData(Ev("a", 60L * m + 10, 1.0), Ev("b", 60L * m + 10, 1.0),
+          Ev("b", 60L * m + 20, 1.0))
+        q.processAllAvailable()
+        (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0, batches.get - b0)
+      }
+      assert(alerter.incidents.count(_ == "START busy b") == 1, alerter.incidents)
+      // after two warm-up minutes: one compile per micro-batch at most,
+      // the eviction predicate over the batch's new watermark
+      perMinute.drop(2).foreach { case (compiles, ran) =>
+        assert(ran >= 1 && compiles <= ran, perMinute)
+      }
+    } finally q.stop()
+  }
+
+  test("the NOTIFY sink runs a 4-partition stateful micro-batch as one job") {
+    implicit val sqlCtx = spark.sqlContext
+    val sc = spark.sparkContext
+    val mem = MemoryStream[Ev]
+    val alerter = new Notify.Alerter
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
+    sc.addSparkListener(listener)
+    try {
+      val q = busyAlertsOverEv(mem, "onejob").writeStream.foreachBatch {
+        (b: org.apache.spark.sql.Dataset[Notification], _: Long) =>
+          val parts = b.rdd.getNumPartitions
+          org.apache.spark.sql.GraftShims.drainListenerBus(sc)
+          val j0 = jobs.get
+          Notify.sinkBatch(b, alerter, 100000)
+          org.apache.spark.sql.GraftShims.drainListenerBus(sc)
+          seen.add((parts, jobs.get - j0))
+          ()
+      }.start()
+      try {
+        mem.addData(Ev("a", 10, 1.0), Ev("b", 10, 1.0), Ev("b", 20, 1.0))
+        q.processAllAvailable()
+        mem.addData(Ev("a", 70, 1.0))
+        q.processAllAvailable()
+      } finally q.stop()
+    } finally sc.removeSparkListener(listener)
+    assert(alerter.incidents.contains("START busy b"), alerter.incidents)
+    val batches = seen.toArray.toSeq
+    assert(batches.nonEmpty && batches.forall(_ == ((4, 1))), batches)
   }
 
   test("a non-time COMMIT on a streaming time-bucket routes to the expr-commit harness") {
