@@ -23,6 +23,10 @@ import graft.raql.RaqlCompiler
   * endpoints (Kafka brokers, packet sniffers) and expectations over
   * notifications (the alerter path is exercised by StreamingSpec/
   * AlertApiSpec instead).
+  *
+  * The specs and their programs are ramen's own `tests/func` checkout, which
+  * the repo does not hold: the test runs wherever the checkout is present
+  * and is canceled where it is absent.
   */
 class ReferenceTestsSpec extends AnyFunSuite {
 
@@ -259,6 +263,8 @@ class ReferenceTestsSpec extends AnyFunSuite {
   }
 
   test("reference .test expectations hold on compiled outputs") {
+    assume(Files.isDirectory(Paths.get(funcDir)),
+      s"needs the reference checkout at $funcDir (ramen's tests/func)")
     val testFiles = Files.list(Paths.get(funcDir)).iterator().asScala
       .filter(_.toString.endsWith(".test")).toList.sortBy(_.toString)
     // live-endpoint and purely-streaming specs are exercised elsewhere
