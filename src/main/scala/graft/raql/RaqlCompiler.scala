@@ -3025,7 +3025,8 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     // accumulates (no flush) — both take the general commit path instead
     val (srcW, aggW) = agg.commitCond.flatMap(countCommitK) match {
       // streaming can't run the row_number rewrite (no unbounded window on
-      // a stream) — compileNamed routes count-commit to the CommitHarness
+      // a stream) — compileNamed routes a streaming count-commit to the
+      // expression-commit harness
       case Some(k) if k > 0 && !src.isStreaming &&
           !agg.commitBefore && !agg.commitKeep &&
           named.forall(f => countWindowable(f._1)) =>
@@ -3117,82 +3118,6 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     finally typerDf = None
   }
 
-  /** Streaming translation of `COMMIT AFTER sum 1 >= k` — the reference's
-    * count-commit (`check_commit_for_all`,
-    * /root/reference/src/CodeGenLib_Skeletons.ml:814-876): every group
-    * emits its out-tuple and flushes after k input tuples. Batch handles
-    * this with the k-row tumbling rewrite; on a stream it compiles to
-    * [[graft.streaming.CommitHarness]] — per-key fold state in Spark's
-    * state store (RocksDB at scale), sharded by group key exactly like the
-    * reference's per-worker group hash, but elastic and checkpointed.
-    *
-    * Field shapes supported: group keys, decomposable aggregates
-    * (COUNT/SUM/MIN/MAX/AVG/FIRST/LAST) over stateless operands, and
-    * stateless expressions (group-last, matching the batch translation).
-    * Anything else (nested state, previous.*) stays a typed error.
-    */
-  private def compileStreamingCountCommit(src: DataFrame,
-      named: Seq[(Expr, String)], agg: Aggregate, params: Map[String, Expr],
-      splitCols: Map[FunCall, Column], k: Long): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import graft.streaming.{CommitHarness, GroupSpec}
-
-    val plans: Seq[(String, Column)] = named.map { case (e, _) =>
-      e match {
-        case _ if !hasAgg(e) =>
-          ("pass", compileExpr(e, params, splitCols))
-        case AggCall(fn @ ("count" | "sum" | "min" | "max" | "avg" |
-            "first" | "last"), op, _, _) if !hasAgg(op) =>
-          (fn, compileExpr(op, params, splitCols))
-        case other => unsupported(
-          s"streaming count-commit field $other (only decomposable " +
-          "aggregates over stateless operands stream through the harness)")
-      }
-    }
-    // key identity: json of the key tuple (null-safe, collision-free);
-    // ungrouped = one global key
-    val keyCol =
-      if (agg.groupBy.isEmpty) lit("")
-      else to_json(struct(agg.groupBy.zipWithIndex.map { case (kE, i) =>
-        compileExpr(kE, params, splitCols).as(s"_k$i")
-      }: _*))
-    val proj = src.select(
-      keyCol.as("_gkey") +: plans.zipWithIndex.map { case ((_, c), i) =>
-        c.as(s"_v$i")
-      }: _*)
-    def integral(dt: DataType) = dt match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    val vTypes = proj.schema.fields.drop(1).map(_.dataType)
-    val outSchema = StructType(named.zip(plans).zip(vTypes).map {
-      case (((_, name), ("count", _)), _) => StructField(name, LongType)
-      case (((_, name), ("sum", _)), dt) =>
-        StructField(name, if (integral(dt)) LongType else DoubleType)
-      case (((_, name), ("avg", _)), _) => StructField(name, DoubleType)
-      case (((_, name), _), dt) => StructField(name, dt)
-    })
-    // all runtime logic lives in the serializable Rt (nested defs here
-    // would lift onto the non-serializable compiler and poison the task)
-    val rt = new CountCommitRt(plans.map(_._1).toArray,
-      vTypes.map(integral).toArray, plans.length, outSchema, k)
-    CommitHarness.run[String, Row, Array[Any], Row](
-      proj,
-      (r: Row) => r.getString(0),
-      GroupSpec[Row, Array[Any], Row](
-        init = () => rt.init(),
-        update = (s, r) => rt.update(s, r),
-        commitAfter = (s, _, _) => rt.commitAfter(s),
-        emit = (s, _) => rt.emit(s),
-        keepOnCommit = false,
-        // partial windows stay pending, like the reference's (batch has an
-        // end and emits the tail; a stream does not)
-        emitOnTimeout = false))(
-      Encoders.STRING, Encoders.row(proj.schema),
-      Encoders.kryo[CommitHarness.GState[Array[Any], Row]],
-      Encoders.row(outSchema)).toDF()
-  }
-
   /** Streaming translation of an ARBITRARY `COMMIT AFTER/BEFORE cond` —
     * the general per-tuple commit check of the reference
     * (/root/reference/src/CodeGenLib_Skeletons.ml:433-930): group state
@@ -3204,11 +3129,11 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     * ([[CommitCond]]/[[ExprCommitRt]]). `COMMIT BEFORE` checks the
     * PRE-update state against the incoming tuple and emits the previous
     * window first (tumbling.ramen's shape); `KEEP` preserves state on
-    * commit. This closes the last streaming commit form: time-shaped
-    * bucket commits still take the window+watermark translation (bounded
-    * state — preferred where it applies), count-commits take the
-    * specialized fast path, and everything else lands here instead of a
-    * typed error.
+    * commit. Every streaming COMMIT that [[streamTimeBucket]] does not
+    * plan as a time bucket lands here, the count-commit `COMMIT AFTER
+    * SUM 1 >= k` included (its `SUM 1` becomes a hidden slot, and the
+    * flush resets it); time-bucket commits take the window+watermark
+    * translation instead (bounded state — preferred where it applies).
     *
     * State lifetime caveat (documented, reference-identical): a group
     * whose condition never fires holds its slots until it does — the
@@ -3461,27 +3386,26 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     } finally typerDf = None
   }
 
-  /** Does this (groupBy, commitCond) fit the streaming window+watermark
-    * translation? Mirrors the guard inside the grouped compile path: a
-    * `t // d` bucket key with a constant divisor AND a commit condition
-    * the lateness extraction understands (absent, or time-shaped
-    * `in.t >[=] time-shaped-base [+ slack]`). */
-  private def streamTimeTranslatable(agg: Aggregate,
-      params: Map[String, Expr], fields: Seq[(Expr, String)]): Boolean = {
-    val bucket = agg.groupBy.collectFirst {
-      case Binop("//", tE, dE) => (tE, dE)
-    }.filter { case (_, dE) =>
-      scala.util.Try(evalNum(dE, params)).isSuccess
-    }
-    bucket.exists { case (tE, _) =>
-      def refName(e: Expr): Option[String] = e match {
-        case Ref(Seq("in", n)) => Some(n)
-        case Ref(Seq(n)) => Some(n)
-        case _ => None
-      }
-      val tName = refName(tE)
-      val defs = fields.map { case (e0, n0) => n0 -> e0 }.toMap
-      def isT(r: Expr): Boolean = tName.isDefined && refName(r) == tName
+  /** The one place that recognises the streaming time-bucket COMMIT
+    * shape. Some(plan) when `named` (alias-substituted) and `agg` fit the
+    * window+watermark translation: a `t // d` group key with a constant
+    * divisor AND a commit condition the lateness extraction understands
+    * (absent, or time-shaped `in.t >[=] time-shaped-base [+ slack]` with
+    * the base an out field built from TRUNCATE/MIN of the same t). None
+    * otherwise: a streaming COMMIT then takes the expression-commit
+    * harness. A non-time commit (`COMMIT AFTER in.t > out.n + 120` with
+    * n = SUM 1) must NOT become event-time windowing with an unrelated
+    * lateness, so it answers None too. */
+  private def streamTimeBucket(agg: Aggregate, params: Map[String, Expr],
+      named: Seq[(Expr, String)]): Option[RaqlCompiler.TimeBucket] = {
+    agg.groupBy.zipWithIndex.collectFirst {
+      case (Binop("//", tE, dE), i) => (tE, dE, i)
+    }.flatMap { case (tE, dE, i) =>
+      scala.util.Try(evalNum(dE, params)).toOption.map(d => (tE, d, i))
+    }.flatMap { case (tE, d, bi) =>
+      val plan = RaqlCompiler.TimeBucket(bi, tE, d, None, d)
+      import plan.isT
+      val defs = named.map { case (e0, n0) => n0 -> e0 }.toMap
       def timeShapedDef(e0: Expr): Boolean = e0 match {
         case FunCall("truncate", Seq(r, _)) => isT(r) || timeShapedDef(r)
         case AggCall("min", r, _, _) => isT(r) || timeShapedDef(r)
@@ -3494,12 +3418,16 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
         case _ => timeShapedDef(base)
       }
       agg.commitCond match {
-        case None => true
-        case Some(Binop(">" | ">=", inRef, Binop("+", baseRef,
-            (Lit(_) | Ref(_))))) if isT(inRef) && timeShapedBase(baseRef) => true
+        case None => Some(plan)
+        case Some(Binop(">" | ">=", inRef,
+            b @ Binop("+", baseRef, sE @ (Lit(_) | Ref(_)))))
+            if isT(inRef) && timeShapedBase(baseRef) =>
+          Some(plan.copy(bound = Some(b), fallbackDelay =
+            try evalNum(sE, params) catch { case _: Exception => d }))
         case Some(Binop(">" | ">=", inRef, baseRef))
-            if isT(inRef) && timeShapedBase(baseRef) => true
-        case Some(_) => false
+            if isT(inRef) && timeShapedBase(baseRef) =>
+          Some(plan.copy(bound = Some(baseRef)))
+        case Some(_) => None
       }
     }
   }
@@ -3536,26 +3464,23 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
       splitCols: Map[FunCall, Column]): DataFrame = {
     val fields = named // (expr, name) pairs, aliases pre-substituted
     if (fields.exists(f => hasAgg(f._1))) {
-      // STREAMING count-based COMMIT (`COMMIT AFTER sum 1 >= k`): the k-row
-      // tumbling rewrite is a batch construct (unbounded row_number), and
-      // the window+watermark translation needs a TIME commit — this is the
-      // reference's count-commit (check_commit_for_all shape,
-      // /root/reference/src/CodeGenLib_Skeletons.ml:814-876) and routes to
-      // the CommitHarness: per-key state in the state store, emit+flush
-      // every k tuples. Applies to grouped AND ungrouped programs (the
-      // ungrouped case is one global key).
-      if (src.isStreaming && !agg.commitBefore && !agg.commitKeep)
-        agg.commitCond.flatMap(countCommitK).filter(_ > 0).foreach { k =>
-          return compileStreamingCountCommit(src, fields, agg, params,
-            splitCols, k)
-        }
-      // STREAMING arbitrary-expression COMMIT: any other commit condition
-      // on a streaming source routes to the general CommitHarness
-      // translation — per-key decomposable state + an interpreted
-      // condition over (in, out) — UNLESS the time-bucket window+watermark
-      // translation applies (bounded state; preferred where it fits).
-      if (src.isStreaming && agg.commitCond.nonEmpty &&
-          !streamTimeTranslatable(agg, params, fields))
+      // a bare ref to an AGGREGATE alias that shadows no input column
+      // can only mean the out field (errors.ramen `err_count /
+      // tot_count AS err_ratio`): substitute its defining expression so
+      // the whole field evaluates inside one agg() (running mode instead
+      // reads the materialized window column — same state, not a second
+      // one)
+      lazy val aliased = subAggAliases(fields, src.columns.toSet,
+        scala.collection.mutable.Map.empty)
+      // STREAMING routes: a time-bucket COMMIT (or a `t // d` key with no
+      // COMMIT) takes the window+watermark translation below (bounded
+      // state); every other streaming COMMIT, count-commits included,
+      // takes the expression-commit harness: per-key decomposable state +
+      // an interpreted condition over (in, out). Ungrouped programs are
+      // one global key there.
+      val bucket =
+        if (src.isStreaming) streamTimeBucket(agg, params, aliased) else None
+      if (src.isStreaming && agg.commitCond.nonEmpty && bucket.isEmpty)
         return compileStreamingExprCommit(src, fields, agg, params, splitCols)
       if (agg.groupBy.nonEmpty) {
         // grouping columns come back from groupBy() itself; aggregate
@@ -3568,14 +3493,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
         val keys = agg.groupBy.zipWithIndex.map { case (k, i) =>
           compileExpr(k, params, splitCols).as(s"_gk$i")
         }
-        // a bare ref to an AGGREGATE alias that shadows no input column
-        // can only mean the out field (errors.ramen `err_count /
-        // tot_count AS err_ratio`): substitute its defining expression so
-        // the whole field evaluates inside this agg() (running mode
-        // instead reads the materialized window column — same state, not
-        // a second one)
-        val aggAlias = scala.collection.mutable.Map.empty[String, Expr]
-        val named = this.subAggAliases(fields, src.columns.toSet, aggAlias)
+        val named = aliased
         // STREAMING tumbling translation: on a streaming source, a
         // `t // d` group key is the reference's time-bucket idiom
         // (security.ramen `GROUP BY start // 60 COMMIT AFTER in.start >
@@ -3583,109 +3501,49 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
         // with a watermark, so the SAME RaQL text runs append-mode
         // Structured Streaming: state is bounded by the watermark, and the
         // watermark delay is where the COMMIT bound fires past the window.
-        var src1 = src
-        var streamBucket: Option[(Int, Double)] = None
-        val streamKeys: Option[Seq[Column]] =
-          if (!src.isStreaming) None
-          else {
-            val bucket = agg.groupBy.zipWithIndex.collectFirst {
-              case (Binop("//", tE, dE), i) => (tE, dE, i)
-            }.flatMap { case (tE, dE, i) =>
-              scala.util.Try(evalNum(dE, params)).toOption.map(d => (tE, d, i))
-            }
-            bucket.map { case (tE, d, bi) =>
-              // watermark delay from the commit bound — GUARDED like the
-              // batch horizonBucket: the commit must compare the SAME time
-              // ref as the bucket against a time-shaped out field
-              // (`in.t > out.wstart + s` with wstart = TRUNCATE(MIN t, d)).
-              // A non-time commit (COMMIT AFTER … out.n + 120 with n =
-              // SUM 1) must NOT silently become event-time windowing with
-              // an unrelated lateness — typed error instead.
-              def refName(e: Expr): Option[String] = e match {
-                case Ref(Seq("in", n)) => Some(n)
-                case Ref(Seq(n)) => Some(n)
-                case _ => None
-              }
-              val tName = refName(tE)
-              val defs = named.map { case (e0, n0) => n0 -> e0 }.toMap
-              def isT(r: Expr): Boolean = tName.isDefined && refName(r) == tName
-              def timeShapedDef(e0: Expr): Boolean = e0 match {
-                case FunCall("truncate", Seq(r, _)) =>
-                  isT(r) || timeShapedDef(r)
-                case AggCall("min", r, _, _) => isT(r) || timeShapedDef(r)
-                case Binop(_, l0, r0) => timeShapedDef(l0) || timeShapedDef(r0)
-                case r => isT(r)
-              }
-              def timeShapedBase(base: Expr): Boolean = base match {
-                case Ref(Seq("out", n0)) => defs.get(n0).exists(timeShapedDef)
-                case Ref(Seq(n0)) =>
-                  defs.get(n0).exists(timeShapedDef) || isT(base)
-                case _ => timeShapedDef(base)
-              }
-              // (commit bound, delay when the bound's distance from the
-              // window start is not a constant)
-              val (bound, fallbackDelay) = agg.commitCond match {
-                case None => (None, d)
-                case Some(Binop(">" | ">=", inRef,
-                    b @ Binop("+", baseRef, sE @ (Lit(_) | Ref(_)))))
-                    if isT(inRef) && timeShapedBase(baseRef) =>
-                  (Some(b),
-                    try evalNum(sE, params) catch { case _: Exception => d })
-                case Some(Binop(">" | ">=", inRef, baseRef))
-                    if isT(inRef) && timeShapedBase(baseRef) =>
-                  (Some(baseRef), d)
-                case Some(cc) => unsupported(
-                  s"streaming time-bucket GROUP BY with a non-time COMMIT " +
-                  s"condition ($cc): the window+watermark translation " +
-                  "cannot read an allowed lateness from it")
-              }
-              // The bound's constant distance from the window start
-              // TRUNCATE(MIN t, d): wstart → 0, wstop = wstart + d → d,
-              // wstart + 120 → 120. None when it is not a constant.
-              def windowOffset(e0: Expr, seen: Set[String]): Option[Double] = {
-                def num(x: Expr) = scala.util.Try(evalNum(x, params)).toOption
-                def viaDef(n0: String) =
-                  if (seen(n0)) None
-                  else defs.get(n0).flatMap(windowOffset(_, seen + n0))
-                e0 match {
-                  case FunCall("truncate", Seq(AggCall("min", r, _, _), dE2))
-                      if isT(r) && num(dE2).contains(d) => Some(0.0)
-                  case Binop("+", l0, r0) =>
-                    windowOffset(l0, seen).flatMap(o => num(r0).map(o + _))
-                  case Ref(Seq("out", n0)) => viaDef(n0)
-                  case Ref(Seq(n0)) if !isT(e0) => viaDef(n0)
-                  case _ => None
-                }
-              }
-              // The window [w, w + d) commits on the first tuple at or past
-              // w + offset; Spark closes it once the watermark, max event
-              // time minus the delay, reaches its end w + d. So the delay
-              // is offset − d, floored at 0: 0 for hosts.ramen's
-              // `in.t >= out.wstop`. With `>` the tuple exactly at the
-              // bound closes the window too, one tuple before ramen's
-              // strict compare would.
-              val delay = bound.flatMap(windowOffset(_, Set.empty))
-                .fold(fallbackDelay)(o => math.max(0.0, o - d))
-              typerDf = Some(src)
-              val tCol =
-                try compileExpr(tE, params, splitCols) finally typerDf = None
-              src1 = src.withColumn("_graft_evt",
-                timestamp_seconds(tCol.cast("double")))
-                .withWatermark("_graft_evt", s"$delay seconds")
-              streamBucket = Some((bi, d))
-              agg.groupBy.zipWithIndex.map { case (k, i) =>
-                if (i == bi)
-                  window(col("_graft_evt"), s"$d seconds").as(s"_gk$i")
-                else compileExpr(k, params, splitCols).as(s"_gk$i")
-              }
+        val (src1, keys1) = bucket.fold((src, keys)) { b =>
+          import b.{d, isT}
+          val defs = named.map { case (e0, n0) => n0 -> e0 }.toMap
+          // The bound's constant distance from the window start
+          // TRUNCATE(MIN t, d): wstart → 0, wstop = wstart + d → d,
+          // wstart + 120 → 120. None when it is not a constant.
+          def windowOffset(e0: Expr, seen: Set[String]): Option[Double] = {
+            def num(x: Expr) = scala.util.Try(evalNum(x, params)).toOption
+            def viaDef(n0: String) =
+              if (seen(n0)) None
+              else defs.get(n0).flatMap(windowOffset(_, seen + n0))
+            e0 match {
+              case FunCall("truncate", Seq(AggCall("min", r, _, _), dE2))
+                  if isT(r) && num(dE2).contains(d) => Some(0.0)
+              case Binop("+", l0, r0) =>
+                windowOffset(l0, seen).flatMap(o => num(r0).map(o + _))
+              case Ref(Seq("out", n0)) => viaDef(n0)
+              case Ref(Seq(n0)) if !isT(e0) => viaDef(n0)
+              case _ => None
             }
           }
+          // The window [w, w + d) commits on the first tuple at or past
+          // w + offset; Spark closes it once the watermark, max event
+          // time minus the delay, reaches its end w + d. So the delay
+          // is offset − d, floored at 0: 0 for hosts.ramen's
+          // `in.t >= out.wstop`. With `>` the tuple exactly at the
+          // bound closes the window too, one tuple before ramen's
+          // strict compare would.
+          val delay = b.bound.flatMap(windowOffset(_, Set.empty))
+            .fold(b.fallbackDelay)(o => math.max(0.0, o - d))
+          typerDf = Some(src)
+          val tCol =
+            try compileExpr(b.tE, params, splitCols) finally typerDf = None
+          (src.withColumn("_graft_evt", timestamp_seconds(tCol.cast("double")))
+            .withWatermark("_graft_evt", s"$delay seconds"),
+            keys.updated(b.index,
+              window(col("_graft_evt"), s"$d seconds").as(s"_gk${b.index}")))
+        }
         val aggCols = named.collect {
           case (e, n) if hasAgg(e) => compileExpr(e, params, splitCols).as(n)
           case (e, n) if !keyIdx.contains(e) =>
             last(compileExpr(e, params, splitCols)).as(n)
         }
-        val keys1 = streamKeys.getOrElse(keys)
         val aggDf =
           if (aggCols.nonEmpty) src1.groupBy(keys1: _*).agg(aggCols.head, aggCols.tail: _*)
           else src1.groupBy(keys1: _*).agg(count(lit(1)).as("_graft_cnt"))
@@ -3693,9 +3551,9 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
           keyIdx.get(e) match {
             // a field equal to the streaming bucket key reads the numeric
             // bucket back out of the window struct, matching batch
-            case Some(i) if streamBucket.exists(_._1 == i) =>
+            case Some(i) if bucket.exists(_.index == i) =>
               floor(col(s"_gk$i").getField("start").cast("double") /
-                streamBucket.get._2).as(n)
+                bucket.get.d).as(n)
             case Some(i) => col(s"_gk$i").as(n)
             case None => col(n)
           } }: _*)
@@ -4202,6 +4060,23 @@ object RaqlCompiler {
     * read contexts; the SELECT path joins and has no cap. */
   val GlobalMapLiteralCap = 100000
 
+  /** A streaming time-bucket COMMIT's window+watermark plan (see
+    * `streamTimeBucket`): group key `index` is the bucket `tE // d`;
+    * `bound` is the commit's time bound (None without a COMMIT), and
+    * `fallbackDelay` the watermark delay when the bound's distance from
+    * the window start is not a constant. */
+  private[raql] final case class TimeBucket(index: Int, tE: Expr,
+      d: Double, bound: Option[Expr], fallbackDelay: Double) {
+    private def refName(e: Expr): Option[String] = e match {
+      case Ref(Seq("in", n)) => Some(n)
+      case Ref(Seq(n)) => Some(n)
+      case _ => None
+    }
+    private val tName = refName(tE)
+    /** Does `r` name the bucket's time field (bare or `in.`)? */
+    def isT(r: Expr): Boolean = tName.isDefined && refName(r) == tName
+  }
+
   /** Does `df` provably plan ONE partition? Read from the planner's
     * physical plan (no job runs): a narrow Project/Filter view over a node
     * that declares one output partition (`coalesce(1)` — every RaQL CSV,
@@ -4270,94 +4145,6 @@ private[raql] object CommitCond {
     * commit conditions: the harness threads the last committed row into
     * both emit and the condition closures. */
   final case class CPrev(i: Int) extends Node
-}
-
-/** Serializable fold runtime for the streaming count-commit translation
-  * (see RaqlCompiler.compileStreamingCountCommit). One slot per SELECT
-  * field plus a trailing row counter (the commit's `sum 1`); `kinds(i)` is
-  * "pass" (group-last) or the aggregate name; `integralSlot(i)` picks the
-  * Long vs Double sum fold. Kept top-level so CommitHarness closures
-  * capture ONLY this value, never the compiler.
-  */
-private[raql] final class CountCommitRt(
-    kinds: Array[String], integralSlot: Array[Boolean], n: Int,
-    schema: org.apache.spark.sql.types.StructType, k: Long)
-    extends Serializable {
-  import org.apache.spark.sql.Row
-
-  private def numD(a: Any): Double = a match {
-    case x: java.lang.Number => x.doubleValue
-    case b: java.lang.Boolean => if (b) 1.0 else 0.0
-    case other => other.toString.toDouble
-  }
-  private def numL(a: Any): Long = a match {
-    case null => 0L
-    case x: java.lang.Number => x.longValue
-    case b: java.lang.Boolean => if (b) 1L else 0L
-    case other => other.toString.toLong
-  }
-  private def cmp(a: Any, b: Any): Int = (a, b) match {
-    case (x: java.lang.Number, y: java.lang.Number) =>
-      java.lang.Double.compare(x.doubleValue, y.doubleValue)
-    case (x: Comparable[Any] @unchecked, y) => x.compareTo(y)
-    case _ => 0
-  }
-
-  def init(): Array[Any] = new Array[Any](n + 1)
-
-  def update(s: Array[Any], row: Row): Array[Any] = {
-    var i = 0
-    while (i < n) {
-      val v = if (row.isNullAt(i + 1)) null else row.get(i + 1)
-      kinds(i) match {
-        case "pass" => s(i) = v // Spark `last` semantics: nulls overwrite
-        case fn => if (v != null) fn match {
-          case "count" => v match {
-            case b: java.lang.Boolean => if (b) s(i) = numL(s(i)) + 1L
-            case _ => s(i) = numL(s(i)) + 1L
-          }
-          case "sum" =>
-            if (integralSlot(i))
-              s(i) = (if (s(i) == null) 0L else numL(s(i))) + numL(v)
-            else s(i) = (if (s(i) == null) 0.0 else numD(s(i))) + numD(v)
-          case "min" => if (s(i) == null || cmp(v, s(i)) < 0) s(i) = v
-          case "max" => if (s(i) == null || cmp(v, s(i)) > 0) s(i) = v
-          case "avg" =>
-            val acc =
-              if (s(i) == null) Array[Any](0.0, 0L)
-              else s(i).asInstanceOf[Array[Any]]
-            s(i) = Array[Any](acc(0).asInstanceOf[Double] + numD(v),
-              acc(1).asInstanceOf[Long] + 1L)
-          case "first" => if (s(i) == null) s(i) = v
-          case "last" => s(i) = v
-        }
-      }
-      i += 1
-    }
-    s(n) = numL(s(n)) + 1L
-    s
-  }
-
-  def commitAfter(s: Array[Any]): Boolean = numL(s(n)) >= k
-
-  def emit(s: Array[Any]): Row = {
-    val vals = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      vals(i) = kinds(i) match {
-        case "count" => numL(s(i))
-        case "avg" => s(i) match {
-          case null => null
-          case acc: Array[Any] =>
-            acc(0).asInstanceOf[Double] / acc(1).asInstanceOf[Long]
-        }
-        case _ => s(i)
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-      vals, schema)
-  }
 }
 
 /** Serializable fold runtime for the streaming ARBITRARY-expression commit

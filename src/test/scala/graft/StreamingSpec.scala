@@ -83,7 +83,8 @@ class StreamingSpec extends AnyFunSuite {
     // CodeGenLib_Skeletons.ml:814-876) over a live grouped stream: each
     // key emits a row every k tuples and flushes. Batch handles this via
     // the k-row tumbling rewrite; the streaming engine capability is the
-    // commit harness (the RaQL-text wiring stays a documented gap).
+    // commit harness (the RaQL text reaches it through the expression-
+    // commit translation, next test).
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
     val k = 3L
@@ -169,6 +170,71 @@ class StreamingSpec extends AnyFunSuite {
     // a: windows (1,2,3) and (4,5,6) committed, 7 pending; b: (10,20,30)
     val totals = streamed.map(_(2)).toSeq.asInstanceOf[Seq[Double]].sorted
     assert(totals == Seq(6.0, 15.0, 60.0), s"totals: $totals")
+  }
+
+  for (provider <- Seq("default", "rocksdb"))
+  test(s"ungrouped COMMIT AFTER SUM 1 = 3 streams the batch k-row windows ($provider state store)") {
+    withStateStore(provider) {
+    // the `=` spelling of the count-commit without GROUP BY: one global
+    // key in the harness; COUNT/MIN/FIRST/LAST fields fold there, and each
+    // closed window equals the batch k-row rewrite's over the same rows
+    implicit val sqlCtx = spark.sqlContext
+    val raql = """DEFINE q AS
+        FROM tables/ev
+        SELECT COUNT v AS n, MIN v AS vmin, FIRST user AS u0, LAST t AS tlast
+        COMMIT AFTER SUM 1 = 3;"""
+    val mem = MemoryStream[Ev]
+    val cs = new RaqlCompiler(spark, "/tmp")
+    cs.registerTable("tables/ev", mem.toDS().toDF())
+    RaqlParser.parseProgram(raql) match {
+      case Right(p) => cs.register("ug", p)
+      case Left(e) => fail(s"parse: $e")
+    }
+    val q = cs.compile("ug/q").writeStream.format("memory")
+      .queryName(s"ungrouped_cnt_$provider").outputMode("append").start()
+    val events = Seq(
+      Ev("a", 1, 5.0), Ev("b", 2, 3.0), Ev("c", 3, 4.0), Ev("b", 4, 9.0),
+      Ev("a", 5, 1.0), Ev("c", 6, 2.0), Ev("a", 7, 8.0), Ev("b", 8, 7.0))
+    // batches of 2, 3 and 3 rows: the first window spans two triggers
+    Seq(events.take(2), events.slice(2, 5), events.drop(5)).foreach { chunk =>
+      mem.addData(chunk: _*)
+      q.processAllAvailable()
+    }
+    val streamed = spark.table(s"ungrouped_cnt_$provider")
+      .select("n", "vmin", "u0", "tlast").collect().map(_.toSeq).toSet
+    q.stop()
+    val cb = new RaqlCompiler(spark, "/tmp")
+    cb.registerTable("tables/ev", events.toDF().coalesce(1))
+    RaqlParser.parseProgram(raql) match {
+      case Right(p) => cb.register("ugb", p)
+      case Left(e) => fail(s"parse: $e")
+    }
+    // batch emits the 2-row tail too; a stream keeps it pending
+    val batchClosed = cb.compile("ugb/q").filter(col("n") === 3)
+      .select("n", "vmin", "u0", "tlast").collect().map(_.toSeq).toSet
+    assert(streamed == batchClosed,
+      s"stream/batch disagree:\n  stream=$streamed\n  batch=$batchClosed")
+    assert(streamed == Set(Seq(3L, 3.0, "a", 3L), Seq(3L, 1.0, "b", 6L)), streamed)
+    }
+  }
+
+  test("SUM GLOBALLY under GROUP BY on a streaming count-commit is a typed error") {
+    // a GLOBALLY aggregate sums across groups; the harness keeps per-key
+    // state only, so it must refuse rather than sum per group
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val c = new RaqlCompiler(spark, "/tmp")
+    c.registerTable("tables/ev", mem.toDS().toDF())
+    RaqlParser.parseProgram("""DEFINE q AS
+        FROM tables/ev
+        SELECT user, SUM GLOBALLY v AS gtotal, SUM 1 AS n
+        GROUP BY user
+        COMMIT AFTER SUM 1 >= 3;""") match {
+      case Right(p) => c.register("gl", p)
+      case Left(e) => fail(s"parse: $e")
+    }
+    val e = intercept[UnsupportedOperationException](c.compile("gl/q"))
+    assert(e.getMessage.contains("GLOBALLY"), e.getMessage)
   }
 
   test("StreamBench harness produces a sane sustained-throughput measurement") {
@@ -896,6 +962,37 @@ class StreamingSpec extends AnyFunSuite {
         q.processAllAvailable()
         assert(rows.isEmpty, s"window emitted before its wstop, after t = $t: $rows")
       }
+      mem.addData(Ev("a", 60, 1.0))
+      q.processAllAvailable()
+      assert(rows == Seq((0.0, 60.0, "a", 3L)), rows)
+    } finally q.stop()
+  }
+
+  test("a bare alias in a time-bucket commit bound takes the window route of its out. spelling") {
+    // `ws + 60 AS we` with a bare `ws` names the out field, as `out.ws +
+    // 60` does: the route is read from the alias-substituted fields, so
+    // this spelling also compiles to a 0 s watermark and emits [0,60) once
+    // t = 60 is processed (the harness cannot fold TRUNCATE(MIN t, 60))
+    import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+    implicit val sqlCtx = spark.sqlContext
+    val bare = """DEFINE q AS
+        FROM tables/ev
+        SELECT TRUNCATE(MIN t, 60) AS ws, ws + 60 AS we, user, SUM 1 AS n
+        GROUP BY user, t // 60
+        COMMIT AFTER in.t >= out.we;"""
+    val mem = MemoryStream[Ev]
+    val sdf = compileOverEv(mem, "bare", bare)
+    assert(sdf.queryExecution.analyzed.collect {
+      case w: EventTimeWatermark => EventTimeWatermark.getDelayMs(w.delay)
+    } == Seq(0L), sdf.queryExecution.analyzed)
+    val q = sdf.writeStream.format("memory").queryName("commitpoint_bare")
+      .outputMode("append").start()
+    def rows = spark.table("commitpoint_bare").select("ws", "we", "user", "n")
+      .as[(Double, Double, String, Long)].collect().toSeq
+    try {
+      mem.addData(Ev("a", 10, 1.0), Ev("a", 20, 1.0), Ev("a", 59, 1.0))
+      q.processAllAvailable()
+      assert(rows.isEmpty, s"window emitted before its end: $rows")
       mem.addData(Ev("a", 60, 1.0))
       q.processAllAvailable()
       assert(rows == Seq((0.0, 60.0, "a", 3L)), rows)
@@ -2089,5 +2186,86 @@ class StreamingSpec extends AnyFunSuite {
       .collect().sortBy(r => (r._1, r._2)).toSeq
     assert(rows == Seq((0.0, "a", 3L, 6.0), (0.0, "b", 1L, 1.0), (60.0, "a", 1L, 4.0)),
       rows)
+  }
+
+  test("a RocksDB expression-commit checkpoint written without the changelog restarts with it: output and state equal an uninterrupted run") {
+    withStateStore("rocksdb") {
+    import java.nio.file.Files
+    val key = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    val sessionValue = spark.conf.getOption(key)
+    val batches = Seq(
+      Seq(("a", 3.0), ("a", 4.0), ("b", 10.0), ("c", 1.0)),
+      Seq(("a", 5.0), ("b", 2.0), ("c", 2.0)),
+      Seq(("a", 8.0), ("b", 9.0), ("c", 7.0), ("d", 1.0)))
+    /** One grouped expression-commit query over a JSON file source into a
+      * parquet sink, with its own input, output and checkpoint dirs. */
+    class Run(name: String) {
+      val in = Files.createTempDirectory(s"graft_cl_${name}_in")
+      val out = Files.createTempDirectory(s"graft_cl_${name}_out")
+      val ckpt = Files.createTempDirectory(s"graft_cl_${name}_ckpt")
+      private var fileNo = 0
+      def step(q: org.apache.spark.sql.streaming.StreamingQuery,
+          rows: Seq[(String, Double)]): Unit = {
+        fileNo += 1
+        val body = rows.map { case (u, v) => s"""{"user":"$u","v":$v}""" }
+        val tmp = Files.createTempFile("graft_cl_row", ".json")
+        Files.write(tmp, body.mkString("\n").getBytes("UTF-8"))
+        Files.move(tmp, in.resolve(f"part-$fileNo%03d.json"))
+        q.processAllAvailable()
+      }
+      def start(changelog: Boolean) = {
+        spark.conf.set(key, changelog.toString)
+        val c = new RaqlCompiler(spark, "/tmp")
+        c.registerTable("tables/ev", spark.readStream
+          .schema("user STRING, v DOUBLE").json(in.toString))
+        RaqlParser.parseProgram("""DEFINE q AS
+            FROM tables/ev
+            SELECT user, SUM v AS total, SUM 1 AS n
+            GROUP BY user
+            COMMIT AFTER out.total >= 10;""") match {
+          case Right(p) => c.register(s"cl_$name", p)
+          case Left(e) => fail(s"parse: $e")
+        }
+        c.compile(s"cl_$name/q").writeStream.format("parquet")
+          .outputMode("append").option("checkpointLocation", ckpt.toString)
+          .start(out.toString)
+      }
+      def output: Set[(String, Double, Long)] = spark.read.parquet(out.toString)
+        .select("user", "total", "n").as[(String, Double, Long)].collect().toSet
+      def state: Set[String] = spark.read.format("statestore").load(ckpt.toString)
+        .select(to_json(struct(col("key"), col("value")))).as[String]
+        .collect().toSet
+    }
+    def files(run: Run) = {
+      import scala.jdk.CollectionConverters._
+      val s = Files.walk(run.ckpt.resolve("state"))
+      try s.iterator().asScala.map(_.getFileName.toString).toSeq finally s.close()
+    }
+    val (whole, restarted, beforeRestart) =
+      try {
+        val whole = new Run("whole")
+        val q0 = whole.start(changelog = true)
+        try batches.foreach(whole.step(q0, _)) finally q0.stop()
+        val restarted = new Run("restart")
+        val q1 = restarted.start(changelog = false)
+        try batches.take(2).foreach(restarted.step(q1, _)) finally q1.stop()
+        val beforeRestart = files(restarted)
+        val q2 = restarted.start(changelog = true)
+        try restarted.step(q2, batches(2)) finally q2.stop()
+        (whole, restarted, beforeRestart)
+      } finally sessionValue.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // the first run wrote snapshots only; after the restart, changelogs
+    assert(beforeRestart.exists(_.endsWith(".zip")) &&
+      !beforeRestart.exists(_.endsWith(".changelog")), beforeRestart)
+    assert(files(restarted).exists(_.endsWith(".changelog")),
+      s"no changelog after the restart: ${files(restarted)}")
+    // c's window holds 1 + 2 from before the restart and closes on its 7
+    assert(restarted.output == Set(("a", 12.0, 3L), ("b", 10.0, 1L),
+      ("b", 11.0, 2L), ("c", 10.0, 3L)), restarted.output)
+    assert(restarted.output == whole.output)
+    assert(restarted.state.nonEmpty)
+    assert(restarted.state == whole.state,
+      s"state differs:\n  restarted=${restarted.state}\n  whole=${whole.state}")
+    }
   }
 }
