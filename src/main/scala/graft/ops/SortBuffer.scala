@@ -130,19 +130,10 @@ object SortBuffer {
       }
     // `sort.greatest` only matters when the UNTIL condition names it —
     // keep the mirror max-heap off the common path otherwise
-    val trackGreatest = until.exists { e =>
-      def refs(x: graft.raql.Ast.Expr): Boolean = {
-        import graft.raql.Ast._
-        x match {
-          case Ref(Seq("sort", "greatest", _)) => true
-          case Binop(_, l, r) => refs(l) || refs(r)
-          case Unop(_, y) => refs(y)
-          case FunCall(_, as) => as.exists(refs)
-          case _ => false
-        }
-      }
-      refs(e)
-    }
+    val trackGreatest = until.exists(_.exists {
+      case graft.raql.Ast.Ref(Seq("sort", "greatest", _)) => true
+      case _ => false
+    })
     val out = withKeys.mapPartitions { it =>
       // PriorityQueue is max-first: reverse for min-first emission
       val pq = mutable.PriorityQueue.empty[(Array[Any], Long, Row)](ord.reverse)

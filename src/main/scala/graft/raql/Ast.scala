@@ -7,7 +7,69 @@ package graft.raql
   */
 object Ast {
 
-  sealed trait Expr
+  /** An expression tree. Every pass that inspects or rewrites one goes
+    * through [[children]]/[[withChildren]] (the only per-constructor
+    * listing of sub-expressions) and the traversals built on them, after
+    * Catalyst's `TreeNode`: a pass states its special cases and leaves the
+    * descent to the generic fallback. */
+  sealed trait Expr {
+
+    /** Direct sub-expressions, in a fixed order: `Binop` left then right,
+      * `AggCall` operand then `extra`, `CaseExpr` each (cond, value) pair
+      * then `otherwise`. */
+    def children: Seq[Expr] = this match {
+      case Lit(_) | Ref(_) => Nil
+      case Unop(_, e) => Seq(e)
+      case Binop(_, l, r) => Seq(l, r)
+      case FunCall(_, args) => args
+      case AggCall(_, op, _, extra) => op +: extra
+      case PercentileCall(_, op) => Seq(op)
+      case CaseExpr(br, el) => br.flatMap { case (c, v) => Seq(c, v) } ++ el
+      case VectorLit(items) => items
+      case IsNull(e, _) => Seq(e)
+    }
+
+    /** This node with its [[children]] replaced by `cs` (same arity and
+      * order). */
+    def withChildren(cs: Seq[Expr]): Expr = this match {
+      case Lit(_) | Ref(_) => this
+      case u: Unop => u.copy(e = cs.head)
+      case b: Binop => b.copy(l = cs(0), r = cs(1))
+      case f: FunCall => f.copy(args = cs)
+      case a: AggCall => a.copy(operand = cs.head, extra = cs.tail)
+      case p: PercentileCall => p.copy(operand = cs.head)
+      case CaseExpr(br, el) =>
+        val pairs = cs.take(2 * br.length).grouped(2).map(p => (p(0), p(1)))
+        CaseExpr(pairs.toSeq, el.map(_ => cs.last))
+      case VectorLit(_) => VectorLit(cs)
+      case i: IsNull => i.copy(e = cs.head)
+    }
+
+    /** Pre-order rewrite: where `pf` is defined the node is replaced and
+      * the traversal does NOT descend into the replacement (a substitution
+      * like `start` → `TRUNCATE(start, 60)` must not apply again inside
+      * its own result); elsewhere the children are rewritten. */
+    def transform(pf: PartialFunction[Expr, Expr]): Expr =
+      pf.applyOrElse(this,
+        (e: Expr) => e.withChildren(e.children.map(_.transform(pf))))
+
+    /** Pre-order visit of this node and all its descendants. */
+    def foreach(f: Expr => Unit): Unit = {
+      f(this)
+      children.foreach(_.foreach(f))
+    }
+
+    /** Does `p` hold for this node or any descendant? */
+    def exists(p: Expr => Boolean): Boolean =
+      p(this) || children.exists(_.exists(p))
+
+    /** `pf` applied to every node it is defined at, in pre-order. */
+    def collect[B](pf: PartialFunction[Expr, B]): Seq[B] = {
+      val out = Seq.newBuilder[B]
+      foreach(e => pf.runWith(out += _)(e))
+      out.result()
+    }
+  }
 
   /** Literal; `typ` carries a cast-suffix when written as e.g. `0.1s`
     * (durations are plain float seconds in RaQL). */

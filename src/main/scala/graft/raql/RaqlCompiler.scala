@@ -235,23 +235,12 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
         .warn("graft: {}", msg)
   }
 
-  /** Does this expression contain an aggregate call (after unification)? */
   /** Aggregates whose state RESETS on commit-flush (plain aggregates, not
     * the window/scan functions like LAG or CHANGED whose one-deep state
     * effectively spans a flush boundary). */
-  private def hasPlainAgg(e: Expr): Boolean = e match {
-    case AggCall(fn, op, _, ex) =>
-      !windowFns(fn) || hasPlainAgg(op) || ex.exists(hasPlainAgg)
-    case PercentileCall(_, _) => true
-    case FunCall("histogram", _) => true
-    case Binop(_, l, r) => hasPlainAgg(l) || hasPlainAgg(r)
-    case Unop(_, x) => hasPlainAgg(x)
-    case FunCall(_, args) => args.exists(hasPlainAgg)
-    case CaseExpr(br, el) =>
-      br.exists { case (c, v) => hasPlainAgg(c) || hasPlainAgg(v) } ||
-        el.exists(hasPlainAgg)
-    case IsNull(x, _) => hasPlainAgg(x)
-    case VectorLit(items) => items.exists(hasPlainAgg)
+  private def hasPlainAgg(e: Expr): Boolean = e.exists {
+    case AggCall(fn, _, _, _) => !windowFns(fn)
+    case PercentileCall(_, _) | FunCall("histogram", _) => true
     case _ => false
   }
 
@@ -265,16 +254,10 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     case _ => None
   }
 
-  private def hasAgg(e: Expr): Boolean = e match {
+  /** Does this expression contain an aggregate call (after unification)? */
+  private def hasAgg(e: Expr): Boolean = e.exists {
     case AggCall(_, _, _, _) | PercentileCall(_, _) => true
     case FunCall("histogram", _) => true
-    case Binop(_, l, r) => hasAgg(l) || hasAgg(r)
-    case Unop(_, x) => hasAgg(x)
-    case FunCall(_, args) => args.exists(hasAgg)
-    case CaseExpr(br, el) =>
-      br.exists { case (c, v) => hasAgg(c) || hasAgg(v) } || el.exists(hasAgg)
-    case IsNull(x, _) => hasAgg(x)
-    case VectorLit(items) => items.exists(hasAgg)
     case _ => false
   }
 
@@ -300,20 +283,11 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     "fit_multi", "season_fit_multi", "smooth_damped_holt",
     "smooth_damped_holt_winter")
 
-  private def hasWindowFn(e: Expr): Boolean = e match {
-    case AggCall(fn, op, _, extra) =>
-      windowFns(fn) || hasWindowFn(op) || extra.exists(hasWindowFn)
+  private def hasWindowFn(e: Expr): Boolean = e.exists {
+    case AggCall(fn, _, _, _) => windowFns(fn)
     // previous.x / *_last_out.x feedback reads prior output: running mode
     case Ref(Seq("previous" | "local_last_out" | "global_last_out", _)) => true
-    case FunCall(fn, args) => windowFunCalls(fn) || args.exists(hasWindowFn)
-    case Binop(_, l, r) => hasWindowFn(l) || hasWindowFn(r)
-    case Unop(_, x) => hasWindowFn(x)
-    case CaseExpr(br, el) =>
-      br.exists { case (c, v) => hasWindowFn(c) || hasWindowFn(v) } ||
-        el.exists(hasWindowFn)
-    case IsNull(x, _) => hasWindowFn(x)
-    case VectorLit(items) => items.exists(hasWindowFn)
-    case PercentileCall(_, op) => hasWindowFn(op)
+    case FunCall(fn, _) => windowFunCalls(fn)
     case _ => false
   }
 
@@ -432,20 +406,6 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     ctx.df = ctx.df.withColumn(name, c)
     col(name)
   }
-
-  private def collectSplits(e: Expr, acc: scala.collection.mutable.ListBuffer[FunCall]): Unit =
-    e match {
-      case f @ FunCall("split", _) => acc += f
-      case Binop(_, l, r) => collectSplits(l, acc); collectSplits(r, acc)
-      case Unop(_, x) => collectSplits(x, acc)
-      case FunCall(_, args) => args.foreach(collectSplits(_, acc))
-      case CaseExpr(br, el) =>
-        br.foreach { case (c, v) => collectSplits(c, acc); collectSplits(v, acc) }
-        el.foreach(collectSplits(_, acc))
-      case IsNull(x, _) => collectSplits(x, acc)
-      case VectorLit(items) => items.foreach(collectSplits(_, acc))
-      case _ => ()
-    }
 
   /** Compile a scalar/aggregate expression to a Column. `splits` maps SPLIT
     * generator calls to their pre-exploded columns. */
@@ -638,42 +598,15 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
 
   /** Substitute `#start`/`#stop` event-time refs with the EVENT clause's
     * expressions (event_time.ramen; RamenEventTime.ml). */
-  private def substEvent(e: Expr, start: Expr, stop: Expr): Expr = {
-    def go(x: Expr): Expr = x match {
+  private def substEvent(e: Expr, start: Expr, stop: Expr): Expr =
+    e.transform {
       case Ref(Seq("#start")) => start
       case Ref(Seq("#stop")) => stop
-      case Binop(o, l, r) => Binop(o, go(l), go(r))
-      case Unop(o, y) => Unop(o, go(y))
-      case FunCall(n, as) => FunCall(n, as.map(go))
-      case AggCall(n, op, m, ex) => AggCall(n, go(op), m, ex.map(go))
-      case PercentileCall(ps, op) => PercentileCall(ps, go(op))
-      case CaseExpr(br, el) =>
-        CaseExpr(br.map { case (c, v) => (go(c), go(v)) }, el.map(go))
-      case IsNull(y, ng) => IsNull(go(y), ng)
-      case VectorLit(it) => VectorLit(it.map(go))
-      case other => other
     }
-    go(e)
-  }
 
   /** Substitute bare field refs per `env` (record-literal sibling fields). */
-  private def substRefs(e: Expr, env: Map[String, Expr]): Expr = {
-    if (env.isEmpty) return e
-    def go(x: Expr): Expr = x match {
-      case Ref(Seq(n)) if env.contains(n) => env(n)
-      case Binop(o, l, r) => Binop(o, go(l), go(r))
-      case Unop(o, y) => Unop(o, go(y))
-      case FunCall(n, as) => FunCall(n, as.map(go))
-      case AggCall(n, op, m, ex) => AggCall(n, go(op), m, ex.map(go))
-      case PercentileCall(ps, op) => PercentileCall(ps, go(op))
-      case CaseExpr(br, el) =>
-        CaseExpr(br.map { case (c, v) => (go(c), go(v)) }, el.map(go))
-      case IsNull(y, ng) => IsNull(go(y), ng)
-      case VectorLit(it) => VectorLit(it.map(go))
-      case other => other
-    }
-    go(e)
-  }
+  private def substRefs(e: Expr, env: Map[String, Expr]): Expr =
+    e.transform { case Ref(Seq(n)) if env.contains(n) => env(n) }
 
   /** The `n` / `d=` numeric modifiers attached by the parser. */
   private def modNum(mods: Set[String], key: String): Option[Double] =
@@ -2807,47 +2740,21 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
   /** Replace previous/local_last_out refs with a neutral literal — used
     * to ask "does this field have any window-fn-ness BESIDES previous
     * refs?" when deciding the streaming harness routing. */
-  private def stripPrevRefs(e: Expr): Expr = e match {
-    case Ref(Seq("previous" | "local_last_out", _)) => Lit(0L)
-    case Binop(o, l, r) => Binop(o, stripPrevRefs(l), stripPrevRefs(r))
-    case Unop(o, x) => Unop(o, stripPrevRefs(x))
-    case FunCall(f, as) => FunCall(f, as.map(stripPrevRefs))
-    case AggCall(f, op, m, ex) =>
-      AggCall(f, stripPrevRefs(op), m, ex.map(stripPrevRefs))
-    case PercentileCall(ps, op) => PercentileCall(ps, stripPrevRefs(op))
-    case CaseExpr(br, el) =>
-      CaseExpr(br.map { case (c0, v) => (stripPrevRefs(c0), stripPrevRefs(v)) },
-        el.map(stripPrevRefs))
-    case IsNull(x, ng) => IsNull(stripPrevRefs(x), ng)
-    case VectorLit(it) => VectorLit(it.map(stripPrevRefs))
-    case other => other
-  }
+  private def stripPrevRefs(e: Expr): Expr =
+    e.transform { case Ref(Seq("previous" | "local_last_out", _)) => Lit(0L) }
 
   /** `global_last_out.x` → `local_last_out.x`: on an UNGROUPED stream the
     * two coincide (a single global group — the reference's one worker per
     * function), letting the expr-commit harness serve the ref from the
     * last committed row. */
-  private def substGlobalLastOut(e: Expr): Expr = e match {
+  private def substGlobalLastOut(e: Expr): Expr = e.transform {
     case Ref(Seq("global_last_out", rest @ _*)) =>
       Ref("local_last_out" +: rest.toSeq)
-    case Binop(o, l, r) =>
-      Binop(o, substGlobalLastOut(l), substGlobalLastOut(r))
-    case Unop(o, x) => Unop(o, substGlobalLastOut(x))
-    case FunCall(f, as) => FunCall(f, as.map(substGlobalLastOut))
-    case AggCall(f, op, m, ex) =>
-      AggCall(f, substGlobalLastOut(op), m, ex.map(substGlobalLastOut))
-    case PercentileCall(ps, op) => PercentileCall(ps, substGlobalLastOut(op))
-    case CaseExpr(br, el) =>
-      CaseExpr(br.map { case (c, v) =>
-        (substGlobalLastOut(c), substGlobalLastOut(v)) },
-        el.map(substGlobalLastOut))
-    case IsNull(x, ng) => IsNull(substGlobalLastOut(x), ng)
-    case VectorLit(it) => VectorLit(it.map(substGlobalLastOut))
-    case other => other
   }
-  /** Structural-equality detection: the substitution touched the tree iff
-    * a global_last_out ref is present. */
-  private def hasGlobalLastOut(e: Expr): Boolean = substGlobalLastOut(e) != e
+  private def hasGlobalLastOut(e: Expr): Boolean = e.exists {
+    case Ref(Seq("global_last_out", _*)) => true
+    case _ => false
+  }
 
   /** End-of-input commit semantics (explicit COMMIT clauses, GROUP BY):
     * the original batch translation. */
@@ -2872,28 +2779,15 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     // word_split.ramen f3): tag each with a unique ordinal so identical
     // calls get separate explodes
     var splitTag = -1
-    def tagSplits(e: Expr): Expr = e match {
+    val fields = fields0.map(f => f.copy(expr = f.expr.transform {
       case FunCall("split", Seq(a, b)) =>
         splitTag += 1; FunCall("split", Seq(a, b, Lit(splitTag.toLong)))
-      case Binop(o, l, r) => Binop(o, tagSplits(l), tagSplits(r))
-      case Unop(o, y) => Unop(o, tagSplits(y))
-      case FunCall(n, as) => FunCall(n, as.map(tagSplits))
-      case AggCall(n, op, m, ex) => AggCall(n, tagSplits(op), m, ex.map(tagSplits))
-      case PercentileCall(ps, op) => PercentileCall(ps, tagSplits(op))
-      case CaseExpr(br, el) =>
-        CaseExpr(br.map { case (c0, v) => (tagSplits(c0), tagSplits(v)) },
-          el.map(tagSplits))
-      case IsNull(y, ng) => IsNull(tagSplits(y), ng)
-      case VectorLit(it) => VectorLit(it.map(tagSplits))
-      case other => other
-    }
-    val fields = fields0.map(f => f.copy(expr = tagSplits(f.expr)))
+    }))
     // SPLIT generators: explode each occurrence, cartesian when several
-    val splitBuf = scala.collection.mutable.ListBuffer.empty[FunCall]
-    fields.foreach(f => collectSplits(f.expr, splitBuf))
+    val splitCalls = fields.flatMap(_.expr.collect { case f @ FunCall("split", _) => f })
     var src = filtered
     var splitCols = Map.empty[FunCall, Column]
-    splitBuf.toList.distinct.zipWithIndex.foreach { case (fc, i) =>
+    splitCalls.distinct.zipWithIndex.foreach { case (fc, i) =>
       val FunCall(_, sepE +: strE +: _) = fc: @unchecked
       val sepLit = sepE match {
         case Lit(s: String) => s
@@ -2916,7 +2810,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     // expression, not a column that only exists post-aggregation.
     val aliasMap = scala.collection.mutable.Map.empty[String, Expr]
     val outMap = scala.collection.mutable.Map.empty[String, Expr]
-    def subAlias(x: Expr): Expr = x match {
+    def subAlias(x: Expr): Expr = x.transform {
       case Ref(Seq(nm)) if aliasMap.contains(nm) => aliasMap(nm)
       // `out.x` names the output tuple being built: for an already-defined
       // field it is that field's expression — INCLUDING aggregate fields
@@ -2925,17 +2819,6 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
       // `src/RamenOperation.ml:735-775`). Bare refs keep preferring the
       // input column; only the explicit out. prefix reaches aggregates.
       case Ref(Seq("out", nm)) if outMap.contains(nm) => outMap(nm)
-      case Binop(o, l, r) => Binop(o, subAlias(l), subAlias(r))
-      case Unop(o, y) => Unop(o, subAlias(y))
-      case FunCall(f, as) => FunCall(f, as.map(subAlias))
-      case AggCall(f, op, m, ex) => AggCall(f, subAlias(op), m, ex.map(subAlias))
-      case PercentileCall(ps, op) => PercentileCall(ps, subAlias(op))
-      case CaseExpr(br, el) =>
-        CaseExpr(br.map { case (c0, v) => (subAlias(c0), subAlias(v)) },
-          el.map(subAlias))
-      case IsNull(y, ng) => IsNull(subAlias(y), ng)
-      case VectorLit(it) => VectorLit(it.map(subAlias))
-      case other => other
     }
     val named1 = named0.map { case (e, n) =>
       val e2 = subAlias(e)
@@ -2952,23 +2835,17 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     // driver.
     val mapAdds = scala.collection.mutable.ListBuffer.empty[FunCall]
     val mapReads = scala.collection.mutable.ListBuffer.empty[FunCall]
-    def scanGlobals(x: Expr): Unit = x match {
-      case f @ FunCall("mapadd" | "mapset", Seq(Ref(Seq(g)), k, v))
-          if activeGlobals.contains(g) =>
-        scanGlobals(k); scanGlobals(v); mapAdds += f
-      case f @ FunCall("get", Seq(kE, Ref(Seq(g)))) if activeGlobals.contains(g) =>
-        scanGlobals(kE); mapReads += f
-      case Binop(_, l, r) => scanGlobals(l); scanGlobals(r)
-      case Unop(_, y) => scanGlobals(y)
-      case FunCall(_, as) => as.foreach(scanGlobals)
-      case AggCall(_, op, _, ex) => scanGlobals(op); ex.foreach(scanGlobals)
-      case PercentileCall(_, op) => scanGlobals(op)
-      case CaseExpr(br, el) =>
-        br.foreach { case (c0, v) => scanGlobals(c0); scanGlobals(v) }
-        el.foreach(scanGlobals)
-      case IsNull(y, _) => scanGlobals(y)
-      case VectorLit(it) => it.foreach(scanGlobals)
-      case _ => ()
+    // post-order: an access nested in a MAPADD's key or value is
+    // resolved before the MAPADD that reads it
+    def scanGlobals(x: Expr): Unit = {
+      x.children.foreach(scanGlobals)
+      x match {
+        case f @ FunCall("mapadd" | "mapset", Seq(Ref(Seq(g)), _, _))
+            if activeGlobals.contains(g) => mapAdds += f
+        case f @ FunCall("get", Seq(_, Ref(Seq(g)))) if activeGlobals.contains(g) =>
+          mapReads += f
+        case _ => ()
+      }
     }
     named1.foreach { case (e, _) => scanGlobals(e) }
     mapAdds.toList.distinct.foreach { fc =>
@@ -3006,19 +2883,12 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     // the two-phase ungrouped machinery below, tuples.ramen f1/f2 — where
     // k equals the whole input anyway, so end-of-input commit is the same)
     val aggAliases = named.collect { case (e, n) if hasAgg(e) => n }.toSet
+    // an aggregate's operand reads input rows, where a bare name is an
+    // input column: only a nested aggregate disqualifies it
     def countWindowable(e: Expr): Boolean = e match {
       case Ref(Seq(n)) => !aggAliases(n)
-      case AggCall(_, op, _, ex) => !hasAgg(op) && !ex.exists(hasAgg)
-      case PercentileCall(_, op) => !hasAgg(op)
-      case Binop(_, l, r) => countWindowable(l) && countWindowable(r)
-      case Unop(_, y) => countWindowable(y)
-      case FunCall(_, as) => as.forall(countWindowable)
-      case CaseExpr(br, el) =>
-        br.forall { case (c0, v) => countWindowable(c0) && countWindowable(v) } &&
-          el.forall(countWindowable)
-      case IsNull(y, _) => countWindowable(y)
-      case VectorLit(it) => it.forall(countWindowable)
-      case _ => true
+      case _: AggCall | _: PercentileCall => !e.children.exists(hasAgg)
+      case _ => e.children.forall(countWindowable)
     }
     // the k-row tumbling rewrite only models plain COMMIT-AFTER-and-flush:
     // BEFORE shrinks the window (condition precedes the tuple) and KEEP
@@ -3168,16 +3038,8 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     // subtrees take group-last semantics (one "pass" slot), decomposable
     // aggregates fold in the state store, arithmetic combines at emit
     val outIdx: Map[String, Int] = named.map(_._2).zipWithIndex.toMap
-    def hasPrev(e: Expr): Boolean = e match {
+    def hasPrev(e: Expr): Boolean = e.exists {
       case Ref(Seq("previous" | "local_last_out", _)) => true
-      case Binop(_, l, r) => hasPrev(l) || hasPrev(r)
-      case Unop(_, x) => hasPrev(x)
-      case FunCall(_, as) => as.exists(hasPrev)
-      case AggCall(_, op, _, ex) => hasPrev(op) || ex.exists(hasPrev)
-      case CaseExpr(br, el) =>
-        br.exists { case (c0, v) => hasPrev(c0) || hasPrev(v) } ||
-          el.exists(hasPrev)
-      case IsNull(x, _) => hasPrev(x)
       case _ => false
     }
     def buildField(e: Expr): Node = e match {
@@ -3223,21 +3085,15 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
       case Ref(Seq("in", n)) => srcCols(n)
       case Ref(Seq(n)) => srcCols(n)
       case Ref(_) => false
-      case Lit(_) => true
-      case Binop(_, l, r) => inOnly(l) && inOnly(r)
-      case Unop(_, x) => inOnly(x)
-      case FunCall(_, as) => as.forall(inOnly)
-      case CaseExpr(br, el) =>
-        br.forall { case (c0, v) => inOnly(c0) && inOnly(v) } &&
-          el.forall(inOnly)
-      case IsNull(x, _) => inOnly(x)
-      case _ => false
+      case _: AggCall | _: PercentileCall => false
+      case _ => e.children.forall(inOnly)
     }
     def buildCond(e: Expr): Node = e match {
+      // a literal is a constant node, not a projected input column
+      case Lit(v) => CLit(v)
       // a fully-stateless subtree over in-fields evaluates in the
       // projection (one codegen'd column), not the interpreter
       case e2 if !hasAgg(e2) && inOnly(e2) => mkIn(e2)
-      case Lit(v) => CLit(v)
       case Ref(Seq("out", nm)) => outIdx.get(nm).map(fieldNodes.apply).getOrElse(
         unsupported(s"commit condition reads out.$nm which is not a SELECT field"))
       case Ref(Seq(nm)) if outIdx.contains(nm) => fieldNodes(outIdx(nm))
@@ -3388,20 +3244,29 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
 
   /** The one place that recognises the streaming time-bucket COMMIT
     * shape. Some(plan) when `named` (alias-substituted) and `agg` fit the
-    * window+watermark translation: a `t // d` group key with a constant
-    * divisor AND a commit condition the lateness extraction understands
-    * (absent, or time-shaped `in.t >[=] time-shaped-base [+ slack]` with
-    * the base an out field built from TRUNCATE/MIN of the same t). None
+    * window+watermark translation: a `t // d` (or `TRUNCATE(t, d) // d`)
+    * group key with a constant divisor AND a commit condition the
+    * lateness extraction understands (absent, or time-shaped
+    * `in.t >[=] time-shaped-base [+ slack]` with the base an out field
+    * built from TRUNCATE/MIN of the same t). None
     * otherwise: a streaming COMMIT then takes the expression-commit
     * harness. A non-time commit (`COMMIT AFTER in.t > out.n + 120` with
     * n = SUM 1) must NOT become event-time windowing with an unrelated
     * lateness, so it answers None too. */
   private def streamTimeBucket(agg: Aggregate, params: Map[String, Expr],
       named: Seq[(Expr, String)]): Option[RaqlCompiler.TimeBucket] = {
+    def num(x: Expr) = scala.util.Try(evalNum(x, params)).toOption
     agg.groupBy.zipWithIndex.collectFirst {
       case (Binop("//", tE, dE), i) => (tE, dE, i)
     }.flatMap { case (tE, dE, i) =>
-      scala.util.Try(evalNum(dE, params)).toOption.map(d => (tE, d, i))
+      num(dE).map(d => (tE, d, i))
+    }.map {
+      // `TRUNCATE(t, d) // d` is the bucket `t // d` (an alias
+      // `TRUNCATE(t, d) AS t` substituted into `GROUP BY t // d`,
+      // security.ramen)
+      case (FunCall("truncate", Seq(t, d2)), d, i) if num(d2).contains(d) =>
+        (t, d, i)
+      case other => other
     }.flatMap { case (tE, d, bi) =>
       val plan = RaqlCompiler.TimeBucket(bi, tE, d, None, d)
       import plan.isT
@@ -3439,22 +3304,11 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
   private def subAggAliases(named: Seq[(Expr, String)], inputCols: Set[String],
       acc: scala.collection.mutable.Map[String, Expr]): Seq[(Expr, String)] =
     named.map { case (e, n) =>
-      def sub(x: Expr): Expr = x match {
+      val e2 = e.transform {
         case Ref(Seq(nm)) if acc.contains(nm) && !inputCols.contains(nm) =>
           acc(nm)
         case Ref(Seq("out", nm)) if acc.contains(nm) => acc(nm)
-        case Binop(o, l, r) => Binop(o, sub(l), sub(r))
-        case Unop(o, y) => Unop(o, sub(y))
-        case FunCall(f, as) => FunCall(f, as.map(sub))
-        case AggCall(f, op, m, ex) => AggCall(f, sub(op), m, ex.map(sub))
-        case PercentileCall(ps, op) => PercentileCall(ps, sub(op))
-        case CaseExpr(br, el) =>
-          CaseExpr(br.map { case (c0, v) => (sub(c0), sub(v)) }, el.map(sub))
-        case IsNull(y, ng) => IsNull(sub(y), ng)
-        case VectorLit(it) => VectorLit(it.map(sub))
-        case other => other
       }
-      val e2 = sub(e)
       if (hasAgg(e2)) acc(n) = e2
       (e2, n)
     }
@@ -3514,6 +3368,10 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
               else defs.get(n0).flatMap(windowOffset(_, seen + n0))
             e0 match {
               case FunCall("truncate", Seq(AggCall("min", r, _, _), dE2))
+                  if isT(r) && num(dE2).contains(d) => Some(0.0)
+              // inside the t // d bucket TRUNCATE(t, d) equals
+              // TRUNCATE(MIN t, d)
+              case FunCall("truncate", Seq(r, dE2))
                   if isT(r) && num(dE2).contains(d) => Some(0.0)
               case Binop("+", l0, r0) =>
                 windowOffset(l0, seen).flatMap(o => num(r0).map(o + _))
@@ -3576,7 +3434,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
           case AggCall("sum", AggCall("distinct", inner, _, _), _, _) => inner
           case AggCall(_, op, _, _) => op
         }
-        def rewriteNested(e: Expr): Expr = e match {
+        def rewriteNested(e: Expr): Expr = e.transform {
           case a @ AggCall(fn, op, mods, extra) if hasAgg(effectiveOperand(a)) =>
             val seqName = "_graft_seq"
             if (!src2.columns.contains(seqName))
@@ -3589,37 +3447,17 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
             val name = s"_graft_n${src2.columns.length}"
             src2 = src2.withColumn(name, c)
             AggCall(fn, Ref(Seq(name)), mods, extra)
-          case Binop(o, l, r) => Binop(o, rewriteNested(l), rewriteNested(r))
-          case Unop(o, x) => Unop(o, rewriteNested(x))
-          case FunCall(f, as) => FunCall(f, as.map(rewriteNested))
-          case CaseExpr(br, el) =>
-            CaseExpr(br.map { case (c0, v) => (rewriteNested(c0), rewriteNested(v)) },
-              el.map(rewriteNested))
-          case IsNull(x, neg) => IsNull(rewriteNested(x), neg)
-          case other => other
+          // an aggregate over plain state is compiled as written, its
+          // extra operands (TOP … BY w) included
+          case a: AggCall => a
         }
         val rewritten = named.map { case (e, n) => (rewriteNested(e), n) }
         // Non-aggregate fields: if they read input columns they take the
         // LAST row's value (reference semantics — fun_with_funcs
         // `_co2_per_hp`); if they reference aggregate output aliases
         // (`max_n + 1`) they compute after the aggregation.
-        def simpleRefs(e: Expr): Seq[String] = e match {
-          case Ref(Seq(n)) => Seq(n)
-          case Ref(_) => Nil
-          case Binop(_, l, r) => simpleRefs(l) ++ simpleRefs(r)
-          case Unop(_, x) => simpleRefs(x)
-          case FunCall(_, as) => as.flatMap(simpleRefs)
-          case AggCall(_, op, _, ex) => simpleRefs(op) ++ ex.flatMap(simpleRefs)
-          case PercentileCall(_, op) => simpleRefs(op)
-          case CaseExpr(br, el) =>
-            br.flatMap { case (c0, v) => simpleRefs(c0) ++ simpleRefs(v) } ++
-              el.toSeq.flatMap(simpleRefs)
-          case IsNull(x, _) => simpleRefs(x)
-          case VectorLit(it) => it.flatMap(simpleRefs)
-          case _ => Nil
-        }
         def inputOnly(e: Expr): Boolean =
-          simpleRefs(e).forall(src2.columns.contains)
+          e.collect { case Ref(Seq(n)) => n }.forall(src2.columns.contains)
         val aggCols = rewritten.collect {
           case (e, n) if hasAgg(e) => compileExpr(e, params, splitCols).as(n)
           case (e, n) if inputOnly(e) =>
@@ -3673,14 +3511,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
         ok = false
       case AggCall(_, _, _, _) | PercentileCall(_, _) => ok = false
       case FunCall(f, _) if windowFunCalls(f) || f == "histogram" => ok = false
-      case FunCall(_, as) => as.foreach(walk)
-      case Binop(_, l, r) => walk(l); walk(r)
-      case Unop(_, y) => walk(y)
-      case CaseExpr(br, el) =>
-        br.foreach { case (c0, v) => walk(c0); walk(v) }; el.foreach(walk)
-      case IsNull(y, _) => walk(y)
-      case VectorLit(it) => it.foreach(walk)
-      case _ => ()
+      case _ => e.children.foreach(walk)
     }
     // a non-constant window argument (evalNum throws) fails the gate, not
     // the compile — the global-window path handles whatever this can't
@@ -3706,14 +3537,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
         ok = false
       case AggCall(_, _, _, _) | PercentileCall(_, _) => ok = false
       case FunCall(f, _) if windowFunCalls(f) || f == "histogram" => ok = false
-      case FunCall(_, as) => as.foreach(walk)
-      case Binop(_, l, r) => walk(l); walk(r)
-      case Unop(_, y) => walk(y)
-      case CaseExpr(br, el) =>
-        br.foreach { case (c0, v) => walk(c0); walk(v) }; el.foreach(walk)
-      case IsNull(y, _) => walk(y)
-      case VectorLit(it) => it.foreach(walk)
-      case _ => ()
+      case _ => e.children.foreach(walk)
     }
     es.foreach(walk)
     if (ok && any && maxD > 0.0) Some(maxD) else None
@@ -3975,18 +3799,9 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
         runCtx.get.df = df
       }
       else agg.commitCond.foreach { cc =>
-        def refsPlainAgg(e: Expr): Boolean = e match {
+        def refsPlainAgg(e: Expr): Boolean = e.exists {
           case Ref(Seq("out", n)) => outDefs.get(n).exists(hasPlainAgg)
           case Ref(Seq(n)) => outDefs.get(n).exists(hasPlainAgg)
-          case Binop(_, l, r) => refsPlainAgg(l) || refsPlainAgg(r)
-          case Unop(_, y) => refsPlainAgg(y)
-          case FunCall(_, as) => as.exists(refsPlainAgg)
-          case AggCall(_, op, _, ex) => refsPlainAgg(op) || ex.exists(refsPlainAgg)
-          case CaseExpr(br, el) =>
-            br.exists { case (c0, v) => refsPlainAgg(c0) || refsPlainAgg(v) } ||
-              el.exists(refsPlainAgg)
-          case IsNull(y, _) => refsPlainAgg(y)
-          case VectorLit(it) => it.exists(refsPlainAgg)
           case _ => false
         }
         val origWindow = seqWindow()
@@ -4009,21 +3824,10 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
           // recompile the reset aggregates AND everything downstream of
           // them (a field reading a recompiled alias must see the
           // segmented value, not the stale continuous column)
-          def refsOf(e: Expr): Set[String] = e match {
-            case Ref(Seq(n0)) => Set(n0)
-            case Ref(Seq("out", n0)) => Set(n0)
-            case Binop(_, l, r) => refsOf(l) ++ refsOf(r)
-            case Unop(_, y) => refsOf(y)
-            case FunCall(_, as) => as.flatMap(refsOf).toSet
-            case AggCall(_, op, _, ex) => refsOf(op) ++ ex.flatMap(refsOf)
-            case PercentileCall(_, op) => refsOf(op)
-            case CaseExpr(br, el) =>
-              br.flatMap { case (c0, v) => refsOf(c0) ++ refsOf(v) }.toSet ++
-                el.toSeq.flatMap(refsOf)
-            case IsNull(y, _) => refsOf(y)
-            case VectorLit(it) => it.flatMap(refsOf).toSet
-            case _ => Set.empty
-          }
+          def refsOf(e: Expr): Set[String] = e.collect {
+            case Ref(Seq(n0)) => n0
+            case Ref(Seq("out", n0)) => n0
+          }.toSet
           var toRedo = fields.zip(outNames)
             .collect { case (f, n) if hasPlainAgg(f.expr) => n }.toSet
           var grow = true

@@ -400,6 +400,37 @@ class RaqlSpec extends AnyFunSuite {
     assert(got == Map("5" -> "v5", "999999" -> "v999999", "nope" -> null))
   }
 
+  /** Compiles the inline program `src` as `p`, reading table `t` from `df`. */
+  private def compileInline(src: String, df: org.apache.spark.sql.DataFrame,
+      func: String): org.apache.spark.sql.DataFrame = {
+    val c = RaqlCompiler.fromSources(spark, funcDir, Map("p" -> src))
+      .fold(e => fail(s"parse: $e"), identity)
+    c.registerTable("t", df)
+    c.compile(s"p/$func")
+  }
+
+  test("a SPLIT inside an aggregate explodes before the aggregate") {
+    import spark.implicits._
+    val words = Seq(("x", "a bb ccc"), ("x", "dddd eeeee"), ("y", "f"))
+      .toDF("k", "s").coalesce(1)
+    def perKey(field: String) = compileInline(s"""DEFINE q AS FROM t
+        SELECT k, $field AS v GROUP BY k;""", words, "q").collect()
+      .map(r => r.getString(0) -> r.getAs[Number](1).doubleValue).toMap
+    assert(perKey("""COUNT (split(" ", s))""") == Map("x" -> 5.0, "y" -> 1.0))
+    assert(perKey("""50th percentile (length (split(" ", s)))""") ==
+      Map("x" -> 3.0, "y" -> 1.0))
+  }
+
+  test("a nested aggregate inside a vector literal takes the nested-state rewrite") {
+    // tuples.ramen f2's `max (1 + max n)`, as the item of a vector: the
+    // inner max runs per row (1, 2, 3), the outer one folds 1 + it
+    import spark.implicits._
+    val df = compileInline("""DEFINE q AS FROM t
+        SELECT [max (1 + max n)] AS v COMMIT AFTER sum 1 = 3;""",
+      Seq(1L, 2L, 3L).toDF("n").coalesce(1), "q")
+    assert(df.collect().map(_.getSeq[Long](0)).toSeq == Seq(Seq(4L)))
+  }
+
   test("global maps scale: 1M-entry map read in WHERE joins, no literal cap") {
     import org.apache.spark.sql.functions.{col, concat, lit}
     import spark.implicits._

@@ -1025,6 +1025,88 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("security.ramen's TRUNCATE(start, 60) AS start … GROUP BY start // 60 streams by the window route") {
+    // the alias substitution turns the key into TRUNCATE(start, 60) // 60,
+    // the same bucket as start // 60; out.start = TRUNCATE(start, 60) is
+    // the window start, so `in.start > out.start + 120` holds each 60 s
+    // bucket 60 s past its end
+    import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+    implicit val sqlCtx = spark.sqlContext
+    val raql = """DEFINE q AS
+        FROM tables/flows
+        SELECT TRUNCATE(start, 60) AS start, SUM 1 AS n
+        GROUP BY start // 60
+        COMMIT AFTER in.start > out.start + 120;"""
+    def compiler(prog: String, flows: org.apache.spark.sql.DataFrame) = {
+      val c = new RaqlCompiler(spark, "/tmp")
+      c.registerTable("tables/flows", flows)
+      RaqlParser.parseProgram(raql) match {
+        case Right(p) => c.register(prog, p)
+        case Left(e) => fail(s"parse: $e")
+      }
+      c.compile(s"$prog/q")
+    }
+    val mem = MemoryStream[Long]
+    val sdf = compiler("sec", mem.toDS().toDF("start"))
+    val analyzed = sdf.queryExecution.analyzed
+    assert(analyzed.collect {
+      case w: EventTimeWatermark => EventTimeWatermark.getDelayMs(w.delay)
+    } == Seq(60000L), analyzed)
+    val q = sdf.writeStream.format("memory").queryName("security_shape")
+      .outputMode("append").start()
+    val starts = Seq(10L, 20L, 30L, 70L, 80L, 10000L)
+    try {
+      mem.addData(starts.init: _*)
+      q.processAllAvailable()
+      mem.addData(starts.last)
+      q.processAllAvailable()
+    } finally q.stop()
+    val streamed = spark.table("security_shape").select("start", "n")
+      .collect().map(r => (r.getAs[Number](0).doubleValue, r.getLong(1))).toSet
+    assert(streamed == Set((0.0, 3L), (60.0, 2L)), streamed)
+    val batch = compiler("secb", starts.toDF("start").coalesce(1))
+      .select("start", "n").collect()
+      .map(r => (r.getAs[Number](0).doubleValue, r.getLong(1)))
+      .filter(_._1 < 120).toSet
+    assert(streamed == batch, s"stream $streamed, batch $batch")
+  }
+
+  test("a streaming COMMIT condition's literals are constants, not projected input columns") {
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    implicit val sqlCtx = spark.sqlContext
+    val analyzed = compileOverEv(MemoryStream[Ev], "litc", """DEFINE q AS
+        FROM tables/ev
+        SELECT user, SUM 1 AS n
+        GROUP BY user
+        COMMIT AFTER SUM 1 >= 3;""").queryExecution.analyzed
+    val projected = analyzed.collect { case p: Project => p.projectList }.flatten
+      .map(_.name)
+    assert(projected.contains("_gkey"), analyzed)
+    assert(!projected.exists(_.startsWith("_in")), analyzed)
+  }
+
+  test("a vector literal over in-fields in a streaming COMMIT condition is a projected input column") {
+    // `in.user IN ["a"]` is stateless over the input row: it evaluates in
+    // the projection like any other in-only subtree
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val q = compileOverEv(mem, "vecin", """DEFINE q AS
+        FROM tables/ev
+        SELECT user, SUM 1 AS n
+        GROUP BY user
+        COMMIT AFTER in.user IN ["a"] AND SUM 1 >= 2;""")
+      .writeStream.format("memory").queryName("vector_in")
+      .outputMode("append").start()
+    try {
+      mem.addData(Ev("a", 1, 1.0), Ev("b", 2, 1.0), Ev("b", 3, 1.0),
+        Ev("a", 4, 1.0), Ev("a", 5, 1.0))
+      q.processAllAvailable()
+    } finally q.stop()
+    val rows = spark.table("vector_in").select("user", "n")
+      .as[(String, Long)].collect().toSeq
+    assert(rows == Seq(("a", 2L)), rows)
+  }
+
   test("a stateful NOTIFY batch over maxPerBatch keeps its state: later windows alert, tail STOPs are rescued") {
     // the sink reads every row of every partition: a stateful partition
     // stopped after maxPerBatch + 1 rows never commits its state store,
