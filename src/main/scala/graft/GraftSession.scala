@@ -8,7 +8,9 @@ import org.apache.spark.sql.SparkSession
   * Scale notes (targets a 1000-executor cluster even though we test on
   * local[N]): AQE on for runtime re-planning + skew-join splitting; shuffle
   * partitions sized to the local core count (the driver's contract), which
-  * on a real cluster would be `executors × cores × 2-3`; nanosAsLong because
+  * on a real cluster would be `executors × cores × 2-3` — except a stream
+  * whose stateful stage reads one partition, which starts with one state
+  * partition (graft.streaming.StatePartitions); nanosAsLong because
   * the events table carries TIMESTAMP(NANOS) parquet which Spark refuses to
   * read as a timestamp.
   */

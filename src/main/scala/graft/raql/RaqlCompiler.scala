@@ -3220,7 +3220,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
       vTypes.map(integral).toArray, fieldNodes, outSchema, cond)
     val before = agg.commitBefore
     CommitHarness.run[String, Row, Array[Any], Row](
-      proj,
+      statefulInput(proj),
       (r: Row) => r.getString(0),
       GroupSpec[Row, Array[Any], Row](
         init = () => rt.init(),
@@ -3284,14 +3284,14 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
       }
       agg.commitCond match {
         case None => Some(plan)
-        case Some(Binop(">" | ">=", inRef,
+        case Some(Binop(op @ (">" | ">="), inRef,
             b @ Binop("+", baseRef, sE @ (Lit(_) | Ref(_)))))
             if isT(inRef) && timeShapedBase(baseRef) =>
-          Some(plan.copy(bound = Some(b), fallbackDelay =
+          Some(plan.copy(bound = Some(b), strict = op == ">", fallbackDelay =
             try evalNum(sE, params) catch { case _: Exception => d }))
-        case Some(Binop(">" | ">=", inRef, baseRef))
+        case Some(Binop(op @ (">" | ">="), inRef, baseRef))
             if isT(inRef) && timeShapedBase(baseRef) =>
-          Some(plan.copy(bound = Some(baseRef)))
+          Some(plan.copy(bound = Some(baseRef), strict = op == ">"))
         case Some(_) => None
       }
     }
@@ -3312,6 +3312,19 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
       if (hasAgg(e2)) acc(n) = e2
       (e2, n)
     }
+
+  /** The input of a streaming stateful stage: `coalesce(1)` when the
+    * stream provably plans one partition ([[RaqlCompiler.singlePartition]]),
+    * with [[graft.streaming.StatePartitions]] on the session so that the
+    * query starts with one state partition and plans no Exchange. The
+    * coalesce goes above any watermark: `EventTimeWatermark` does not pass
+    * its child's partitioning up. A batch or multi-partition input is
+    * returned as it is. */
+  private def statefulInput(src: DataFrame): DataFrame =
+    if (src.isStreaming && RaqlCompiler.singlePartition(src)) {
+      graft.streaming.StatePartitions.register(spark)
+      src.coalesce(1)
+    } else src
 
   private def compileNamed(src: DataFrame, named: Seq[(Expr, String)],
       agg: Aggregate, params: Map[String, Expr],
@@ -3355,7 +3368,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
         // with a watermark, so the SAME RaQL text runs append-mode
         // Structured Streaming: state is bounded by the watermark, and the
         // watermark delay is where the COMMIT bound fires past the window.
-        val (src1, keys1) = bucket.fold((src, keys)) { b =>
+        val (src1, keys1) = bucket.fold((statefulInput(src), keys)) { b =>
           import b.{d, isT}
           val defs = named.map { case (e0, n0) => n0 -> e0 }.toMap
           // The bound's constant distance from the window start
@@ -3384,16 +3397,21 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
           // w + offset; Spark closes it once the watermark, max event
           // time minus the delay, reaches its end w + d. So the delay
           // is offset − d, floored at 0: 0 for hosts.ramen's
-          // `in.t >= out.wstop`. With `>` the tuple exactly at the
-          // bound closes the window too, one tuple before ramen's
-          // strict compare would.
-          val delay = b.bound.flatMap(windowOffset(_, Set.empty))
-            .fold(b.fallbackDelay)(o => math.max(0.0, o - d))
+          // `in.t >= out.wstop`. The watermark counts whole
+          // milliseconds, so a strict `>` bound waits one more: the
+          // tuple exactly at w + offset leaves the window open and the
+          // next one past it closes it, as ramen's compare does.
+          val delayMs = b.bound.flatMap(windowOffset(_, Set.empty))
+            .fold(math.round(b.fallbackDelay * 1000)) { o =>
+              val past = math.round((o - d) * 1000)
+              if (past < 0) 0L else if (b.strict) past + 1 else past
+            }
           typerDf = Some(src)
           val tCol =
             try compileExpr(b.tE, params, splitCols) finally typerDf = None
-          (src.withColumn("_graft_evt", timestamp_seconds(tCol.cast("double")))
-            .withWatermark("_graft_evt", s"$delay seconds"),
+          (statefulInput(
+            src.withColumn("_graft_evt", timestamp_seconds(tCol.cast("double")))
+              .withWatermark("_graft_evt", s"$delayMs milliseconds")),
             keys.updated(b.index,
               window(col("_graft_evt"), s"$d seconds").as(s"_gk${b.index}")))
         }
@@ -3866,11 +3884,13 @@ object RaqlCompiler {
 
   /** A streaming time-bucket COMMIT's window+watermark plan (see
     * `streamTimeBucket`): group key `index` is the bucket `tE // d`;
-    * `bound` is the commit's time bound (None without a COMMIT), and
-    * `fallbackDelay` the watermark delay when the bound's distance from
-    * the window start is not a constant. */
+    * `bound` is the commit's time bound (None without a COMMIT), `strict`
+    * whether it is compared with `>`, and `fallbackDelay` the watermark
+    * delay when the bound's distance from the window start is not a
+    * constant. */
   private[raql] final case class TimeBucket(index: Int, tE: Expr,
-      d: Double, bound: Option[Expr], fallbackDelay: Double) {
+      d: Double, bound: Option[Expr], fallbackDelay: Double,
+      strict: Boolean = false) {
     private def refName(e: Expr): Option[String] = e match {
       case Ref(Seq("in", n)) => Some(n)
       case Ref(Seq(n)) => Some(n)
@@ -3881,14 +3901,48 @@ object RaqlCompiler {
     def isT(r: Expr): Boolean = tName.isDefined && refName(r) == tName
   }
 
-  /** Does `df` provably plan ONE partition? Read from the planner's
-    * physical plan (no job runs): a narrow Project/Filter view over a node
-    * that declares one output partition (`coalesce(1)` — every RaQL CSV,
-    * RowBinary and EVERY source) or over a file scan that plans one
-    * FilePartition. Anything else — an exchange to several partitions, a
-    * union, a join, an RDD scan, a streaming source, a plan that fails to
-    * plan — is not proven and answers false. */
-  def singlePartition(df: DataFrame): Boolean = {
+  /** Does `df` provably plan ONE partition? A batch frame is read from
+    * the planner's physical plan (no job runs): a narrow Project/Filter
+    * view over a node that declares one output partition (`coalesce(1)` —
+    * every RaQL CSV, RowBinary and EVERY source) or over a file scan that
+    * plans one FilePartition. A streaming frame is read from its analyzed
+    * plan by [[singleStream]]. Anything else — an exchange to several
+    * partitions, a union, a join, an RDD scan, a multi-partition stream, a
+    * plan that fails to plan — is not proven and answers false. */
+  def singlePartition(df: DataFrame): Boolean =
+    if (df.isStreaming) singleStream(df.queryExecution.analyzed)
+    else singleBatch(df)
+
+  /** Does the streaming `plan` deliver ONE partition per trigger? Only
+    * narrow one-child nodes may sit between its top and either a
+    * `coalesce(1)` or its one leaf, which must be a one-partition source:
+    * a `MemoryStream` with a partition count of 1, as `UdpIngest`,
+    * `TcpIngest` and `Instrumentation` build. A Kafka or file stream, a
+    * `MemoryStream` without a partition count, a union or any other wide
+    * node answers false. */
+  def singleStream(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, MemoryStreamTable}
+    plan match {
+      case Repartition(1, false, _) => true
+      case r: StreamingRelationV2 => r.table match {
+        case t: MemoryStreamTable => t.stream match {
+          case m: MemoryStream[_] => m.numPartitions.contains(1)
+          case _ => false
+        }
+        case _ => false
+      }
+      case _: Project | _: Filter | _: SubqueryAlias | _: EventTimeWatermark |
+          _: Expand | _: Generate | _: SerializeFromObject |
+          _: DeserializeToObject | _: MapPartitions | _: MapElements |
+          _: TypedFilter | _: AppendColumns =>
+        singleStream(plan.children.head)
+      case _ => false
+    }
+  }
+
+  private def singleBatch(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.expressions.PlanExpression
     import org.apache.spark.sql.execution._
     def one(p: SparkPlan): Boolean = p match {
@@ -3900,9 +3954,8 @@ object RaqlCompiler {
       case u @ (_: ProjectExec | _: FilterExec) => one(u.children.head)
       case _ => false
     }
-    !df.isStreaming &&
-      (try one(df.queryExecution.sparkPlan)
-      catch { case scala.util.control.NonFatal(_) => false })
+    try one(df.queryExecution.sparkPlan)
+    catch { case scala.util.control.NonFatal(_) => false }
   }
 
   /** Parse + register a set of .ramen sources rooted at `baseDir`; keys are

@@ -35,7 +35,8 @@ final class TcpIngest(spark: SparkSession, port: Int) {
   // (`RamenGraphiteSink.ml`), and a line queued between micro-batch
   // triggers must not inherit the (later) task execution time, which the
   // 2-field graphite form would then use as the metric's START. One
-  // partition per trigger, lines in arrival order (see UdpIngest)
+  // partition per trigger, lines in arrival order; a stateful stage over
+  // it keeps one state partition (see UdpIngest)
   private val mem = MemoryStream[(String, String, Double)](1)
   private val server = new ServerSocket(port)
   @volatile private var running = true

@@ -31,7 +31,10 @@ final class UdpIngest(spark: SparkSession, port: Int) {
   // packet queued between micro-batch triggers must not inherit the later
   // task execution time as its graphite receipt_time. One partition per
   // trigger, rows in arrival order: without a partition count every
-  // addData block (one datagram) becomes its own input partition and task
+  // addData block (one datagram) becomes its own input partition and task.
+  // With it the stream is single-partition (RaqlCompiler.singleStream): a
+  // compiled stateful stage over it reads one partition, keeps one state
+  // partition and plans no Exchange
   private val mem = MemoryStream[(String, Array[Byte], Double)](1)
   private val socket = new DatagramSocket(port)
   @volatile private var running = true

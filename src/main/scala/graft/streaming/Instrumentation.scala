@@ -74,7 +74,11 @@ final class Instrumentation(spark: SparkSession) extends StreamingQueryListener 
 
   import spark.implicits._
   private implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-  private val stream = MemoryStream[RuntimeStats]
+  // one partition per trigger, like the ingest sources: without a
+  // partition count every progress row (one addData each) becomes its own
+  // input partition and task; with it a stream over the stats is
+  // single-partition (RaqlCompiler.singleStream)
+  private val stream = MemoryStream[RuntimeStats](1)
   // one stats row per progress event accumulates on the driver — bound it
   // (reference workers also keep only the latest stats, RamenWorkerStats)
   private val maxRetained = 10000L

@@ -937,14 +937,15 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming time buckets watermark from the commit point: hosts shape 0 s, wstart + 120 over 60 s buckets 60 s") {
     // delay = offset of the commit bound from the window start, minus the
     // window length d, floored at 0: wstop = wstart + d gives 0, wstart +
-    // 120 with d = 60 gives 60
+    // 120 with d = 60 gives 60 s, and one more millisecond for the strict
+    // `>` (the tuple at the bound leaves the window open)
     import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
     implicit val sqlCtx = spark.sqlContext
     def delayMs(raql: String, prog: String): Seq[Long] =
       compileOverEv(MemoryStream[Ev], prog, raql).queryExecution.analyzed
         .collect { case w: EventTimeWatermark => EventTimeWatermark.getDelayMs(w.delay) }
     assert(delayMs(hostsShape60, "wm0") == Seq(0L))
-    assert(delayMs(slack120, "wm60") == Seq(60000L))
+    assert(delayMs(slack120, "wm60") == Seq(60001L))
   }
 
   test("hosts-shape stream emits a window once the first tuple at its wstop is processed") {
@@ -1001,10 +1002,10 @@ class StreamingSpec extends AnyFunSuite {
 
   test("COMMIT AFTER in.t > out.wstart + 120 keeps a 60 s bucket open for late rows until t >= 120") {
     // the bucket [0,60) commits when an input passes wstart + 120: a row
-    // for it arriving after t = 110 is still counted. Equality: Spark
-    // closes a window once the watermark reaches its end, so with `>` the
-    // tuple exactly at t = 120 closes it too (ramen's strict compare
-    // would wait for the next tuple past 120)
+    // for it arriving after t = 110 is still counted. Equality: the strict
+    // `>` waits one millisecond past the bound, so the tuple exactly at
+    // t = 120 leaves the bucket open and the next one past it closes it,
+    // as ramen's strict compare does
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
     val q = compileOverEv(mem, "cp120", slack120).writeStream.format("memory")
@@ -1021,6 +1022,9 @@ class StreamingSpec extends AnyFunSuite {
       assert(rows.isEmpty, s"bucket closed before t >= 120: $rows")
       mem.addData(Ev("a", 120, 1.0))
       q.processAllAvailable()
+      assert(rows.isEmpty, s"bucket closed by the tuple at t = 120: $rows")
+      mem.addData(Ev("a", 121, 1.0))
+      q.processAllAvailable()
       assert(rows == Seq((0.0, "a", 2L)), rows)
     } finally q.stop()
   }
@@ -1029,7 +1033,7 @@ class StreamingSpec extends AnyFunSuite {
     // the alias substitution turns the key into TRUNCATE(start, 60) // 60,
     // the same bucket as start // 60; out.start = TRUNCATE(start, 60) is
     // the window start, so `in.start > out.start + 120` holds each 60 s
-    // bucket 60 s past its end
+    // bucket 60 s past its end, plus the strict compare's millisecond
     import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
     implicit val sqlCtx = spark.sqlContext
     val raql = """DEFINE q AS
@@ -1051,7 +1055,7 @@ class StreamingSpec extends AnyFunSuite {
     val analyzed = sdf.queryExecution.analyzed
     assert(analyzed.collect {
       case w: EventTimeWatermark => EventTimeWatermark.getDelayMs(w.delay)
-    } == Seq(60000L), analyzed)
+    } == Seq(60001L), analyzed)
     val q = sdf.writeStream.format("memory").queryName("security_shape")
       .outputMode("append").start()
     val starts = Seq(10L, 20L, 30L, 70L, 80L, 10000L)
@@ -2349,5 +2353,283 @@ class StreamingSpec extends AnyFunSuite {
     assert(restarted.state == whole.state,
       s"state differs:\n  restarted=${restarted.state}\n  whole=${whole.state}")
     }
+  }
+
+  /** Runs `body` and counts the tasks each micro-batch ran, by batch id
+    * (the `streaming.sql.batchId` property of the batch's jobs). */
+  private def tasksPerBatch[A](body: => A): (A, Map[Long, Int]) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val stageBatch = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val tasks = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => j.stageIds.foreach(stageBatch.put(_, b.toLong)))
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        Option(stageBatch.get(t.stageId)).foreach(b => tasks.merge(b, 1, _ + _))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      org.apache.spark.sql.GraftShims.drainListenerBus(sc)
+      import scala.jdk.CollectionConverters._
+      (a, tasks.asScala.toMap.map { case (b, n) => (b: Long) -> (n: Int) })
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The physical plan of `q`'s last micro-batch. */
+  private def lastPlan(q: org.apache.spark.sql.streaming.StreamingQuery) =
+    q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan
+
+  private def exchanges(plan: org.apache.spark.sql.execution.SparkPlan) =
+    plan.collect { case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
+
+  /** State partitions of `q`'s first stateful operator, last batch. */
+  private def statePartitions(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
+    q.lastProgress.stateOperators.head.numShufflePartitions
+
+  /** One netflow v5 datagram of a single flow from 10.0.0.`host` of
+    * `bytes` bytes whose decoded start time is `start` (whole seconds). */
+  private def netflowPacket(host: Int, start: Long, bytes: Int): Array[Byte] = {
+    import java.nio.{ByteBuffer, ByteOrder}
+    val b = ByteBuffer.allocate(72).order(ByteOrder.BIG_ENDIAN)
+    // uptime 60 s at export, flow first seen at uptime 30 s: start is
+    // unix_secs - 30
+    b.putShort(5).putShort(1).putInt(60000)
+    b.putInt((start + 30).toInt).putInt(0).putInt(42)
+    b.put(1.toByte).put(2.toByte).putShort(((1 << 14) | 100).toShort)
+    b.putInt(0x0A000000 + host).putInt(0x0A000002).putInt(0)
+    b.putShort(3).putShort(4).putInt(10).putInt(bytes)
+    b.putInt(30000).putInt(30000).putShort(1234).putShort(80)
+    b.put(0.toByte).put(0x12.toByte).put(6.toByte).put(0.toByte)
+    b.putShort(65001.toShort).putShort(65002.toShort)
+    b.put(24.toByte).put(16.toByte).putShort(0)
+    b.array()
+  }
+
+  test("a RaQL window-route stream over UdpIngest plans no Exchange, one state partition and one task per trigger") {
+    import java.net.{DatagramPacket, DatagramSocket, InetAddress}
+    val udp = new UdpIngest(spark, 0).start()
+    val sock = new DatagramSocket()
+    try {
+      val c = new RaqlCompiler(spark, "/tmp")
+      c.registerTable("net/flows", udp.netflow)
+      RaqlParser.parseProgram("""DEFINE q AS
+          FROM net/flows
+          SELECT TRUNCATE(MIN start, 10) AS wstart, out.wstart + 10 AS wstop,
+                 src, SUM bytes AS total
+          GROUP BY src
+          COMMIT BEFORE in.start >= out.wstop;""") match {
+        case Right(p) => c.register("one", p)
+        case Left(e) => fail(s"parse: $e")
+      }
+      val sdf = c.compile("one/q")
+      assert(RaqlCompiler.singlePartition(udp.netflow))
+      val q = sdf.writeStream.format("memory").queryName("one_task_udp")
+        .outputMode("append").start()
+      def send(p: Array[Byte]): Unit =
+        sock.send(new DatagramPacket(p, p.length, InetAddress.getLoopbackAddress,
+          udp.boundPort))
+      def rows = spark.table("one_task_udp").select("wstart", "src", "total")
+        .as[(Double, String, Long)].collect().toSeq
+      val (_, tasks) = tasksPerBatch {
+        try {
+          val deadline = System.currentTimeMillis() + 30000
+          // three flows in [1700000000, 1700000010), then one past it
+          while (q.recentProgress.map(_.numInputRows).sum < 3 &&
+              System.currentTimeMillis() < deadline) {
+            Seq(1, 2, 2).foreach(h => send(netflowPacket(h, 1700000001L, 100)))
+            Thread.sleep(100)
+            q.processAllAvailable()
+          }
+          while (rows.isEmpty && System.currentTimeMillis() < deadline) {
+            send(netflowPacket(3, 1700000020L, 100))
+            Thread.sleep(100)
+            q.processAllAvailable()
+          }
+          assert(rows.nonEmpty, "window [1700000000, 1700000010) never closed")
+          assert(exchanges(lastPlan(q)).isEmpty, lastPlan(q))
+          assert(statePartitions(q) == 1L)
+        } finally q.stop()
+      }
+      assert(rows.map(_._1).distinct == Seq(1700000000.0), rows)
+      assert(tasks.nonEmpty && tasks.values.forall(_ == 1), tasks)
+    } finally { sock.close(); udp.stop() }
+  }
+
+  test("a single-partition expression-commit stream keeps one state partition; its plan is pinned as built") {
+    // the harness route's groupByKey/flatMapGroupsWithState over a
+    // coalesce(1): AppendColumns passes the single partition up, so the
+    // stateful operator needs no Exchange either
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev](1)
+    val sdf = compileOverEv(mem, "onehx", """DEFINE q AS
+        FROM tables/ev
+        SELECT user, SUM v AS total, SUM 1 AS n
+        GROUP BY user
+        COMMIT AFTER out.total >= 10;""")
+    assert(sdf.queryExecution.analyzed.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.FlatMapGroupsWithState => f
+    }.size == 1)
+    val q = sdf.writeStream.format("memory").queryName("one_task_harness")
+      .outputMode("append").start()
+    val (_, tasks) = tasksPerBatch {
+      try {
+        mem.addData(Ev("a", 1, 4.0), Ev("b", 2, 9.0), Ev("a", 3, 7.0))
+        q.processAllAvailable()
+        mem.addData(Ev("b", 4, 1.0))
+        q.processAllAvailable()
+        assert(exchanges(lastPlan(q)).isEmpty, lastPlan(q))
+        assert(statePartitions(q) == 1L)
+      } finally q.stop()
+    }
+    assert(spark.table("one_task_harness").select("user", "total", "n")
+      .as[(String, Double, Long)].collect().toSet == Set(("a", 11.0, 2L), ("b", 10.0, 2L)))
+    assert(tasks.nonEmpty && tasks.values.forall(_ == 1), tasks)
+  }
+
+  test("multi-partition streams keep their Exchange and the session's state partitions") {
+    // a MemoryStream without a partition count and a file stream plan as
+    // before: hash-partitioned into spark.sql.shuffle.partitions (4 here)
+    import java.nio.file.Files
+    implicit val sqlCtx = spark.sqlContext
+    val cores = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    def check(name: String, sdf: org.apache.spark.sql.DataFrame)(feed: => Unit): Unit = {
+      val q = sdf.writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      try {
+        feed
+        q.processAllAvailable()
+        assert(exchanges(lastPlan(q)).nonEmpty, s"$name: ${lastPlan(q)}")
+        assert(statePartitions(q) == cores, name)
+      } finally q.stop()
+    }
+    val mem = MemoryStream[Ev]
+    assert(!RaqlCompiler.singlePartition(mem.toDF()))
+    check("multi_mem", compileOverEv(mem, "multim", hostsShape60)) {
+      mem.addData(Ev("a", 10, 1.0), Ev("b", 20, 1.0))
+    }
+    val in = Files.createTempDirectory("graft_multi_in")
+    val files = spark.readStream.schema("user STRING, t LONG, v DOUBLE").json(in.toString)
+    assert(!RaqlCompiler.singlePartition(files))
+    val c = new RaqlCompiler(spark, "/tmp")
+    c.registerTable("tables/ev", files)
+    RaqlParser.parseProgram(hostsShape60) match {
+      case Right(p) => c.register("multif", p)
+      case Left(e) => fail(s"parse: $e")
+    }
+    check("multi_file", c.compile("multif/q")) {
+      Files.write(in.resolve("part-1.json"),
+        """{"user":"a","t":10,"v":1.0}
+          |{"user":"b","t":20,"v":1.0}""".stripMargin.getBytes("UTF-8"))
+    }
+  }
+
+  test("a checkpoint begun with 4 state partitions restarts on a single-partition stream, replays and emits an uninterrupted run's windows") {
+    // the first run plans as a multi-partition stream did (no coalesce, 4
+    // state partitions); the restart reads the same offsets from a
+    // one-partition source: the offset log keeps 4, so the Exchange is
+    // planned again
+    import java.nio.file.Files
+    implicit val sqlCtx = spark.sqlContext
+    val batches = Seq(
+      Seq(Ev("a", 10, 1.0), Ev("b", 20, 1.0), Ev("a", 30, 1.0)),
+      Seq(Ev("b", 50, 1.0), Ev("a", 70, 1.0)),
+      Seq(Ev("b", 80, 1.0), Ev("a", 130, 1.0), Ev("b", 140, 1.0)))
+    def run(mem: MemoryStream[Ev], prog: String, ckpt: java.nio.file.Path,
+        out: java.nio.file.Path, feed: Seq[Seq[Ev]])
+        : org.apache.spark.sql.streaming.StreamingQuery = {
+      val q = compileOverEv(mem, prog, hostsShape60).writeStream.format("parquet")
+        .outputMode("append").option("checkpointLocation", ckpt.toString)
+        .start(out.toString)
+      try feed.foreach { b => mem.addData(b); q.processAllAvailable() }
+      finally q.stop()
+      q
+    }
+    def windows(out: java.nio.file.Path) = spark.read.parquet(out.toString)
+      .select("wstart", "user", "n").as[(Double, String, Long)].collect().toSet
+    val ckpt = Files.createTempDirectory("graft_restart4_ckpt")
+    val out = Files.createTempDirectory("graft_restart4_out")
+    val first = run(MemoryStream[Ev], "rs4a", ckpt, out, batches.take(2))
+    assert(first.lastProgress.stateOperators.head.numShufflePartitions == 4L)
+    val single = MemoryStream[Ev](1)
+    // the offsets the first run committed, then the new batch
+    batches.take(2).foreach(single.addData(_))
+    val second = run(single, "rs4b", ckpt, out, batches.drop(2))
+    assert(second.lastProgress.stateOperators.head.numShufflePartitions == 4L)
+    assert(exchanges(lastPlan(second)).nonEmpty, lastPlan(second))
+    val wholeOut = Files.createTempDirectory("graft_restart1_out")
+    val whole = run(MemoryStream[Ev](1), "rs1", Files.createTempDirectory("graft_restart1_ckpt"),
+      wholeOut, batches)
+    assert(whole.lastProgress.stateOperators.head.numShufflePartitions == 1L)
+    assert(windows(out) == windows(wholeOut))
+    assert(windows(out) ==
+      Set((0.0, "a", 2L), (0.0, "b", 2L), (60.0, "a", 1L), (60.0, "b", 1L)), windows(out))
+  }
+
+  test("a trigger over several instrumentation rows runs one task") {
+    implicit val sqlCtx = spark.sqlContext
+    val stats = graft.streaming.Instrumentation(spark).df
+    assert(RaqlCompiler.singlePartition(stats))
+    // a monitored workload: its progress rows queue in the stats source
+    // before the stats query's first trigger
+    val mem = MemoryStream[Ev]
+    val work = mem.toDS().writeStream.format("memory").queryName("one_task_work")
+      .outputMode("append").start()
+    try (1 to 4).foreach { i => mem.addData(Ev("a", i, 1.0)); work.processAllAvailable() }
+    finally work.stop()
+    // listener events are async: wait until the source holds the rows
+    val deadline = System.currentTimeMillis() + 20000
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val ((), tasks) = tasksPerBatch {
+      val q = stats.filter($"worker" === "one_task_work").writeStream.foreachBatch {
+        (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          seen.add(b.collect().length.toLong); ()
+      }.start()
+      try {
+        while (seen.toArray.map(_.asInstanceOf[Long]).sum < 3 &&
+            System.currentTimeMillis() < deadline) {
+          Thread.sleep(200)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+    }
+    assert(seen.toArray.map(_.asInstanceOf[Long]).max >= 3, seen)
+    assert(tasks.nonEmpty && tasks.values.forall(_ == 1), tasks)
+  }
+
+  test("a strict COMMIT AFTER bound leaves the window open at the bound and closes it one millisecond past") {
+    // COMMIT AFTER in.t > out.wstart + 120 over 60 s buckets: ramen's
+    // strict compare commits [0,60) on the first tuple past t = 120. The
+    // watermark counts whole milliseconds, and the delay is 60 001 ms: the
+    // tuple at 120 leaves [0,60) open, the one at 120.001 closes it
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(String, Double)]
+    val c = new RaqlCompiler(spark, "/tmp")
+    c.registerTable("tables/ev", mem.toDS().toDF("user", "t"))
+    RaqlParser.parseProgram("""DEFINE q AS
+        FROM tables/ev
+        SELECT TRUNCATE(MIN t, 60) AS wstart, user, SUM 1 AS n
+        GROUP BY user, t // 60
+        COMMIT AFTER in.t > out.wstart + 120;""") match {
+      case Right(p) => c.register("strict", p)
+      case Left(e) => fail(s"parse: $e")
+    }
+    val q = c.compile("strict/q").writeStream.format("memory")
+      .queryName("strict_bound").outputMode("append").start()
+    def rows = spark.table("strict_bound").select("wstart", "user", "n")
+      .as[(Double, String, Long)].collect().toSeq
+    try {
+      mem.addData(("a", 10.0), ("a", 50.5))
+      q.processAllAvailable()
+      mem.addData(("a", 120.0))
+      q.processAllAvailable()
+      assert(rows.isEmpty, s"[0,60) closed by the tuple at the bound: $rows")
+      mem.addData(("a", 120.001))
+      q.processAllAvailable()
+      assert(rows == Seq((0.0, "a", 2L)), rows)
+    } finally q.stop()
   }
 }
