@@ -1427,6 +1427,20 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     "country_code" -> "countrycode", "ip_family" -> "ipfamily",
     "square" -> "sq", "greatest" -> "max", "least" -> "min")
 
+  /** Is the operation being compiled over a stream? Set by the operation
+    * once its input is resolved; `compile` restores it, as it does the
+    * active globals. */
+  private var overStream = false
+
+  /** RaQL `now` outside a generator. A batch reads the query's start time
+    * (`unix_timestamp()`, folded once); a stream reads the wall clock per
+    * row, since a folded time is a new literal, and new stage code, every
+    * micro-batch. */
+  private def clockNow: Column =
+    if (overStream)
+      org.apache.spark.sql.GraftShims.column(graft.functions.WallClockSeconds())
+    else unix_timestamp().cast("double")
+
   private def compileFun(name0: String, args: Seq[Expr], go: Expr => Column): Column = {
     val name = funAliases.getOrElse(name0, name0)
     (name, args) match {
@@ -1515,8 +1529,8 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
         if (runCtx.map(_.df).orElse(typerDf)
             .exists(_.columns.contains("_graft_gen_time")))
           col("_graft_gen_time")
-        else unix_timestamp().cast("double")
-      case ("age", Seq(x)) => unix_timestamp().cast("double") - go(x)
+        else clockNow
+      case ("age", Seq(x)) => clockNow - go(x)
       case ("length", Seq(x)) =>
         val c = go(x)
         // LENGTH of an array is its cardinality (past.ramen f2)
@@ -2317,6 +2331,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     val params: Map[String, Expr] =
       prog.params.map(p => p.name -> p.default.getOrElse(Lit(null))).toMap
     val prevGlobals = activeGlobals
+    val prevStream = overStream
     activeGlobals = prog.globals.map(g => g -> s"$progName#$g").toMap
     try {
       val df = compileOp(func.op, progName, params)
@@ -2329,7 +2344,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
           if (!r.isNullAt(0) && r.getBoolean(0)) df else df.limit(0)
         case None => df
       }
-    } finally activeGlobals = prevGlobals
+    } finally { activeGlobals = prevGlobals; overStream = prevStream }
   })
 
   /** The fully-qualified `instance/func` keys a `prog#_/func` any-instance
@@ -2641,6 +2656,7 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
             (lit(t0) + col("id") * d).as("_graft_gen_time"))
         case dfs => dfs.reduce(_.unionByName(_, allowMissingColumns = true))
       }
+      overStream = base0.isStreaming
       // global_last_out on a STREAM has no batch global-order lag to fall
       // back to: ungrouped it coincides with local_last_out (rewrite);
       // grouped it would need cross-group state — typed error instead of

@@ -5,7 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, MemoryStream}
+import org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
+import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, MemoryStream, MemoryStreamTable}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** `LISTEN FOR INSTRUMENTATION FROM *` as a QUERYABLE STREAM.
@@ -25,8 +26,14 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * approximated by summed trigger wall times (documented — Spark does not
   * expose per-query CPU); cur/max_ram from the JVM heap (shared across
   * queries, as reference workers share a host). Unobservable fields
-  * (tot_wait_in/out, byte sizes sampled, notif counts fed by the Alerter)
-  * are zero, never fabricated.
+  * (tot_wait_in/out, byte sizes sampled, notif counts fed by the Alerter,
+  * the out count of a sink that reports none) are zero, never fabricated.
+  *
+  * A query that reads this stream reports no stats rows of its own: each
+  * of its triggers would otherwise add the row its next trigger reads, and
+  * it would never idle. The reference reports each worker on a period,
+  * which bounds that loop but does not end it; here the readers are found
+  * when they start (their analyzed plan holds this stream) and skipped.
   */
 final class Instrumentation(spark: SparkSession) extends StreamingQueryListener {
 
@@ -71,6 +78,8 @@ final class Instrumentation(spark: SparkSession) extends StreamingQueryListener 
     var maxRam = 0L
   }
   private val perQuery = new ConcurrentHashMap[String, Totals]()
+  /** Run ids of the started queries that read this stream. */
+  private val readers = ConcurrentHashMap.newKeySet[java.util.UUID]()
 
   import spark.implicits._
   private implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -110,25 +119,39 @@ final class Instrumentation(spark: SparkSession) extends StreamingQueryListener 
   }
 
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
+    // Spark calls this on the query thread while the query is active
+    val reads = org.apache.spark.sql.GraftShims.startedStream(spark, e.id, e.runId)
+      .exists(_._1.exists {
+        case r: StreamingRelationV2 => r.table match {
+          case t: MemoryStreamTable => t.stream eq stream
+          case _ => false
+        }
+        case _ => false
+      })
+    if (reads) readers.add(e.runId)
     val t = perQuery.computeIfAbsent(nameOf(e.name, e.id.toString), _ => new Totals)
     val now = System.currentTimeMillis() / 1000.0
     if (t.firstStartup == 0.0) t.firstStartup = now
     t.lastStartup = now
   }
 
-  override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+  override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = {
+    readers.remove(e.runId); ()
+  }
 
   private def nameOf(name: String, id: String): String =
     Option(name).getOrElse(id)
 
   override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
     val p = e.progress
+    if (readers.contains(p.runId)) return
     val worker = nameOf(p.name, p.id.toString)
     val t = perQuery.computeIfAbsent(worker, _ => new Totals)
     val now = java.time.Instant.parse(p.timestamp).toEpochMilli / 1000.0
     t.synchronized {
       t.in += p.numInputRows
-      t.out += Option(p.sink).map(_.numOutputRows).getOrElse(0L)
+      // a sink that reports no count (foreachBatch) reports -1
+      t.out += Option(p.sink).map(_.numOutputRows).filter(_ >= 0).getOrElse(0L)
       // triggerExecution spans addBatch/getBatch/latestOffset/
       // queryPlanning/walCommit: summing every entry counts each phase
       // twice, so the phases are summed only when it is absent

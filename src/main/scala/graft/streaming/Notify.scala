@@ -4,7 +4,9 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.connector.write.WriterCommitMessage
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** RaQL `NOTIFY "name" WITH params` → alerter semantics, Spark-first.
@@ -14,9 +16,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * dedups start/stop into incidents, debounces delivery, and sends
   * messages through the team's contacts with `${…}` templating
   * ([[StringExpansion]], the reference's RamenStringExpansion). Here the
-  * notification stream is just another Dataset; delivery is a
-  * `foreachBatch` sink, and the incident/debounce state machine lives in
-  * [[Notify.Alerter]] with an injectable clock so tests drive time.
+  * notification stream is just another Dataset; delivery is a DSv2
+  * streaming sink ([[NotifySink]]), and the incident/debounce state
+  * machine lives in [[Notify.Alerter]] with an injectable clock so tests
+  * drive time.
   */
 final case class Notification(
     name: String,
@@ -535,71 +538,111 @@ object Notify {
     * are dropped and journaled as a FAILED line (visible in
     * `alerter.incidents`, like any contact failure).
     *
-    * The batch runs once, as one job over all its partitions. Every
+    * The sink is a DSv2 streaming sink ([[NotifySink]]): the batch is
+    * planned once and runs as one job over all its partitions. Every
     * partition reads all its rows and ships at most its first
-    * `maxPerBatch + 1` plus `maxPerBatch` later STOPs, so the bound is
-    * per partition: the driver holds at most
-    * partitions × (2·maxPerBatch + 1) rows. */
+    * `maxPerBatch + 1` plus `maxPerBatch` later STOPs ([[Cap]]), so the
+    * bound is per partition: the driver holds at most
+    * partitions × (2·maxPerBatch + 1) rows. The sink reads rows by
+    * ordinal, so `ds` is first projected onto [[Notification]]'s encoder
+    * schema by name, each field cast to its type (a no-op the optimizer
+    * drops when the types already match, as for a compiled NOTIFY).
+    *
+    * Every output mode works. Without a `checkpointLocation` (and no
+    * session default), the query runs on a temporary checkpoint that is
+    * deleted when it stops without an error, as a `foreachBatch` query's
+    * is. One returned writer starts one query. */
   def sink(ds: Dataset[Notification], alerter: Alerter,
-      maxPerBatch: Int = 100000): DataStreamWriter[Notification] =
-    ds.writeStream.foreachBatch { (batch: Dataset[Notification], _: Long) =>
-      sinkBatch(batch, alerter, maxPerBatch)
-    }
-
-  /** One micro-batch of [[sink]] — separated so the overflow contract
-    * (bounded collect, STOP rescue) is unit-testable without a stream. */
-  private[graft] def sinkBatch(batch: Dataset[Notification], alerter: Alerter,
-      maxPerBatch: Int): Unit = {
-      // per partition, in partition order: its first maxPerBatch + 1 rows,
-      // then the STOPs after them (at most maxPerBatch). Every row is
-      // read: a stateful stage commits its state store at the end of its
-      // output, and a partition stopped early never commits
-      val parts = batch.rdd.mapPartitions { it =>
-        val head, stops = Array.newBuilder[Notification]
-        var n, s = 0
-        it.foreach { r =>
-          if (n <= maxPerBatch) { head += r; n += 1 }
-          else if (!r.firing && s < maxPerBatch) { stops += r; s += 1 }
-        }
-        Iterator((head.result(), stops.result()))
-      }.collect()
-      // a partition ships later STOPs only after a full head, so the first
-      // maxPerBatch rows of this sequence are the batch's first rows
-      val shipped = parts.flatMap { case (head, stops) => head ++ stops }
-      val kept = shipped.take(maxPerBatch)
-      val overflow = shipped.length > maxPerBatch
-      kept.foreach(alerter.deliver)
-      var rescued: Array[Notification] = Array.empty
-      if (overflow) {
-        // rescue the STOPs beyond the cap: a dropped STOP leaves its
-        // incident firing until its timeout — or forever with timeout 0
-        // (r12 ADVICE). Only TAIL stops are re-delivered: a stop that was
-        // already in the kept prefix must NOT replay after the prefix —
-        // a kept [STOP x, START x] sequence would otherwise get its stop
-        // re-applied after the start and kill a legitimate incident
-        // (found in the r13 review pass). Tail stops are order-safe by
-        // construction: every tail row follows every kept row, so closing
-        // a kept START is correct and a stop whose START was also dropped
-        // no-ops. Bounded: the first maxPerBatch tail stops.
-        val stops = shipped.drop(maxPerBatch).filterNot(_.firing).take(maxPerBatch)
-        stops.foreach(alerter.deliver)
-        rescued = stops
-        val names = stops.map(_.name).distinct
-        alerter.note(s"FAILED batch overflow: more than $maxPerBatch " +
-          s"notifications in one batch, excess STARTs dropped; " +
-          s"${stops.length} STOPs rescued" +
-          (if (names.nonEmpty)
-            s" (${names.take(10).mkString(", ")}${if (names.length > 10) ", …" else ""})"
-          else "") +
-          (if (stops.length >= maxPerBatch) "; stop rescue itself capped" else ""))
+      maxPerBatch: Int = 100000): DataStreamWriter[Notification] = {
+    val spark = ds.sparkSession
+    val temp =
+      if (spark.conf.getOption("spark.sql.streaming.checkpointLocation").isDefined) None
+      else {
+        NotifySink.cleanTemporaryCheckpoints(spark)
+        Some(new java.io.File(System.getProperty("java.io.tmpdir"),
+          s"temporary-${java.util.UUID.randomUUID()}").getAbsolutePath)
       }
-      // un-timed notifications (time 0) were stamped with the alerter's
-      // clock inside deliver — flush on the same time base, or their
-      // debounce deadlines (clock + d) would never come due. Rescued
-      // stops count toward the flush horizon too (a tail stop can carry
-      // a later time than anything in the kept prefix).
-      val at = (kept ++ rescued).map(_.time).filter(_ > 0).maxOption
-        .getOrElse(alerter.nowTime())
-      alerter.flush(at)
+    val w = ds.select(NotifySink.schema.fields.toSeq.map(f =>
+        col(f.name).cast(f.dataType).as(f.name)): _*)
+      .as(Encoders.product[Notification]).writeStream
+      .format(classOf[NotifySink].getName)
+      .option(NotifySink.IdOption, NotifySink.park(alerter, maxPerBatch, temp))
+    temp.fold(w)(w.option("checkpointLocation", _))
   }
+
+  /** One partition's share of a micro-batch: its first `maxPerBatch + 1`
+    * notifications, then the STOPs after them. */
+  private[streaming] final case class Shipped(head: Array[Notification],
+      stops: Array[Notification]) extends WriterCommitMessage
+
+  /** The per-partition cap, fed every row of the partition in order: its
+    * first maxPerBatch + 1 rows, then the STOPs after them (at most
+    * maxPerBatch). Every row is read: a stateful stage commits its state
+    * store at the end of its output, and a partition stopped early never
+    * commits. */
+  private[streaming] final class Cap(maxPerBatch: Int) {
+    private val head, stops = Array.newBuilder[Notification]
+    private var n, s = 0
+    def add(r: Notification): Unit =
+      if (n <= maxPerBatch) { head += r; n += 1 }
+      else if (!r.firing && s < maxPerBatch) { stops += r; s += 1 }
+    def result: Shipped = Shipped(head.result(), stops.result())
+  }
+
+  /** Deliver one micro-batch on the driver from its partitions' [[Shipped]]
+    * rows, in partition order: the kept prefix, the overflow journal line
+    * and the STOP rescue, then the flush. */
+  private[streaming] def deliverBatch(parts: Seq[Shipped], alerter: Alerter,
+      maxPerBatch: Int): Unit = {
+    // a partition ships later STOPs only after a full head, so the first
+    // maxPerBatch rows of this sequence are the batch's first rows
+    val shipped = parts.flatMap(p => p.head ++ p.stops)
+    val kept = shipped.take(maxPerBatch)
+    val overflow = shipped.length > maxPerBatch
+    kept.foreach(alerter.deliver)
+    var rescued: Seq[Notification] = Nil
+    if (overflow) {
+      // rescue the STOPs beyond the cap: a dropped STOP leaves its
+      // incident firing until its timeout — or forever with timeout 0
+      // (r12 ADVICE). Only TAIL stops are re-delivered: a stop that was
+      // already in the kept prefix must NOT replay after the prefix —
+      // a kept [STOP x, START x] sequence would otherwise get its stop
+      // re-applied after the start and kill a legitimate incident
+      // (found in the r13 review pass). Tail stops are order-safe by
+      // construction: every tail row follows every kept row, so closing
+      // a kept START is correct and a stop whose START was also dropped
+      // no-ops. Bounded: the first maxPerBatch tail stops.
+      val stops = shipped.drop(maxPerBatch).filterNot(_.firing).take(maxPerBatch)
+      stops.foreach(alerter.deliver)
+      rescued = stops
+      val names = stops.map(_.name).distinct
+      alerter.note(s"FAILED batch overflow: more than $maxPerBatch " +
+        s"notifications in one batch, excess STARTs dropped; " +
+        s"${stops.length} STOPs rescued" +
+        (if (names.nonEmpty)
+          s" (${names.take(10).mkString(", ")}${if (names.length > 10) ", …" else ""})"
+        else "") +
+        (if (stops.length >= maxPerBatch) "; stop rescue itself capped" else ""))
+    }
+    // un-timed notifications (time 0) were stamped with the alerter's
+    // clock inside deliver — flush on the same time base, or their
+    // debounce deadlines (clock + d) would never come due. Rescued
+    // stops count toward the flush horizon too (a tail stop can carry
+    // a later time than anything in the kept prefix).
+    val at = (kept ++ rescued).map(_.time).filter(_ > 0).maxOption
+      .getOrElse(alerter.nowTime())
+    alerter.flush(at)
+  }
+
+  /** One micro-batch of a `foreachBatch` sink over the same cap and
+    * delivery as [[sink]]: the adapter for a caller that holds the batch as
+    * a Dataset (a traced harness timing the sink, unit tests of the
+    * overflow contract without a stream). */
+  private[graft] def sinkBatch(batch: Dataset[Notification], alerter: Alerter,
+      maxPerBatch: Int): Unit =
+    deliverBatch(batch.rdd.mapPartitions { it =>
+      val cap = new Cap(maxPerBatch)
+      it.foreach(cap.add)
+      Iterator(cap.result)
+    }.collect().toSeq, alerter, maxPerBatch)
 }

@@ -1141,12 +1141,19 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("a compiled NOTIFY stream compiles no stage code per micro-batch beyond Spark's eviction predicate") {
+  /** The id of `q`'s last micro-batch (-1 before the first): after
+    * `processAllAvailable` the batches it ran are behind it. */
+  private def lastBatchId(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
+    Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
+
+  /** Six minutes of busy-alert rows through [[Notify.sink]]: per minute,
+    * the stage code compiled and the micro-batches run. Each minute's rows
+    * close the previous minute's windows: a START for b, a STOP for a. */
+  private def stageCompilesPerMinute(mem: MemoryStream[Ev],
+      notifs: org.apache.spark.sql.Dataset[Notification],
+      alerter: Notify.Alerter): Seq[(Long, Long)] = {
     import org.apache.spark.metrics.source.CodegenMetrics
     import org.apache.spark.sql.catalyst.expressions.{CurrentDate, CurrentTimestampLike}
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val notifs = busyAlertsOverEv(mem, "stable")
     // the analyzed plan: each micro-batch's optimizer folds a current time
     // into a new literal, so it must not be there to fold
     val timed = notifs.queryExecution.analyzed.collect { case p =>
@@ -1156,68 +1163,203 @@ class StreamingSpec extends AnyFunSuite {
       })
     }.flatten
     assert(timed.isEmpty, timed)
-    val alerter = new Notify.Alerter
-    val batches = new java.util.concurrent.atomic.AtomicInteger
-    val q = notifs.writeStream.foreachBatch {
-      (b: org.apache.spark.sql.Dataset[Notification], _: Long) =>
-        Notify.sinkBatch(b, alerter, 100000)
-        batches.incrementAndGet()
-        ()
-    }.start()
-    try {
-      // each minute's rows close the previous minute's windows: a START
-      // for b, a STOP for a, every minute
-      val perMinute = (0 until 6).map { m =>
-        val (c0, b0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, batches.get)
-        mem.addData(Ev("a", 60L * m + 10, 1.0), Ev("b", 60L * m + 10, 1.0),
-          Ev("b", 60L * m + 20, 1.0))
-        q.processAllAvailable()
-        (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0, batches.get - b0)
-      }
-      assert(alerter.incidents.count(_ == "START busy b") == 1, alerter.incidents)
-      // after two warm-up minutes: one compile per micro-batch at most,
-      // the eviction predicate over the batch's new watermark
-      perMinute.drop(2).foreach { case (compiles, ran) =>
-        assert(ran >= 1 && compiles <= ran, perMinute)
-      }
+    val q = Notify.sink(notifs, alerter).start()
+    try (0 until 6).map { m =>
+      val (c0, b0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, lastBatchId(q))
+      mem.addData(Ev("a", 60L * m + 10, 1.0), Ev("b", 60L * m + 10, 1.0),
+        Ev("b", 60L * m + 20, 1.0))
+      q.processAllAvailable()
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0, lastBatchId(q) - b0)
     } finally q.stop()
+  }
+
+  test("a compiled NOTIFY stream compiles no stage code per micro-batch beyond Spark's eviction predicate") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val alerter = new Notify.Alerter
+    val perMinute = stageCompilesPerMinute(mem, busyAlertsOverEv(mem, "stable"), alerter)
+    assert(alerter.incidents.count(_ == "START busy b") == 1, alerter.incidents)
+    // after two warm-up minutes: one compile per micro-batch at most,
+    // the eviction predicate over the batch's new watermark
+    perMinute.drop(2).foreach { case (compiles, ran) =>
+      assert(ran >= 1 && compiles <= ran, perMinute)
+    }
+  }
+
+  test("a NOTIFY stream over RaQL age() reads the clock per row and compiles no stage code per micro-batch") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val alert = """
+      DEFINE alert AS FROM q
+        SELECT wstop, user, n, n > 1 AND age(wstop) > 0 AS firing
+        NOTIFY "busy " || user;"""
+    val notifs = registerOverEv(mem, "aged", hostsShape60 + alert)
+      .notifications("aged/alert").getOrElse(fail("no NOTIFY compiled"))
+      .as[Notification]
+    def clocks(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect { case p =>
+        p.expressions.flatMap(_.collect { case e: graft.functions.WallClockSeconds => e })
+      }.flatten
+    assert(clocks(notifs.toDF()).nonEmpty)
+    // a batch compile of the same program keeps the query-start time
+    val batch = new RaqlCompiler(spark, "/tmp")
+    batch.registerTable("tables/ev", Seq(Ev("a", 10, 1.0)).toDF())
+    RaqlParser.parseProgram(hostsShape60 + alert) match {
+      case Right(p) => batch.register("aged_batch", p)
+      case Left(e) => fail(s"parse: $e")
+    }
+    val batchNotifs = batch.notifications("aged_batch/alert").getOrElse(fail("no NOTIFY"))
+    assert(clocks(batchNotifs).isEmpty)
+    assert(batchNotifs.queryExecution.analyzed.toString.contains("unix_timestamp"))
+    val alerter = new Notify.Alerter
+    val perMinute = stageCompilesPerMinute(mem, notifs, alerter)
+    assert(alerter.incidents.count(_ == "START busy b") == 1, alerter.incidents)
+    perMinute.drop(2).foreach { case (compiles, ran) =>
+      assert(ran >= 1 && compiles <= ran, perMinute)
+    }
+  }
+
+  /** Per micro-batch of the streaming query `q` started in `body`: the
+    * jobs it ran and the tasks of each job's last stage. */
+  private def jobsPerBatch[A](body: => A): (A, Map[Long, Seq[Int]]) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int)]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => jobs.add((b.toLong, j.stageInfos.maxBy(_.stageId).numTasks)))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      org.apache.spark.sql.GraftShims.drainListenerBus(sc)
+      import scala.jdk.CollectionConverters._
+      (a, jobs.asScala.toSeq.groupBy(_._1).map { case (b, js) => b -> js.map(_._2) })
+    } finally sc.removeSparkListener(listener)
   }
 
   test("the NOTIFY sink runs a 4-partition stateful micro-batch as one job") {
     implicit val sqlCtx = spark.sqlContext
-    val sc = spark.sparkContext
     val mem = MemoryStream[Ev]
     val alerter = new Notify.Alerter
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
-    sc.addSparkListener(listener)
-    try {
-      val q = busyAlertsOverEv(mem, "onejob").writeStream.foreachBatch {
-        (b: org.apache.spark.sql.Dataset[Notification], _: Long) =>
-          val parts = b.rdd.getNumPartitions
-          org.apache.spark.sql.GraftShims.drainListenerBus(sc)
-          val j0 = jobs.get
-          Notify.sinkBatch(b, alerter, 100000)
-          org.apache.spark.sql.GraftShims.drainListenerBus(sc)
-          seen.add((parts, jobs.get - j0))
-          ()
-      }.start()
+    val ((), batches) = jobsPerBatch {
+      val q = Notify.sink(busyAlertsOverEv(mem, "onejob"), alerter).start()
       try {
         mem.addData(Ev("a", 10, 1.0), Ev("b", 10, 1.0), Ev("b", 20, 1.0))
         q.processAllAvailable()
         mem.addData(Ev("a", 70, 1.0))
         q.processAllAvailable()
       } finally q.stop()
-    } finally sc.removeSparkListener(listener)
+    }
     assert(alerter.incidents.contains("START busy b"), alerter.incidents)
-    val batches = seen.toArray.toSeq
-    assert(batches.nonEmpty && batches.forall(_ == ((4, 1))), batches)
+    // one job per batch, whose last stage writes the 4 state partitions
+    assert(batches.nonEmpty && batches.values.forall(_ == Seq(4)), batches)
+  }
+
+  test("the NOTIFY sink's micro-batch plan is the write itself: no object round trip, no LogicalRDD") {
+    import org.apache.spark.sql.catalyst.plans.logical.{DeserializeToObject, SerializeFromObject}
+    import org.apache.spark.sql.execution.{DeserializeToObjectExec, LogicalRDD, RDDScanExec, SerializeFromObjectExec}
+    import org.apache.spark.sql.execution.datasources.v2.WriteToDataSourceV2Exec
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val q = Notify.sink(busyAlertsOverEv(mem, "planpin"), new Notify.Alerter).start()
+    val exec = try {
+      mem.addData(Ev("a", 10, 1.0), Ev("a", 20, 1.0))
+      q.processAllAvailable()
+      mem.addData(Ev("b", 70, 1.0))
+      q.processAllAvailable()
+      q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution
+    } finally q.stop()
+    assert(exec.executedPlan.isInstanceOf[WriteToDataSourceV2Exec], exec.executedPlan)
+    val physical = exec.executedPlan.collect {
+      case p @ (_: DeserializeToObjectExec | _: SerializeFromObjectExec | _: RDDScanExec) => p
+    }
+    val logical = exec.optimizedPlan.collect {
+      case p @ (_: DeserializeToObject | _: SerializeFromObject | _: LogicalRDD) => p
+    }
+    assert(physical.isEmpty && logical.isEmpty, exec.executedPlan)
+  }
+
+  test("a NOTIFY checkpoint written by a foreachBatch sink restarts under Notify.sink and delivers the remaining alerts once each") {
+    implicit val sqlCtx = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_notify_restart").toString
+    val mem = MemoryStream[Ev]
+    val notifs = busyAlertsOverEv(mem, "nrestart")
+    val before, after = new Notify.Alerter
+    val q1 = notifs.writeStream.foreachBatch {
+      (b: org.apache.spark.sql.Dataset[Notification], _: Long) =>
+        Notify.sinkBatch(b, before, 100000); ()
+    }.option("checkpointLocation", ckpt).start()
+    val firstLast = try {
+      mem.addData(Ev("a", 10, 1.0), Ev("a", 20, 1.0), Ev("b", 30, 1.0))
+      q1.processAllAvailable()
+      mem.addData(Ev("c", 70, 1.0), Ev("c", 80, 1.0)) // closes [0,60): a fires
+      q1.processAllAvailable()
+      lastBatchId(q1)
+    } finally q1.stop()
+    val q2 = Notify.sink(notifs, after).option("checkpointLocation", ckpt).start()
+    val secondFirst = try {
+      mem.addData(Ev("d", 130, 1.0), Ev("d", 140, 1.0)) // closes [60,120): c fires
+      q2.processAllAvailable()
+      val first = q2.recentProgress.map(_.batchId).min
+      mem.addData(Ev("e", 190, 1.0)) // closes [120,180): d fires
+      q2.processAllAvailable()
+      first
+    } finally q2.stop()
+    assert(secondFirst == firstLast + 1, s"batch ids ${firstLast} then $secondFirst")
+    assert(before.incidents.filter(_.startsWith("START")) == Seq("START busy a"),
+      before.incidents)
+    // nothing the first run delivered is delivered again
+    assert(after.incidents.filter(_.startsWith("START")) ==
+      Seq("START busy c", "START busy d"), after.incidents)
+  }
+
+  for (mode <- Seq("append", "update", "complete"))
+  test(s"Notify.sink delivers a stream in $mode output mode") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[String]
+    val notifs =
+      if (mode == "append") mem.toDS().map(u => Notification(s"busy $u", firing = true, Map.empty))
+      else mem.toDS().groupByKey(identity).count().map { case (u, n) =>
+        Notification(s"busy $u", firing = n > 1, Map("n" -> n.toString))
+      }
+    val alerter = new Notify.Alerter
+    val q = Notify.sink(notifs, alerter).outputMode(mode).start()
+    try {
+      mem.addData("a", "b")
+      q.processAllAvailable()
+      mem.addData("a")
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(q.exception.isEmpty, q.exception)
+    assert(alerter.incidents.contains("START busy a"), alerter.incidents)
+    assert(alerter.currentlyFiring.contains("busy a"), alerter.incidents)
+    assert(alerter.currentlyFiring.contains("busy b") == (mode == "append"), alerter.incidents)
+  }
+
+  test("Notify.sink without a checkpointLocation runs on a temporary one, deleted at stop; no alerter stays registered") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val parked = graft.streaming.NotifySink.parked
+    val w = Notify.sink(busyAlertsOverEv(mem, "tempckpt"), new Notify.Alerter)
+    assert(graft.streaming.NotifySink.parked == parked + 1)
+    val q = w.start()
+    val root = new java.io.File(new org.apache.hadoop.fs.Path(
+      q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.resolvedCheckpointRoot).toUri.getPath)
+    try {
+      mem.addData(Ev("a", 10, 1.0), Ev("a", 70, 1.0))
+      q.processAllAvailable()
+      assert(new java.io.File(root, "commits").isDirectory, root)
+      assert(root.getName.startsWith("temporary-"), root)
+    } finally q.stop()
+    assert(graft.streaming.NotifySink.parked == parked)
+    // the query-terminated event reaches the listener asynchronously
+    val deadline = System.currentTimeMillis() + 20000
+    while (root.exists() && System.currentTimeMillis() < deadline) Thread.sleep(100)
+    assert(!root.exists(), s"$root left behind")
   }
 
   test("a non-time COMMIT on a streaming time-bucket routes to the expr-commit harness") {
@@ -1910,6 +2052,65 @@ class StreamingSpec extends AnyFunSuite {
     assert(cpu.length == 2)
     assert(math.abs(cpu(0) - 0.4) < 1e-9, s"tot_cpu after one trigger: $cpu")
     assert(math.abs(cpu(1) - 0.52) < 1e-9, s"cumulative tot_cpu: $cpu")
+  }
+
+  test("a query reading the stats stream does not feed it: after the monitored query stops, its batch id stops advancing") {
+    implicit val sqlCtx = spark.sqlContext
+    val reader = graft.streaming.Instrumentation(spark).df.writeStream.format("memory")
+      .queryName("instr_idle").outputMode("append").start()
+    try {
+      val mem = MemoryStream[Ev]
+      val work = mem.toDS().writeStream.format("memory").queryName("instr_idle_work")
+        .outputMode("append").start()
+      try (1 to 3).foreach { i => mem.addData(Ev("a", i, 1.0)); work.processAllAvailable() }
+      finally work.stop()
+      def rows(worker: String) = spark.table("instr_idle").filter($"worker" === worker).count()
+      // listener events are async: wait until the reader holds the rows
+      val deadline = System.currentTimeMillis() + 20000
+      while (rows("instr_idle_work") < 3 && System.currentTimeMillis() < deadline)
+        Thread.sleep(200)
+      assert(rows("instr_idle_work") >= 3)
+      // then two looks 2 s apart see the same last batch
+      var (last, settled) = (lastBatchId(reader), false)
+      while (!settled && System.currentTimeMillis() < deadline + 10000) {
+        Thread.sleep(2000)
+        val now = lastBatchId(reader)
+        settled = now == last
+        last = now
+      }
+      assert(settled, s"the stats reader is still running batches (last $last)")
+      assert(rows("instr_idle") == 0)
+    } finally reader.stop()
+  }
+
+  test("instrumentation counts a Notify.sink query's output rows, and a foreachBatch query's never below zero") {
+    implicit val sqlCtx = spark.sqlContext
+    val stats = graft.streaming.Instrumentation(spark).df
+    val ints, names = MemoryStream[Int]
+    val fb = ints.toDS().writeStream.queryName("out_foreach_batch").foreachBatch {
+      (_: org.apache.spark.sql.Dataset[Int], _: Long) => ()
+    }.start()
+    val ns = Notify.sink(names.toDS().map(i => Notification(s"n$i", firing = true, Map.empty)),
+      new Notify.Alerter).queryName("out_notify").start()
+    try {
+      ints.addData(1, 2, 3); fb.processAllAvailable(); ints.addData(4); fb.processAllAvailable()
+      names.addData(1, 2, 3); ns.processAllAvailable(); names.addData(4, 5); ns.processAllAvailable()
+    } finally { fb.stop(); ns.stop() }
+    val reader = stats.filter($"worker".isin("out_foreach_batch", "out_notify"))
+      .writeStream.format("memory").queryName("out_stats").outputMode("append").start()
+    def out(worker: String) = spark.table("out_stats").filter($"worker" === worker)
+      .select("tot_out_tuples").as[Long].collect().toSeq
+    try {
+      val deadline = System.currentTimeMillis() + 20000
+      while ((out("out_notify").maxOption.forall(_ < 5) || out("out_foreach_batch").size < 2) &&
+          System.currentTimeMillis() < deadline) {
+        Thread.sleep(200)
+        reader.processAllAvailable()
+      }
+    } finally reader.stop()
+    assert(out("out_notify").maxOption.contains(5L), out("out_notify"))
+    assert(out("out_foreach_batch").size >= 2 && out("out_foreach_batch").forall(_ == 0L),
+      out("out_foreach_batch"))
   }
 
   test("streaming PREPROCESS WITH: a gzip landing mid-query appears next trigger") {
