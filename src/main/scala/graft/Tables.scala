@@ -20,7 +20,7 @@ object Tables {
     * table registration (the RaQL compiler registers all ten) was paying
     * it every invocation. A table re-load is now plan construction only.
     * One entry per (session, path), replaced when the directory SIGNATURE
-    * changes, so rewrite-then-reload callers (SkewBench/ScaleProbe corpus
+    * changes, so rewrite-then-reload callers (ScaleProbe corpus
     * regeneration) stay correct and the map is bounded by the number of
     * distinct table paths; the weak session key lets a stopped session's
     * plans be collected.

@@ -17,9 +17,12 @@ import Ast._
   * `sum(distinct x)` counting idiom, percentiles, SPLIT generators
   * (cartesian explode), YIELD, and READ…AS CSV with the RaQL type algebra.
   *
-  * Streaming commit conditions (`COMMIT BEFORE in.start >= out.stop`) and
-  * feedback variables (`previous.*`) route to graft.streaming.CommitHarness
-  * instead and are rejected here.
+  * On a streaming source, a time-bucket COMMIT compiles to an event-time
+  * window + watermark and every other COMMIT (conditions such as
+  * `COMMIT AFTER out.total >= 10`, feedback variables `previous.*`) to
+  * graft.streaming.CommitHarness. The harness evaluates the same
+  * [[compileExpr]] Catalyst expressions, over the group's state slots, so
+  * batch and stream share one RaQL semantics.
   */
 final class RaqlCompiler(spark: SparkSession, baseDir: String) {
 
@@ -3007,19 +3010,21 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
   /** Streaming translation of an ARBITRARY `COMMIT AFTER/BEFORE cond` —
     * the general per-tuple commit check of the reference
     * (/root/reference/src/CodeGenLib_Skeletons.ml:433-930): group state
-    * folds the SELECT fields' decomposable aggregates in the state store,
-    * and the condition — any expression over `in.*` fields, `out.*`
-    * fields, literals, arithmetic/comparisons/boolean ops, and
-    * decomposable aggregates (which become hidden state slots) — is
-    * evaluated per input tuple by a serializable interpreter
-    * ([[CommitCond]]/[[ExprCommitRt]]). `COMMIT BEFORE` checks the
-    * PRE-update state against the incoming tuple and emits the previous
-    * window first (tumbling.ramen's shape); `KEEP` preserves state on
-    * commit. Every streaming COMMIT that [[streamTimeBucket]] does not
-    * plan as a time bucket lands here, the count-commit `COMMIT AFTER
-    * SUM 1 >= k` included (its `SUM 1` becomes a hidden slot, and the
-    * flush resets it); time-bucket commits take the window+watermark
-    * translation instead (bounded state — preferred where it applies).
+    * folds the decomposable aggregates of the SELECT fields and of the
+    * condition in the state store, and the fields and the condition are
+    * [[compileExpr]]'s expressions over those slots, the condition's
+    * in-field subtrees and the group's last committed row (`previous.*`),
+    * run by Catalyst's interpreter ([[ExprCommitRt]]). Stream and batch
+    * therefore share one RaQL semantics: a NULL CASE condition makes the
+    * CASE NULL, `/`, `//` and `%` by zero are NULL, `%` is Spark's
+    * remainder. `COMMIT BEFORE` checks the PRE-update state against the
+    * incoming tuple and emits the previous window first (tumbling.ramen's
+    * shape); `KEEP` preserves state on commit. Every streaming COMMIT that
+    * [[streamTimeBucket]] does not plan as a time bucket lands here, the
+    * count-commit `COMMIT AFTER SUM 1 >= k` included (its `SUM 1` becomes a
+    * hidden slot, and the flush resets it); time-bucket commits take the
+    * window+watermark translation instead (bounded state — preferred where
+    * it applies).
     *
     * State lifetime caveat (documented, reference-identical): a group
     * whose condition never fires holds its slots until it does — the
@@ -3030,8 +3035,11 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
       named0: Seq[(Expr, String)], agg: Aggregate, params: Map[String, Expr],
       splitCols: Map[FunCall, Column]): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSeq,
+      BindReferences, Expression}
+    import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
     import graft.streaming.{CommitHarness, GroupSpec}
-    import CommitCond._
 
     // substitute refs to earlier aggregate-bearing out fields with their
     // defining expressions (the batch paths do the same), so compound
@@ -3039,63 +3047,31 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     // over aggregate slots
     val named = subAggAliases(named0, src.columns.toSet,
       scala.collection.mutable.Map.empty)
-    // scalar compilation of condition subtrees (length, abs, …) may need
-    // the source schema for typing
+    if (agg.groupBy.nonEmpty && named.exists(_._1.exists {
+        case AggCall(_, _, mods, _) => mods("globally")
+        case _ => false
+      })) unsupported("streaming expression-commit: GLOBALLY aggregates " +
+      "under GROUP BY would need cross-group state")
+    // slot operands and in-field subtrees compile over the source
     typerDf = Some(src)
     try {
     val decomp = Set("count", "sum", "min", "max", "avg", "first", "last")
-    val arith = Set("and", "or", "=", "<>", "!=", ">", ">=", "<", "<=",
-      "+", "-", "*", "/", "//", "%", "^")
-    val slots = scala.collection.mutable.ArrayBuffer.empty[(String, Column)]
-    def slotFor(kind: String, c: Column): Node = {
-      slots += ((kind, c)); CSlot(slots.length - 1)
-    }
-    // every SELECT field is a NODE over aggregate/pass slots: stateless
-    // subtrees take group-last semantics (one "pass" slot), decomposable
-    // aggregates fold in the state store, arithmetic combines at emit
+    val srcCols = src.columns.toSet
     val outIdx: Map[String, Int] = named.map(_._2).zipWithIndex.toMap
+    // The input row is projected as [_gkey, _v0.. (slot operands), _in0..
+    // (the condition's in-field subtrees)]. The rewritten fields and
+    // condition read the frame [_s0.. (slot values), _in0.., _p0.. (the
+    // group's previous committed row)].
+    val slots = scala.collection.mutable.ArrayBuffer.empty[(String, Column)]
+    def slot(kind: String, op: Expr): Expr = {
+      slots += ((kind, compileExpr(op, params, splitCols)))
+      Ref(Seq(s"_s${slots.length - 1}"))
+    }
+    val inCols = scala.collection.mutable.ArrayBuffer.empty[Column]
+    val ins = scala.collection.mutable.Map.empty[Expr, Expr]
     def hasPrev(e: Expr): Boolean = e.exists {
       case Ref(Seq("previous" | "local_last_out", _)) => true
       case _ => false
-    }
-    def buildField(e: Expr): Node = e match {
-      case _ if !hasAgg(e) && !hasPrev(e) =>
-        slotFor("pass", compileExpr(e, params, splitCols))
-      case AggCall(fn, op, mods, _) if decomp(fn) && !hasAgg(op) =>
-        if (mods.contains("globally") && agg.groupBy.nonEmpty) unsupported(
-          "streaming expression-commit: GLOBALLY aggregates under GROUP BY " +
-          "would need cross-group state")
-        slotFor(fn, compileExpr(op, params, splitCols))
-      case Binop(op, l, r) if arith(op) => CBin(op, buildField(l), buildField(r))
-      case Unop(op @ ("not" | "neg"), x) => CUn(op, buildField(x))
-      case IsNull(x, neg) => CIsNull(buildField(x), neg)
-      case CaseExpr(br, el) => CCase(
-        br.map { case (c0, v) => (buildField(c0), buildField(v)) },
-        el.map(buildField))
-      case FunCall("coalesce", args) if args.nonEmpty =>
-        // a |? b ≡ CASE WHEN a IS NOT NULL THEN a ELSE b
-        args.map(buildField).reduceRight((a, b) =>
-          CCase(Seq((CIsNull(a, negated = true), a)), Some(b)))
-      // previous.x / local_last_out.x — the group's LAST COMMITTED value
-      // of out field x (NULL before the first commit); the harness hands
-      // the previous row to emit, the node just indexes it
-      case Ref(Seq("previous" | "local_last_out", nm)) =>
-        outIdx.get(nm).map(CPrev.apply).getOrElse(unsupported(
-          s"previous.$nm does not name a SELECT field"))
-      case other => unsupported(
-        s"streaming expression-commit field $other (decomposable aggregates " +
-        "composed with arithmetic stream through the harness)")
-    }
-    val fieldNodes: Array[Node] = named.map(f => buildField(f._1)).toArray
-    val srcCols = src.columns.toSet
-    val inRefs = scala.collection.mutable.LinkedHashMap.empty[String, Column]
-    // project a STATELESS in-field expression as an extra input column —
-    // bare refs and whole scalar subtrees (length(user), abs(x - y), …)
-    // alike; Catalyst codegens them, the interpreter just reads the value
-    def mkIn(e: Expr): Node = {
-      val k = e.toString
-      if (!inRefs.contains(k)) inRefs(k) = compileExpr(e, params, splitCols)
-      CIn(inRefs.keysIterator.indexOf(k)) // index; rebased after slots final
     }
     def inOnly(e: Expr): Boolean = e match {
       case Ref(Seq("in", n)) => srcCols(n)
@@ -3104,56 +3080,41 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
       case _: AggCall | _: PercentileCall => false
       case _ => e.children.forall(inOnly)
     }
-    def buildCond(e: Expr): Node = e match {
-      // a literal is a constant node, not a projected input column
-      case Lit(v) => CLit(v)
-      // a fully-stateless subtree over in-fields evaluates in the
-      // projection (one codegen'd column), not the interpreter
-      case e2 if !hasAgg(e2) && inOnly(e2) => mkIn(e2)
-      case Ref(Seq("out", nm)) => outIdx.get(nm).map(fieldNodes.apply).getOrElse(
-        unsupported(s"commit condition reads out.$nm which is not a SELECT field"))
-      case Ref(Seq(nm)) if outIdx.contains(nm) => fieldNodes(outIdx(nm))
-      // previous.x in a COMMIT condition — the group's last committed value
-      // of out field x (NULL before the first commit, so comparisons are
-      // false until then, matching the reference's uninitialized previous)
+    val stateRefs: PartialFunction[Expr, Expr] = {
+      case AggCall(fn, op, _, _) if decomp(fn) && !hasAgg(op) => slot(fn, op)
+      // previous.x / local_last_out.x — the group's LAST COMMITTED value
+      // of out field x (NULL before the first commit)
       case Ref(Seq("previous" | "local_last_out", nm)) =>
-        outIdx.get(nm).map(CPrev.apply).getOrElse(unsupported(
+        outIdx.get(nm).map(j => Ref(Seq(s"_p$j"))).getOrElse(unsupported(
           s"previous.$nm does not name a SELECT field"))
-      case AggCall(fn, op, _, _) if decomp(fn) && !hasAgg(op) =>
-        slotFor(fn, compileExpr(op, params, splitCols))
-      case Binop(op, l, r) if arith(op) => CBin(op, buildCond(l), buildCond(r))
-      case Unop(op @ ("not" | "neg"), x) => CUn(op, buildCond(x))
-      case IsNull(x, neg) => CIsNull(buildCond(x), neg)
-      case CaseExpr(br, el) => CCase(
-        br.map { case (c0, v) => (buildCond(c0), buildCond(v)) },
-        el.map(buildCond))
-      case FunCall("coalesce", args) if args.nonEmpty =>
-        args.map(buildCond).reduceRight((a, b) =>
-          CCase(Seq((CIsNull(a, negated = true), a)), Some(b)))
-      case other => unsupported(
-        s"streaming commit condition term $other (supported: stateless " +
-        "scalar expressions over in-fields, out-field refs, " +
-        "arithmetic/comparison/boolean/CASE/coalesce operators, " +
-        "decomposable aggregates)")
     }
-    val condRaw = buildCond(agg.commitCond.get)
-    // mkIn encoded each in-ref's first-use INDEX (slots were still being
-    // discovered); the final row layout is [key, v0..v{nSlots-1}, in0..],
-    // so rebase every CIn to 1 + nSlots + index. Field nodes never
-    // contain CIn (stateless subtrees became pass slots).
-    val nSlots = slots.length
-    val inNames = inRefs.keys.toIndexedSeq
-    def reoffset(n: Node): Node = n match {
-      case CIn(idx) => CIn(1 + nSlots + idx)
-      case CBin(op, l, r) => CBin(op, reoffset(l), reoffset(r))
-      case CUn(op, x) => CUn(op, reoffset(x))
-      case CIsNull(x, neg) => CIsNull(reoffset(x), neg)
-      case CCase(br, el) => CCase(
-        br.map { case (c0, v) => (reoffset(c0), reoffset(v)) },
-        el.map(reoffset))
-      case other => other
+    // a stateless field subtree takes group-last semantics (a "pass"
+    // slot); a literal keeps its slot, the state layout of existing
+    // checkpoints, but reads as the constant
+    val passSlot: PartialFunction[Expr, Expr] = {
+      case l: Lit => slot("pass", l); l
+      case e if !hasAgg(e) && !hasPrev(e) => slot("pass", e)
     }
-    val cond = reoffset(condRaw)
+    val fields = named.map(_._1.transform(passSlot.orElse(stateRefs)))
+    def outField(nm: String): Expr = outIdx.get(nm).map(fields).getOrElse(
+      unsupported(s"commit condition reads out.$nm which is not a SELECT field"))
+    // a condition's stateless subtree over in-fields is one projected
+    // input column, evaluated by the projection
+    val condTerm: PartialFunction[Expr, Expr] = {
+      case l: Lit => l
+      case e if !hasAgg(e) && inOnly(e) => ins.getOrElseUpdate(e, {
+        inCols += compileExpr(e, params, splitCols)
+        Ref(Seq(s"_in${inCols.length - 1}"))
+      })
+      case Ref(Seq("out", nm)) => outField(nm)
+      case Ref(Seq(nm)) if outIdx.contains(nm) => outField(nm)
+    }
+    val cond = agg.commitCond.get.transform(condTerm.orElse(stateRefs))
+    (named.map(_._2).zip(fields) :+ ("the commit condition" -> cond)).foreach {
+      case (what, e) => if (hasAgg(e)) unsupported(s"streaming expression-" +
+        s"commit: $what holds an aggregate that does not fold per tuple " +
+        s"(decomposable: ${decomp.mkString(", ")} over a scalar operand)")
+    }
 
     val keyCol =
       if (agg.groupBy.isEmpty) lit("")
@@ -3163,77 +3124,69 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
     val proj = src.select(
       (keyCol.as("_gkey") +: slots.toSeq.zipWithIndex.map { case ((_, c), i) =>
         c.as(s"_v$i")
-      }) ++ inNames.zipWithIndex.map { case (nm, j) =>
-        inRefs(nm).as(s"_in$j")
-      }: _*)
+      }) ++ inCols.toSeq.zipWithIndex.map { case (c, j) => c.as(s"_in$j") }: _*)
     def integral(dt: DataType) = dt match {
       case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
     }
     val vTypes = slots.indices.map(i => proj.schema.fields(i + 1).dataType)
-    val typingPrev = new Array[Boolean](named.length)
-    // static type of a node — mirrored EXACTLY by ExprCommitRt.eval's
-    // runtime behavior (integral arithmetic stays Long; /, ^ and any
-    // double operand widen to Double; comparisons/logic are Boolean)
-    def nodeType(n: Node): DataType = n match {
-      case CSlot(i) => slots(i)._1 match {
-        case "count" => LongType
-        case "sum" => if (integral(vTypes(i))) LongType else DoubleType
-        case "avg" => DoubleType
-        case _ => vTypes(i)
+    val slotTypes = slots.indices.map(i => slots(i)._1 match {
+      case "count" => LongType
+      case "sum" => if (integral(vTypes(i))) LongType else DoubleType
+      case "avg" => DoubleType
+      case _ => vTypes(i)
+    })
+    val inTypes = inCols.indices.map(j =>
+      proj.schema.fields(1 + slots.length + j).dataType)
+    val frameNames = slots.indices.map(i => s"_s$i") ++
+      inCols.indices.map(j => s"_in$j") ++ named.indices.map(j => s"_p$j")
+    // the fields and the condition analyzed over an empty frame, bound
+    // to its columns: previous.* reads the fields' own types, settled by
+    // iterating from NULL (a field may read previous.* of itself)
+    def resolve(prevTypes: Seq[DataType]): (StructType, Seq[Expression]) = {
+      val frame = StructType(frameNames.zip(slotTypes ++ inTypes ++ prevTypes)
+        .map { case (n, t) => StructField(n, t) })
+      val frameDf = spark.createDataFrame(java.util.List.of[Row](), frame)
+      typerDf = Some(frameDf)
+      val cols = fields.map(compileExpr(_, params, splitCols)) :+
+        compileExpr(cond, params, splitCols).cast("boolean")
+      ReplaceExpressions(frameDf.select(cols: _*).queryExecution.analyzed) match {
+        case Project(list, rel: LocalRelation) => (frame, list.map { e =>
+          BindReferences.bindReference(e match {
+            case Alias(c, _) => c
+            case c => c
+          }, AttributeSeq(rel.output))
+        })
+        case p => unsupported(
+          s"streaming expression-commit plans ${p.nodeName} over its slots")
       }
-      case CLit(v) => v match {
-        case null => NullType // typeless: compatible with any branch
-        case _: Boolean => BooleanType
-        case _: Int | _: Long | _: Short | _: Byte => LongType
-        case _: Double | _: Float => DoubleType
-        case _ => StringType
-      }
-      case CIn(_) => throw new IllegalStateException("CIn in a field node")
-      case CPrev(i) =>
-        if (typingPrev(i)) unsupported(
-          "self-recursive previous.* typing; give the field an explicit base")
-        else {
-          typingPrev(i) = true
-          try nodeType(fieldNodes(i)) finally typingPrev(i) = false
-        }
-      case CIsNull(_, _) => BooleanType
-      case CCase(br, el) =>
-        // NULL-literal branches (the parser's nullLit) are typeless and
-        // take whatever the other branches agree on — `IF c THEN NULL
-        // ELSE x` is a legitimate nullable field, not a type mismatch
-        val ts = (br.map(_._2) ++ el.toSeq).map(nodeType)
-          .filter(_ != NullType)
-        def numeric(t: DataType) =
-          integral(t) || t == DoubleType || t == FloatType
-        if (ts.isEmpty) NullType // every branch NULL: a constant-null field
-        else if (ts.forall(integral)) LongType
-        else if (ts.forall(numeric)) DoubleType
-        // after numeric widening, branches must agree — a stray string or
-        // boolean branch under a numeric schema would reach the row
-        // encoder unconverted and fail at runtime; reject at compile time
-        else if (ts.distinct.size == 1) ts.head
-        else unsupported("streaming expression-commit CASE with " +
-          s"incompatible branch types ${ts.distinct.mkString(", ")}")
-      case CUn("not", _) => BooleanType
-      case CUn(_, x) =>
-        if (integral(nodeType(x))) LongType else DoubleType
-      case CBin(op, l, r) =>
-        if (Set("and", "or", "=", "<>", "!=", ">", ">=", "<", "<=")(op))
-          BooleanType
-        else if (op == "/" || op == "^") DoubleType
-        else if (integral(nodeType(l)) && integral(nodeType(r))) LongType
-        else DoubleType
     }
-    val outSchema = StructType(named.zip(fieldNodes).map {
-      case ((_, name), nd) => StructField(name, nodeType(nd) match {
-        // a constant-NULL field still needs an encodable column type
-        case NullType => StringType
-        case t => t
-      })
+    @annotation.tailrec
+    def settle(prevTypes: Seq[DataType], left: Int): (StructType, Seq[Expression]) = {
+      val (frame, exprs) = resolve(prevTypes)
+      val types = exprs.init.map(_.dataType)
+      if (types == prevTypes) (frame, exprs)
+      else if (left == 0) unsupported(
+        "streaming expression-commit: the previous.* field types do not settle")
+      else settle(types, left - 1)
+    }
+    val (frame, exprs) = settle(named.map(_ => NullType), named.length + 1)
+    // a constant that cannot evaluate (a string branch cast to a numeric
+    // CASE type) fails the compile, not the running stream
+    def constants(e: Expression): Unit =
+      if (e.foldable) {
+        try e.eval()
+        catch { case scala.util.control.NonFatal(x) => unsupported(
+          s"streaming expression-commit: $e cannot evaluate: ${x.getMessage}") }
+      } else e.children.foreach(constants)
+    exprs.foreach(constants)
+    val outSchema = StructType(named.zip(exprs).map {
+      case ((_, name), e) => StructField(name, e.dataType)
     })
     val rt = new ExprCommitRt(slots.toSeq.map(_._1).toArray,
-      vTypes.map(integral).toArray, fieldNodes, outSchema, cond)
+      vTypes.map(integral).toArray, frame, exprs.last, exprs.init, outSchema)
+    val commits = (s: Array[Any], r: Row, p: Option[Row]) => rt.commits(s, r, p)
+    val never = (_: Array[Any], _: Row, _: Option[Row]) => false
     val before = agg.commitBefore
     CommitHarness.run[String, Row, Array[Any], Row](
       statefulInput(proj),
@@ -3241,12 +3194,8 @@ final class RaqlCompiler(spark: SparkSession, baseDir: String) {
       GroupSpec[Row, Array[Any], Row](
         init = () => rt.init(),
         update = (s, r) => rt.update(s, r),
-        commitAfter =
-          if (before) (_: Array[Any], _: Row, _: Option[Row]) => false
-          else (s, r, p) => rt.evalCond(s, r, p.orNull),
-        commitBefore =
-          if (before) (s, r, p) => rt.evalCond(s, r, p.orNull)
-          else (_: Array[Any], _: Row, _: Option[Row]) => false,
+        commitAfter = if (before) never else commits,
+        commitBefore = if (before) commits else never,
         emit = (s, prev) => rt.emit(s, prev),
         keepOnCommit = agg.commitKeep,
         // pending windows stay pending, like the reference on a live
@@ -3989,56 +3938,47 @@ object RaqlCompiler {
   }
 }
 
-/** Serializable AST for streaming commit CONDITIONS (see
-  * RaqlCompiler.compileStreamingExprCommit): the arbitrary-expression
-  * `COMMIT AFTER/BEFORE cond` of the reference
-  * (/root/reference/src/CodeGenLib_Skeletons.ml:433-930, where the
-  * condition is an OCaml closure over (in-tuple, group state)) becomes a
-  * tiny interpreted tree over (group state slots, projected input row).
-  * Interpretation is fine here: the condition runs once per input tuple
-  * against a handful of scalars — the heavy per-field math stays in the
-  * codegen'd projection upstream. */
-private[raql] object CommitCond {
-  sealed trait Node extends Serializable
-  /** literal */
-  final case class CLit(v: Any) extends Node
-  /** the group's CURRENT value of out-field/hidden slot i (post-transform:
-    * counts are longs, avgs are ratios) */
-  final case class CSlot(i: Int) extends Node
-  /** projected input-row position (the in.* refs of the condition) */
-  final case class CIn(pos: Int) extends Node
-  final case class CBin(op: String, l: Node, r: Node) extends Node
-  final case class CUn(op: String, x: Node) extends Node
-  final case class CIsNull(x: Node, negated: Boolean) extends Node
-  /** CASE WHEN chain; `coalesce`/`|?` lowers to IS-NOT-NULL branches. */
-  final case class CCase(branches: Seq[(Node, Node)], otherwise: Option[Node])
-      extends Node
-  /** field i of the group's PREVIOUS committed output row (RaQL
-    * `previous.x` — NULL before the first commit). Valid in fields AND in
-    * commit conditions: the harness threads the last committed row into
-    * both emit and the condition closures. */
-  final case class CPrev(i: Int) extends Node
-}
-
-/** Serializable fold runtime for the streaming ARBITRARY-expression commit
+/** Serializable fold runtime of the streaming expression-commit
   * translation (RaqlCompiler.compileStreamingExprCommit) — the general
   * form of the reference's per-tuple commit check
   * (/root/reference/src/CodeGenLib_Skeletons.ml:433-930): update the
   * group's decomposable-aggregate slots, then evaluate the commit
-  * condition tree against (slots, input row). Slots 0..nOut-1 are the
-  * SELECT fields (emitted); slots nOut..nSlots-1 are HIDDEN aggregates
-  * the condition mentions (e.g. the `SUM 1` of `COMMIT AFTER SUM 1 >=
-  * out.n_max`) — same fold, never emitted. Kept top-level so CommitHarness
-  * closures capture ONLY this value, never the compiler. */
+  * condition (per input tuple) and the fields (at emit). Both are
+  * Catalyst expressions bound to `frame` = [slot values, the projected
+  * in-field subtrees, the previous committed row], run by Catalyst's
+  * interpreter, built once per task: no code is generated per trigger.
+  * Slots are the SELECT fields' aggregates and stateless subtrees and
+  * the condition's HIDDEN aggregates (e.g. the `SUM 1` of `COMMIT AFTER
+  * SUM 1 >= out.n_max`) — same fold, read only through the expressions.
+  * Kept top-level so CommitHarness closures capture ONLY this value,
+  * never the compiler. */
 private[raql] final class ExprCommitRt(
     kinds: Array[String], integralSlot: Array[Boolean],
-    fieldNodes: Array[CommitCond.Node],
-    schema: org.apache.spark.sql.types.StructType, cond: CommitCond.Node)
-    extends Serializable {
+    frame: StructType,
+    cond: org.apache.spark.sql.catalyst.expressions.Expression,
+    fields: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+    schema: StructType) extends Serializable {
   import org.apache.spark.sql.Row
-  import CommitCond._
+  import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+  import org.apache.spark.sql.catalyst.expressions.{GenericRow,
+    InterpretedPredicate, InterpretedProjection}
 
   private val nSlots = kinds.length
+
+  @transient private lazy val toFrame =
+    CatalystTypeConverters.createToCatalystConverter(frame)
+  @transient private lazy val toRow =
+    CatalystTypeConverters.createToScalaConverter(schema)
+  @transient private lazy val predicate = {
+    val p = InterpretedPredicate(cond)
+    p.initialize(org.apache.spark.TaskContext.getPartitionId())
+    p
+  }
+  @transient private lazy val projection = {
+    val p = new InterpretedProjection(fields)
+    p.initialize(org.apache.spark.TaskContext.getPartitionId())
+    p
+  }
 
   private def numD(a: Any): Double = a match {
     case x: java.lang.Number => x.doubleValue
@@ -4056,11 +3996,6 @@ private[raql] final class ExprCommitRt(
       java.lang.Double.compare(x.doubleValue, y.doubleValue)
     case (x: Comparable[Any] @unchecked, y) => x.compareTo(y)
     case _ => 0
-  }
-  private def integralVal(a: Any): Boolean = a match {
-    case _: java.lang.Long | _: java.lang.Integer |
-         _: java.lang.Short | _: java.lang.Byte => true
-    case _ => false
   }
 
   def init(): Array[Any] = new Array[Any](nSlots)
@@ -4108,102 +4043,28 @@ private[raql] final class ExprCommitRt(
     case _ => s(i)
   }
 
-  private def truthy(v: Any): Boolean = v match {
-    case null => false
-    case b: java.lang.Boolean => b
-    case n: java.lang.Number => n.doubleValue != 0.0
-    case _ => false
-  }
-
-  private def eval(n: Node, s: Array[Any], row: Row, prev: Row): Any = n match {
-    case CLit(v) => v
-    case CSlot(i) => slotVal(s, i)
-    case CIn(p) => if (row.isNullAt(p)) null else row.get(p)
-    case CPrev(i) =>
-      if (prev == null || prev.isNullAt(i)) null else prev.get(i)
-    case CIsNull(x, neg) =>
-      java.lang.Boolean.valueOf((eval(x, s, row, prev) == null) != neg)
-    case CCase(branches, otherwise) =>
-      branches.collectFirst {
-        case (c, v) if truthy(eval(c, s, row, prev)) => eval(v, s, row, prev)
-      }.orElse(otherwise.map(eval(_, s, row, prev))).orNull
-    case CUn("not", x) => eval(x, s, row, prev) match {
-      case null => null
-      case v => java.lang.Boolean.valueOf(!truthy(v))
+  /** The frame row: slot values, then the input row's projected in-field
+    * subtrees (none at emit), then the previous committed row (NULLs
+    * before the first commit). */
+  private def frameRow(s: Array[Any], row: Row, prev: Option[Row]): InternalRow = {
+    val vals = new Array[Any](frame.length)
+    var i = 0
+    while (i < nSlots) { vals(i) = slotVal(s, i); i += 1 }
+    val prevAt = frame.length - schema.length
+    if (row != null) while (i < prevAt) { vals(i) = row.get(i + 1); i += 1 }
+    prev.foreach { p =>
+      var j = 0
+      while (j < schema.length) { vals(prevAt + j) = p.get(j); j += 1 }
     }
-    case CUn("neg", x) => eval(x, s, row, prev) match {
-      case null => null
-      case v if integralVal(v) => java.lang.Long.valueOf(-numL(v))
-      case v => java.lang.Double.valueOf(-numD(v))
-    }
-    case CUn(op, _) => throw new IllegalStateException(s"commit unop $op")
-    case CBin("and", l, r) =>
-      java.lang.Boolean.valueOf(
-        truthy(eval(l, s, row, prev)) && truthy(eval(r, s, row, prev)))
-    case CBin("or", l, r) =>
-      java.lang.Boolean.valueOf(
-        truthy(eval(l, s, row, prev)) || truthy(eval(r, s, row, prev)))
-    case CBin(op, l, r) =>
-      val a = eval(l, s, row, prev); val b = eval(r, s, row, prev)
-      if (a == null || b == null) null
-      else op match {
-        case "=" => java.lang.Boolean.valueOf(cmp(a, b) == 0)
-        case "<>" | "!=" => java.lang.Boolean.valueOf(cmp(a, b) != 0)
-        case ">" => java.lang.Boolean.valueOf(cmp(a, b) > 0)
-        case ">=" => java.lang.Boolean.valueOf(cmp(a, b) >= 0)
-        case "<" => java.lang.Boolean.valueOf(cmp(a, b) < 0)
-        case "<=" => java.lang.Boolean.valueOf(cmp(a, b) <= 0)
-        case _ =>
-          val ints = integralVal(a) && integralVal(b)
-          op match {
-            case "+" =>
-              if (ints) java.lang.Long.valueOf(numL(a) + numL(b))
-              else java.lang.Double.valueOf(numD(a) + numD(b))
-            case "-" =>
-              if (ints) java.lang.Long.valueOf(numL(a) - numL(b))
-              else java.lang.Double.valueOf(numD(a) - numD(b))
-            case "*" =>
-              if (ints) java.lang.Long.valueOf(numL(a) * numL(b))
-              else java.lang.Double.valueOf(numD(a) * numD(b))
-            case "/" => java.lang.Double.valueOf(numD(a) / numD(b))
-            case "//" =>
-              if (ints) java.lang.Long.valueOf(Math.floorDiv(numL(a), numL(b)))
-              else java.lang.Double.valueOf(math.floor(numD(a) / numD(b)))
-            case "%" =>
-              if (ints) java.lang.Long.valueOf(Math.floorMod(numL(a), numL(b)))
-              else java.lang.Double.valueOf(numD(a) % numD(b))
-            case "^" => java.lang.Double.valueOf(math.pow(numD(a), numD(b)))
-            case other => throw new IllegalStateException(s"commit binop $other")
-          }
-      }
+    toFrame(new GenericRow(vals)).asInstanceOf[InternalRow]
   }
 
   /** Commit-condition check. `prev` is the group's last committed output
-    * row (RaQL `previous.*` — null before the first commit), threaded from
-    * the harness so conditions (and out-field refs whose definitions embed
-    * previous.*) read real feedback values instead of eternal NULLs. */
-  def evalCond(s: Array[Any], row: Row, prev: Row): Boolean =
-    truthy(eval(cond, s, row, prev))
+    * row (RaQL `previous.*` — None before the first commit), threaded from
+    * the harness. A NULL condition does not commit. */
+  def commits(s: Array[Any], row: Row, prev: Option[Row]): Boolean =
+    predicate.eval(frameRow(s, row, prev))
 
-  def emit(s: Array[Any], prev: Option[Row]): Row = {
-    val prevRow = prev.orNull
-    val vals = new Array[Any](fieldNodes.length)
-    var i = 0
-    // field nodes never contain CIn (compile-time invariant), so the
-    // current-row argument is unused at emit. Numeric values coerce to
-    // the declared field type (CASE branches / literals may carry a
-    // narrower runtime type than the statically-widened schema).
-    while (i < fieldNodes.length) {
-      vals(i) = (schema(i).dataType, eval(fieldNodes(i), s, null, prevRow)) match {
-        case (org.apache.spark.sql.types.LongType, n: java.lang.Number) =>
-          java.lang.Long.valueOf(n.longValue)
-        case (org.apache.spark.sql.types.DoubleType, n: java.lang.Number) =>
-          java.lang.Double.valueOf(n.doubleValue)
-        case (_, raw) => raw
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-      vals, schema)
-  }
+  def emit(s: Array[Any], prev: Option[Row]): Row =
+    toRow(projection(frameRow(s, null, prev))).asInstanceOf[Row]
 }

@@ -25,9 +25,11 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * from the sink; cur/max_groups from stateful-operator rows; tot_cpu
   * approximated by summed trigger wall times (documented — Spark does not
   * expose per-query CPU); cur/max_ram from the JVM heap (shared across
-  * queries, as reference workers share a host). Unobservable fields
-  * (tot_wait_in/out, byte sizes sampled, notif counts fed by the Alerter,
-  * the out count of a sink that reports none) are zero, never fabricated.
+  * queries, as reference workers share a host); first/last_output from
+  * the triggers whose sink reported output rows (NULL until one has).
+  * Unobservable fields (tot_wait_in/out, byte sizes sampled, notif counts
+  * fed by the Alerter, the out count of a sink that reports none) are
+  * zero, never fabricated.
   *
   * A query that reads this stream reports no stats rows of its own: each
   * of its triggers would otherwise add the row its next trigger reads, and
@@ -74,6 +76,8 @@ final class Instrumentation(spark: SparkSession) extends StreamingQueryListener 
     var in = 0L; var out = 0L; var cpu = 0.0
     var firstInput: Option[Double] = None
     var lastInput: Option[Double] = None
+    var firstOutput: Option[Double] = None
+    var lastOutput: Option[Double] = None
     var maxGroups = 0L
     var maxRam = 0L
   }
@@ -151,7 +155,8 @@ final class Instrumentation(spark: SparkSession) extends StreamingQueryListener 
     t.synchronized {
       t.in += p.numInputRows
       // a sink that reports no count (foreachBatch) reports -1
-      t.out += Option(p.sink).map(_.numOutputRows).filter(_ >= 0).getOrElse(0L)
+      val out = Option(p.sink).map(_.numOutputRows).filter(_ >= 0).getOrElse(0L)
+      t.out += out
       // triggerExecution spans addBatch/getBatch/latestOffset/
       // queryPlanning/walCommit: summing every entry counts each phase
       // twice, so the phases are summed only when it is absent
@@ -161,6 +166,10 @@ final class Instrumentation(spark: SparkSession) extends StreamingQueryListener 
       if (p.numInputRows > 0) {
         if (t.firstInput.isEmpty) t.firstInput = Some(now)
         t.lastInput = Some(now)
+      }
+      if (out > 0) {
+        if (t.firstOutput.isEmpty) t.firstOutput = Some(now)
+        t.lastOutput = Some(now)
       }
       val groups = p.stateOperators.map(_.numRowsTotal).sum
       t.maxGroups = math.max(t.maxGroups, groups)
@@ -180,8 +189,8 @@ final class Instrumentation(spark: SparkSession) extends StreamingQueryListener 
         max_etime = et("max"),
         first_input = t.firstInput,
         last_input = t.lastInput,
-        first_output = t.firstInput, // emission follows the batch it read
-        last_output = t.lastInput,
+        first_output = t.firstOutput,
+        last_output = t.lastOutput,
         tot_in_tuples = t.in,
         tot_sel_tuples = t.in,
         tot_out_filtered = 0L,

@@ -1497,8 +1497,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("out-field indirection to previous.* in a commit condition is threaded too") {
     // The ADVICE-flagged shape: the condition references out.thresh whose
-    // DEFINITION embeds previous.total — buildCond inlines the field node,
-    // so the condition tree contains CPrev reached only indirectly. It
+    // DEFINITION embeds previous.total — the condition inlines the field's
+    // rewritten expression, so it reads previous.total only indirectly. It
     // must see the committed row, not eternal NULL (which would freeze
     // thresh at 10 and wrongly commit the second window at 12).
     implicit val sqlCtx = spark.sqlContext
@@ -1530,26 +1530,37 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("mixed-type CASE branches in an expr-commit field are a typed error") {
-    // a CASE mixing string and numeric branches cannot be given one field
-    // type — must fail at compile with a typed error, not at the row
-    // encoder mid-stream. (A fully-stateless CASE compiles through
-    // Catalyst which coerces; only an interpreter-resident CASE — one
-    // referencing previous.*/aggregates — carries the hazard.)
+    // Catalyst's analysis accepts `IF … THEN "first" ELSE 0` and types it
+    // BIGINT (ANSI string promotion), in batch as in the stream; the
+    // "first" branch is a constant that cannot take that type, and the
+    // stream reaches it on every group's first commit. The stream compile
+    // fails with a typed error naming the cast, never the running query.
+    // (Batch plans previous.* as a per-row lag, so these rows never reach
+    // the branch there.)
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val c = new RaqlCompiler(spark, "/tmp")
-    c.registerTable("tables/ev", mem.toDS().toDF())
-    RaqlParser.parseProgram("""DEFINE q AS
+    val raql = """DEFINE q AS
         FROM tables/ev
         SELECT user, SUM 1 AS n,
                (IF previous.n IS NULL THEN "first" ELSE 0) AS label
         GROUP BY user
-        COMMIT AFTER out.n >= 2;""") match {
-      case Right(p) => c.register("mx", p)
-      case Left(e) => fail(s"parse: $e")
+        COMMIT AFTER out.n >= 2;"""
+    def compiler(name: String, df: org.apache.spark.sql.DataFrame) = {
+      val c = new RaqlCompiler(spark, "/tmp")
+      c.registerTable("tables/ev", df)
+      RaqlParser.parseProgram(raql) match {
+        case Right(p) => c.register(name, p)
+        case Left(e) => fail(s"parse: $e")
+      }
+      c
     }
-    val ex = intercept[UnsupportedOperationException] { c.compile("mx/q") }
-    assert(ex.getMessage.contains("incompatible branch types"), ex.getMessage)
+    val ex = intercept[UnsupportedOperationException] {
+      compiler("mx", MemoryStream[Ev].toDS().toDF()).compile("mx/q")
+    }
+    assert(ex.getMessage.contains("CAST_INVALID_INPUT"), ex.getMessage)
+    val batch = compiler("mxb", Seq(Ev("a", 1, 1.0), Ev("a", 2, 1.0)).toDF()
+      .coalesce(1)).compile("mxb/q")
+    assert(batch.schema("label").dataType == org.apache.spark.sql.types.LongType,
+      batch.schema)
   }
 
   test("stateless scalar functions in commit conditions project as input columns") {
@@ -1708,6 +1719,141 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getDouble(0), Option(r.get(1)))).toSet
     q.stop()
     assert(rows == Set((11.0, None), (12.0, Some(22.0))), rows)
+  }
+
+  /** `raql` (program `q` over `tables/ev` = (user, x BIGINT NULL)) on a
+    * stream fed `rows` in two micro-batches, and on the same rows as a
+    * batch: the stream's committed rows, whether its query is still up,
+    * and the batch's rows (None when batch does not compile the text). */
+  private def streamAndBatch(prog: String, raql: String,
+      rows: Seq[(String, Option[Long])])
+      : (Set[Seq[Any]], Boolean, Option[Set[Seq[Any]]]) = {
+    implicit val sqlCtx = spark.sqlContext
+    def compiler(name: String, df: org.apache.spark.sql.DataFrame) = {
+      val c = new RaqlCompiler(spark, "/tmp")
+      c.registerTable("tables/ev", df)
+      RaqlParser.parseProgram(raql) match {
+        case Right(p) => c.register(name, p)
+        case Left(e) => fail(s"parse: $e")
+      }
+      c.compile(s"$name/q")
+    }
+    val mem = MemoryStream[(String, Option[Long])]
+    val sdf = compiler(prog, mem.toDS().toDF("user", "x"))
+    assert(sdf.queryExecution.analyzed.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.FlatMapGroupsWithState => f
+    }.size == 1, "expected the expression-commit harness")
+    val q = sdf.writeStream.format("memory").queryName(prog)
+      .outputMode("append").start()
+    val up = try {
+      Seq(rows.take(rows.length / 2), rows.drop(rows.length / 2)).foreach { b =>
+        mem.addData(b)
+        scala.util.Try(q.processAllAvailable())
+      }
+      q.isActive && q.exception.isEmpty
+    } finally q.stop()
+    val streamed = spark.table(prog).collect().map(_.toSeq).toSet
+    val batch = scala.util.Try(compiler(s"${prog}_b",
+      rows.toDF("user", "x").coalesce(1)).collect().map(_.toSeq).toSet).toOption
+    (streamed, up, batch)
+  }
+
+  test("an expr-commit CASE whose condition is NULL is NULL, as in batch") {
+    // MAX x is NULL for a; RaQL's CASE is NULL on a NULL condition (batch
+    // compileExpr), it does not fall through to ELSE
+    val (streamed, up, batch) = streamAndBatch("case_null_agg", """DEFINE q AS
+        FROM tables/ev
+        SELECT user, SUM 1 AS n, (IF MAX x > 5 THEN 1 ELSE 0) AS big
+        GROUP BY user
+        COMMIT AFTER SUM 1 >= 2;""",
+      Seq(("a", None), ("b", Some(7L)), ("a", None), ("b", Some(1L))))
+    assert(up)
+    assert(streamed == Set(Seq("a", 2L, null), Seq("b", 2L, 1L)), streamed)
+    assert(batch.contains(streamed), s"stream $streamed, batch $batch")
+    // previous.total is NULL on a group's first commit: so is the CASE
+    // (batch reads previous.* as a per-row lag, not the group's last
+    // commit, so its rows differ by design: the value is compileExpr's, a
+    // NULL condition gives a NULL CASE)
+    val (prevRows, prevUp, _) = streamAndBatch("case_null_prev", """DEFINE q AS
+        FROM tables/ev
+        SELECT user, SUM x AS total, (IF previous.total > 5 THEN 1 ELSE 0) AS after_big
+        GROUP BY user
+        COMMIT AFTER SUM 1 >= 2;""",
+      Seq(("a", Some(3L)), ("a", Some(4L)), ("a", Some(1L)), ("a", Some(1L))))
+    assert(prevUp)
+    assert(prevRows == Set(Seq("a", 7L, null), Seq("a", 2L, 1L)), prevRows)
+  }
+
+  test("an expr-commit / by zero is NULL, as in batch") {
+    val (streamed, up, batch) = streamAndBatch("div_zero", """DEFINE q AS
+        FROM tables/ev
+        SELECT user, SUM x AS total, SUM x / 0 AS q
+        GROUP BY user
+        COMMIT AFTER SUM 1 >= 2;""",
+      Seq(("a", Some(3L)), ("b", Some(0L)), ("a", Some(4L)), ("b", Some(0L))))
+    assert(up)
+    assert(streamed == Set(Seq("a", 7L, null), Seq("b", 0L, null)), streamed)
+    assert(batch.contains(streamed), s"stream $streamed, batch $batch")
+  }
+
+  test("expr-commit integral // and % by zero are NULL, as in batch, and the query stays up") {
+    val (streamed, up, batch) = streamAndBatch("idiv_zero", """DEFINE q AS
+        FROM tables/ev
+        SELECT user, SUM x // 0 AS d, SUM x % 0 AS m
+        GROUP BY user
+        COMMIT AFTER SUM 1 >= 2;""",
+      Seq(("a", Some(3L)), ("a", Some(4L)), ("a", Some(5L)), ("a", Some(6L))))
+    assert(up, "the stream died on an integral division by zero")
+    assert(streamed == Set(Seq("a", null, null)), streamed)
+    assert(batch.contains(streamed), s"stream $streamed, batch $batch")
+  }
+
+  test("an expr-commit negative % is Spark's remainder, as in batch") {
+    val (streamed, up, batch) = streamAndBatch("neg_mod", """DEFINE q AS
+        FROM tables/ev
+        SELECT user, SUM x AS total, SUM x % 3 AS m
+        GROUP BY user
+        COMMIT AFTER SUM 1 >= 2;""",
+      Seq(("a", Some(-3L)), ("b", Some(3L)), ("a", Some(-4L)), ("b", Some(4L))))
+    assert(up)
+    assert(streamed == Set(Seq("a", -7L, -1L), Seq("b", 7L, 1L)), streamed)
+    assert(batch.contains(streamed), s"stream $streamed, batch $batch")
+  }
+
+  test("an expr-commit stream compiles no code per micro-batch after warm-up") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val sdf = compileOverEv(mem, "hx_codegen", """DEFINE q AS
+        FROM tables/ev
+        SELECT user, SUM v AS total, (IF previous.total > 5 THEN 1 ELSE 0) AS grew
+        GROUP BY user
+        COMMIT AFTER out.total >= 10 OR in.t % 7 = 0;""")
+    // the harness's input layout: key, the slots (user, SUM v, the three
+    // literals of `grew`), the condition's in-field subtree
+    val plan = sdf.queryExecution.analyzed
+    info(plan.toString)
+    val harnessIn = plan.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.FlatMapGroupsWithState =>
+        f.child.collectFirst {
+          case p: org.apache.spark.sql.catalyst.plans.logical.Project => p.output.map(_.name)
+        }
+    }
+    assert(harnessIn == Seq(Some(Seq("_gkey", "_v0", "_v1", "_v2", "_v3", "_v4", "_in0"))),
+      plan)
+    val q = sdf.writeStream.format("memory").queryName("hx_codegen")
+      .outputMode("append").start()
+    val perBatch = try (0 until 6).map { m =>
+      val (c0, b0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, lastBatchId(q))
+      mem.addData(Ev("a", 10L * m + 1, 6.0), Ev("b", 10L * m + 2, 4.0),
+        Ev("a", 10L * m + 3, 6.0))
+      q.processAllAvailable()
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0, lastBatchId(q) - b0)
+    } finally q.stop()
+    assert(spark.table("hx_codegen").filter(col("user") === "a").count() == 6)
+    perBatch.drop(2).foreach { case (compiles, ran) =>
+      assert(ran == 1 && compiles == 0, perBatch)
+    }
   }
 
   test("global_last_out on a stream: ungrouped works, grouped is typed error") {
@@ -2111,6 +2257,41 @@ class StreamingSpec extends AnyFunSuite {
     assert(out("out_notify").maxOption.contains(5L), out("out_notify"))
     assert(out("out_foreach_batch").size >= 2 && out("out_foreach_batch").forall(_ == 0L),
       out("out_foreach_batch"))
+  }
+
+  test("instrumentation reads NULL first_output until a windowed query's first emitting trigger") {
+    implicit val sqlCtx = spark.sqlContext
+    val stats = graft.streaming.Instrumentation(spark).df
+    val mem = MemoryStream[Ev]
+    val q = mem.toDS().withColumn("ts", col("t").cast("timestamp"))
+      .withWatermark("ts", "0 seconds")
+      .groupBy(window(col("ts"), "10 seconds"), col("user")).count()
+      .writeStream.format("memory").queryName("out_first_window")
+      .outputMode("append").start()
+    try {
+      // [0, 10) stays open through the first two triggers; the third
+      // moves the watermark past it and the next trigger emits it
+      Seq(1L, 2L, 15L).foreach { t => mem.addData(Ev("a", t, 1.0)); q.processAllAvailable() }
+    } finally q.stop()
+    val reader = stats.filter($"worker" === "out_first_window")
+      .writeStream.format("memory").queryName("out_first_stats")
+      .outputMode("append").start()
+    def rows = spark.table("out_first_stats")
+      .select("stats_time", "tot_in_tuples", "tot_out_tuples", "first_output", "last_output")
+      .as[(Double, Long, Long, Option[Double], Option[Double])].collect().toSeq
+      .sortBy(r => (r._1, r._2, r._3))
+    try {
+      val deadline = System.currentTimeMillis() + 20000
+      while (!rows.exists(_._3 > 0) && System.currentTimeMillis() < deadline) {
+        Thread.sleep(200)
+        reader.processAllAvailable()
+      }
+    } finally reader.stop()
+    val (silent, emitted) = rows.span(_._3 == 0)
+    assert(silent.size >= 3 && silent.forall(r => r._4.isEmpty && r._5.isEmpty), rows)
+    assert(emitted.nonEmpty, rows)
+    val first = emitted.head
+    assert(first._4.contains(first._1) && first._5.contains(first._1), rows)
   }
 
   test("streaming PREPROCESS WITH: a gzip landing mid-query appears next trigger") {
